@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.xml.XSDToSchema
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import graft.Tables
@@ -150,7 +151,8 @@ object Xml {
     steps
   }
 
-  /** Files above this size route through the intra-file split reader —
+  /** Files above this size route through the intra-file split reader,
+    * whose ranges `splitTargetBytes` sizes by Spark's file-partition rule —
     * one 100 GB feed must not become a one-task straggler. */
   private val SplitThresholdBytes = 32L << 20
 
@@ -589,10 +591,9 @@ object Xml {
     * any chunk size (the 1 GB probe caught exactly this: ~50% of chunks
     * shipped 128 MiB strings and the driver collect blew past
     * maxResultSize). A speculation exceeding the bound is marked
-    * `overflow`; the stitch throws ONLY if the true boundary context
-    * selects it — i.e. a real tag longer than this, which the split
-    * reader documents as unsupported (the sequential planner has no such
-    * bound). */
+    * `overflow`; ONLY if the true boundary context selects it — i.e. a
+    * real tag longer than this — does `planSplitsParallel` fall back to
+    * the sequential planner for that file, which has no such bound. */
   private val MaxSpecTag = 1 << 16
 
   /** Pass A: speculative structural scan of one chunk (runs on executors).
@@ -803,10 +804,11 @@ object Xml {
 
   /** Driver-side stitch: fold per-chunk summaries into the exact boundary
     * contexts. Returns one pass-B task per chunk whose bytes are reachable
-    * (a pending token can swallow a whole chunk — a giant comment/CDATA).
+    * (a pending token can swallow a whole chunk — a giant comment/CDATA),
+    * or None when a tag longer than `MaxSpecTag` straddles a boundary.
     */
   private def stitch(file: String, path: Seq[PathStep],
-      chunks: Seq[(Long, Long)], scans: Seq[ChunkScan]): Seq[PassB] = {
+      chunks: Seq[(Long, Long)], scans: Seq[ChunkScan]): Option[Seq[PassB]] = {
     var kind = "content"; var pend = ""; var bodySeen = 0
     val stack = scala.collection.mutable.ListBuffer.empty[String]
     val out = scala.collection.mutable.ListBuffer.empty[PassB]
@@ -829,13 +831,11 @@ object Xml {
       if (j < 0) { kind = k; pend = ""; bodySeen = t.length - 1 }
       j
     }
-    for (((cs, ce), sc) <- chunks.zip(scans)) {
+    var overflow = false
+    for (((cs, ce), sc) <- chunks.zip(scans) if !overflow) {
       val resume: Long = kind match {
         case "content" => cs
-        case "overflow" => throw new IllegalStateException(
-          s"$file: a tag straddling a planning-chunk boundary exceeds the " +
-            s"$MaxSpecTag-byte speculative-capture bound of the chunked XML " +
-            "planner (see MaxSpecTag) — raise targetSplitBytes")
+        case "overflow" => overflow = true; -1L
         case k @ ("comment" | "cdata" | "pi" | "bang") => findPending(sc, k, -bodySeen)
         case k @ ("tag" | "tag_sq" | "tag_dq" | "endtag") => finishTag(sc, k)
         case "partial" =>
@@ -864,7 +864,7 @@ object Xml {
         kind = exit.kind; pend = exit.data; bodySeen = exit.bodySeen
       }
     }
-    out.toList
+    if (overflow) None else Some(out.toList)
   }
 
   /** Pass B: first record start in [resume, stopAt) with its ancestor-
@@ -893,7 +893,8 @@ object Xml {
 
   /** Parallel phase 1 for ONE big file (see section comment above).
     * Record output is identical to `planSplits`; boundaries land on true
-    * record starts at ~chunk spacing.
+    * record starts at ~chunk spacing. A tag longer than `MaxSpecTag`
+    * across a chunk boundary sends the file to `planSplits` instead.
     */
   private[graft] def planSplitsParallel(s: SparkSession, file: String,
       path: Seq[PathStep], targetSplitBytes: Long): Seq[XmlSplitRange] = {
@@ -903,16 +904,19 @@ object Xml {
     val scans = s.sparkContext.parallelize(chunks, chunks.size)
       .map { case (a, b) => scanChunk(file, a, b) }
       .collect().toSeq
-    val passB = stitch(file, path, chunks, scans)
-    val starts = s.sparkContext
-      .parallelize(passB, math.max(passB.size, 1))
-      .flatMap(p => firstRecordStart(file, p, path))
-      .collect().sortBy(_._1).toSeq
     lastPlanChunks.set(chunks.size)
-    if (starts.isEmpty) Seq.empty
-    else starts.zipAll(starts.drop(1),
-        (0L, Map.empty[String, String]), (Long.MaxValue, Map.empty[String, String]))
-      .map { case ((a, ns), (b, _)) => XmlSplitRange(file, a, b, ns) }
+    stitch(file, path, chunks, scans) match {
+      case None => planSplits(file, path, targetSplitBytes)
+      case Some(passB) =>
+        val starts = s.sparkContext
+          .parallelize(passB, math.max(passB.size, 1))
+          .flatMap(p => firstRecordStart(file, p, path))
+          .collect().sortBy(_._1).toSeq
+        if (starts.isEmpty) Seq.empty
+        else starts.zipAll(starts.drop(1),
+            (0L, Map.empty[String, String]), (Long.MaxValue, Map.empty[String, String]))
+          .map { case ((a, ns), (b, _)) => XmlSplitRange(file, a, b, ns) }
+    }
   }
 
   /** Probe hook (XmlPlanProbe): plan ONE file both ways, returning
@@ -932,32 +936,58 @@ object Xml {
     ((t1 - t0) / 1000000, (t2 - t1) / 1000000, seq.size, par.size)
   }
 
+  /** Split target for a listing of files of `sizes` bytes: Spark's own
+    * `FilePartition.maxSplitBytes` rule, so the split reader follows the
+    * sizing confs of every other file source and has no knob of its own.
+    * Each file is charged `spark.sql.files.openCostInBytes`; the total is
+    * spread over `spark.sql.files.minPartitionNum`, else
+    * `spark.sql.leafNodeDefaultParallelism`, else `defaultParallelism`;
+    * the result is floored at the open cost and capped at
+    * `spark.sql.files.maxPartitionBytes`. One 32.25 MiB file on 4 cores
+    * at the default confs gets 9.06 MiB.
+    */
+  private[graft] def splitTargetBytes(conf: SQLConf, defaultParallelism: Int,
+      sizes: Seq[Long]): Long = {
+    val openCost = conf.filesOpenCostInBytes
+    val slots = conf.filesMinPartitionNum.getOrElse(
+      conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM).getOrElse(defaultParallelism))
+    math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, sizes.map(_ + openCost).sum / slots))
+  }
+
   /** Path-aware node-path read with INTRA-FILE parallelism: same semantics
     * and output as `readXmlNodePath`, but one huge file becomes
-    * ceil(bytes/targetSplitBytes) tasks instead of one straggler. Phase 1
-    * runs one planning task per file (offsets only — no record
-    * materialization, no shuffle); the collected ranges are
-    * metadata-sized. Phase 2 is embarrassingly parallel over ranges.
+    * ceil(bytes/target) tasks instead of one straggler. The target is
+    * `targetSplitBytes` when positive; by default it is derived from the
+    * listing by `splitTargetBytes` (Spark's file-partition rule), so a
+    * file's ranges spread over the session's cores. Phase 1 plans offsets
+    * only — no record materialization, no shuffle; the collected ranges
+    * are metadata-sized. Phase 2 is embarrassingly parallel over ranges.
     */
   def readXmlNodePathSplit(s: SparkSession, dir: String, nodePath: String,
-      targetSplitBytes: Long = 64L << 20): DataFrame = {
+      targetSplitBytes: Long = 0L): DataFrame = {
     import s.implicits._
     val path = parseNodePath(nodePath)
     val listing = Files.list(Paths.get(dir))
     val files =
       try listing.toArray.map(_.toString).filter(_.endsWith(".xml")).sorted
+        .map(f => f -> Files.size(Paths.get(f)))
       finally listing.close()
+    val target =
+      if (targetSplitBytes > 0) targetSplitBytes
+      else splitTargetBytes(s.sessionState.conf, s.sparkContext.defaultParallelism,
+        files.map(_._2).toSeq)
     // Small files: one sequential planning task per file (cheap constant).
     // Big files (> 2× target): the chunked parallel planner — a 100 GB
     // single file's planning pass is no longer one thread.
-    val (big, small) = files.partition(f =>
-      Files.size(Paths.get(f)) > 2L * targetSplitBytes)
-    val smallRanges = s.sparkContext
-      .parallelize(small.toSeq, math.max(small.length, 1))
-      .flatMap(f => planSplits(f, path, targetSplitBytes))
-      .collect().toSeq
+    val (big, small) = files.partition(_._2 > 2L * target)
+    val smallRanges =
+      if (small.isEmpty) Seq.empty
+      else s.sparkContext.parallelize(small.toSeq.map(_._1), small.length)
+        .flatMap(f => planSplits(f, path, target))
+        .collect().toSeq
     val ranges = (smallRanges ++
-      big.toSeq.flatMap(f => planSplitsParallel(s, f, path, targetSplitBytes)))
+      big.toSeq.flatMap(f => planSplitsParallel(s, f._1, path, target)))
       .sortBy(r => (r.file, r.start))
     s.sparkContext.parallelize(ranges, math.max(ranges.length, 1))
       .flatMap { r =>

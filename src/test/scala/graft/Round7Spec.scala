@@ -86,14 +86,17 @@ class Round7Spec extends AnyFunSuite {
     assert(spark.read.format("graft-acid-sql").load(dir).count() == 160000L - n)
   }
 
-  test("parallel XML split planning: chunked plan == sequential scan, >1 task") {
-    val dir = Scratch.fresh("r7_xml_parplan", sf)
+  /** Hazard-dense catalog for the XML split planners: a giant comment and
+    * a giant CDATA spanning chunks, both full of fake structure; quoted
+    * `>` and `/>` in attributes; `]]]>`; decoy paths; nested records; and
+    * one record far bigger than a planning chunk. About 3.7 KB a shelf. */
+  private def hazardCatalog(shelves: Int): String = {
     val sb = new StringBuilder
     sb ++= "<catalog>\n"
     // giant comment spanning multiple chunks, stuffed with fake tags
     sb ++= "<!-- " + ("<book key=\"fake\"> </catalog> <shelf genre=\"fiction\"> " * 2000) + " -->\n"
     var k = 0
-    for (shelf <- 0 until 40) {
+    for (shelf <- 0 until shelves) {
       val genre = if (shelf % 2 == 0) "fiction" else "tech"
       sb ++= s"""<shelf genre="$genre" note="a>b" alt='x/>y'>\n"""
       for (_ <- 0 until 25) {
@@ -118,8 +121,15 @@ class Round7Spec extends AnyFunSuite {
       }
     }
     sb ++= "</catalog>\n"
-    Files.write(Paths.get(dir, "big.xml"), sb.toString.getBytes("UTF-8"))
-    val path = "/catalog/shelf[@genre='fiction']/book"
+    sb.toString
+  }
+
+  private val hazardPath = "/catalog/shelf[@genre='fiction']/book"
+
+  test("parallel XML split planning: chunked plan == sequential scan, >1 task") {
+    val dir = Scratch.fresh("r7_xml_parplan", sf)
+    Files.write(Paths.get(dir, "big.xml"), hazardCatalog(40).getBytes("UTF-8"))
+    val path = hazardPath
     // ground truth: the SEQUENTIAL planner (file < 2x a huge target), same
     // raw-byte capture scanner — the verdict's "byte-identical to the
     // current planner" criterion. The event-based readXmlNodePath
@@ -143,6 +153,24 @@ class Round7Spec extends AnyFunSuite {
       assert(par == seq, s"parallel plan diverged at target=$target: " +
         s"${par.size} vs ${seq.size} records; onlyPar=$onlyPar onlySeq=$onlySeq")
     }
+  }
+
+  test("XML split read at the default target: chunked plan, same ordered records") {
+    val dir = Scratch.fresh("r7_xml_default_target", sf)
+    // ~10 MiB: over twice the 4 MiB target Spark's file-partition rule
+    // gives it on local[4] (max(4 MiB open cost, (size + 4 MiB) / 4))
+    Files.write(Paths.get(dir, "big.xml"), hazardCatalog(2800).getBytes("UTF-8"))
+    def snippets(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getString(0)).toSeq
+    // an explicit target is used as given: one range, sequential planner
+    graft.sources.Xml.lastPlanChunks.set(0)
+    val whole = graft.sources.Xml.readXmlNodePathSplit(spark, dir, hazardPath, 1L << 30)
+    assert(whole.rdd.getNumPartitions == 1 && graft.sources.Xml.lastPlanChunks.get() == 0)
+    val seq = snippets(whole)
+    val default = graft.sources.Xml.readXmlNodePathSplit(spark, dir, hazardPath)
+    assert(graft.sources.Xml.lastPlanChunks.get() > 1,
+      "the default target should send the file through the chunked planner")
+    assert(default.rdd.getNumPartitions > 1)
+    assert(snippets(default) == seq)
   }
 
   test("optimizeRange rewrites only the overlapping files, carries the rest by sha") {

@@ -3,7 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -146,5 +148,48 @@ class XmlSpec extends AnyFunSuite {
       .select(col("p._key"), col("p.name")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(got == Set((1L, "top1"), (2L, "top2")))
+  }
+
+  test("split target follows Spark's file-partition sizing rule") {
+    def target(cores: Int, sizes: Seq[Long], confs: (String, String)*): Long = {
+      val conf = new SQLConf
+      confs.foreach { case (k, v) => conf.setConfString(k, v) }
+      Xml.splitTargetBytes(conf, cores, sizes)
+    }
+    val mib = 1L << 20
+    val file = 32 * mib + mib / 4 // 32.25 MiB, just over the routing threshold
+    // default confs: 128 MiB cap, 4 MiB open cost charged per file
+    assert(target(4, Seq(file)) == (file + 4 * mib) / 4)
+    assert(target(4, Seq(file)) == 9502720L) // 9.06 MiB: > 2x smaller, 4 chunks
+    // one core: the target covers the whole file, so it is not "big" (the
+    // sequential planner) and its records fit in one range
+    assert(target(1, Seq(file)) >= file)
+    // maxPartitionBytes caps the target
+    assert(target(4, Seq(file), "spark.sql.files.maxPartitionBytes" -> "2m") == 2 * mib)
+    // minPartitionNum takes the place of the default parallelism
+    assert(target(4, Seq(file), "spark.sql.files.minPartitionNum" -> "2") ==
+      (file + 4 * mib) / 2)
+    // the open cost floors the target of a small listing
+    assert(target(4, Seq(1000L, 2000L)) == 4 * mib)
+    // the same number Spark's own file sources derive on this session
+    val conf = spark.sessionState.conf
+    assert(Xml.splitTargetBytes(conf, spark.sparkContext.defaultParallelism, Seq(file)) ==
+      FilePartition.maxSplitBytes(spark, file + conf.filesOpenCostInBytes))
+  }
+
+  test("chunked planner falls back to the sequential one on a >64 KiB tag at a chunk boundary") {
+    // 200 KB start tag: at a 128 KiB chunk size it straddles a boundary
+    // with more than the chunked planner's 64 KiB capture bound on one side
+    val recs = (1 to 6000).map(i => s"""<book key="$i"><name>n$i</name></book>""")
+    val big = s"""<book key="big" pad="${"y" * 200000}"><name>wide</name></book>"""
+    val (head, tail) = recs.splitAt(3000)
+    val dir = Paths.get(tmpFile("wide_tag.xml",
+      (head ++ Seq(big) ++ tail).mkString("<catalog>\n", "\n", "\n</catalog>")))
+      .getParent.toString
+    def read(target: Long) = Xml.readXmlNodePathSplit(spark, dir, "/catalog/book", target)
+      .collect().map(_.getString(0)).toSeq
+    val seq = read(1L << 30)
+    assert(seq.size == 6001 && seq(3000).contains("wide"))
+    assert(read(128L << 10) == seq)
   }
 }
