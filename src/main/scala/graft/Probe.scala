@@ -410,1626 +410,3 @@ object XmlPlanProbe {
     spark.stop()
   }
 }
-
-/** ×10 scale probe for the round-7 late additions (SURVEY §6.7): does
-  * CONVERT's stats pass parallelize, does a range-hinted positional
-  * DELETE stay batch-bounded when the table grows 10×, and what does a
-  * `.history` row cost per retained version?
-  *
-  *   sbt "runMain graft.Round7Probe [sfDir]"
-  */
-/** Round-8 scale probe: the new surfaces at ×1 vs ×10 rows on local[32].
-  *  - composite-key MERGE: fixed absolute batch clustered in the low
-  *    leading-key range at both scales — merge cost must track the BATCH
-  *    (touched files), not the table;
-  *  - catalog PARTITIONED BY: clustered insert then a partition-equality
-  *    probe — scanned/total must stay ~1/8 as the table grows;
-  *  - XSD validation: per-record SAX pass — throughput must scale
-  *    linearly with rows (no super-linear term).
-  */
-object Round8Probe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.{Acid, AcidSql, Xml}
-
-    def t[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-    val base = Tables.orders(spark, sfDir).select(
-      col("o_orderkey").as("k"),
-      round(col("o_totalprice") * 100).cast("long").as("pc"))
-    val kShift = base.agg(max(col("k"))).head.getLong(0) + 1
-
-    def composite(tag: String, mult: Int, nFiles: Int): Unit = {
-      val rows = base.crossJoin(spark.range(mult).toDF("cp"))
-        .select((expr("k div 1000") + col("cp") * (kShift / 1000 + 1)).as("k1"),
-          expr("k % 1000").as("k2"), col("pc"))
-      val dir = Scratch.fresh(s"r8_probe_comp_$tag", sfDir)
-      val (_, createS) = t(Acid.create(spark, dir, rows, Seq("k1", "k2"), nFiles, None))
-      // fixed absolute batch: the ×1 table's lowest k1 groups, k2%10==3 —
-      // identical matched pairs at both scales
-      val batch = rows.filter(col("k1") <= lit(kShift / 1000 / 8) && col("k2") % 10 === 3)
-        .withColumn("pc", col("pc") + 1)
-      val (r, mergeS) = t(Acid.merge(spark, dir, batch, "p"))
-      println(f"[r8-probe] composite $tag%-4s create=$createS%.2fs " +
-        f"merge=$mergeS%.2fs (${r.filesRewritten}/${r.filesTotal} files rewritten)")
-    }
-    composite("x1", 1, 8)
-    composite("x10", 10, 80)
-
-    def partitioned(tag: String, mult: Int): Unit = {
-      val root = Scratch.fresh(s"r8_probe_part_$tag", sfDir)
-      val cat = s"graft_r8probe_$tag"
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      base.crossJoin(spark.range(mult).toDF("cp"))
-        .select((col("k") + col("cp") * kShift).as("k"),
-          expr("k % 8").as("p"), col("pc"))
-        .createOrReplaceTempView(s"r8_probe_src_$tag")
-      spark.sql(s"DROP TABLE IF EXISTS $cat.pt")
-      spark.sql(s"CREATE TABLE $cat.pt (k BIGINT, p BIGINT, pc BIGINT) PARTITIONED BY (p)")
-      val (_, insS) = t(spark.sql(
-        s"INSERT INTO $cat.pt SELECT k, p, pc FROM r8_probe_src_$tag").collect())
-      val (_, selS) = t(spark.sql(
-        s"SELECT sum(pc) FROM $cat.pt WHERE p = 3").head)
-      val (scanned, total) = AcidSql.lastScanFor(s"$root/pt")
-      println(f"[r8-probe] partitioned $tag%-4s insert=$insS%.2fs " +
-        f"probe=$selS%.2fs ($scanned/$total files scanned)")
-      spark.sql(s"DROP TABLE IF EXISTS $cat.pt")
-    }
-    partitioned("x1", 1)
-    partitioned("x10", 10)
-
-    def xsd(tag: String, mult: Int): Unit = {
-      val xsdText =
-        """<?xml version="1.0" encoding="UTF-8"?>
-          |<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
-          |  <xs:element name="r"><xs:complexType><xs:sequence>
-          |    <xs:element name="v" type="xs:long"/>
-          |  </xs:sequence><xs:attribute name="k" type="xs:long" use="required"/>
-          |  </xs:complexType></xs:element>
-          |</xs:schema>""".stripMargin
-      val recs = base.crossJoin(spark.range(mult).toDF("cp"))
-        .select(concat(lit("<r k=\""), col("k"), lit("\"><v>"),
-          when(col("k") % 1000 === 0, lit("bad")).otherwise(col("pc").cast("string")),
-          lit("</v></r>")).as("xml"))
-      val ((n, bad), s) = t {
-        val v = Xml.validateXsd(spark, recs, xsdText)
-        (v.count(), v.filter(!col("xsd_ok")).count())
-      }
-      println(f"[r8-probe] xsd-validate $tag%-4s $s%.2fs " +
-        f"($n records, $bad violations, ${n / s / 1000}%.0f krec/s)")
-    }
-    xsd("x1", 1)
-    xsd("x10", 10)
-    spark.stop()
-  }
-}
-
-object Round7Probe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.Acid
-
-    val base = Tables.orders(spark, sfDir).select(
-      col("o_orderkey").as("k"),
-      round(col("o_totalprice") * 100).cast("long").as("price_cents"))
-    val kShift = base.agg(max(col("k"))).head.getLong(0) + 1
-    val x10 = base.crossJoin(spark.range(10).toDF("cp"))
-      .withColumn("k", col("k") + col("cp") * kShift).drop("cp")
-
-    def t[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-    def run(tag: String, df: org.apache.spark.sql.DataFrame, nFiles: Int): Unit = {
-      val dir = Scratch.fresh(s"r7_probe_$tag", sfDir)
-      df.repartitionByRange(nFiles, col("k"))
-        .write.mode("overwrite").parquet(dir)
-      val (nConv, convS) = t(Acid.convert(spark, dir, "k"))
-      // fixed absolute batch: same matched rows at both scales, clustered
-      // into the low-key files — the hint prunes the rest
-      val ((nDel, touched, total), delS) = t(Acid.deleteWherePositional(
-        spark, dir, col("k") % 10 === 3 && col("k") < lit(kShift / 8),
-        Some((0L, kShift / 8)), "p"))
-      val (cnt, readS) = t(
-        spark.read.format("graft-acid-sql").load(dir).count())
-      println(f"[r7-probe] $tag%-4s convert=$convS%.2fs ($nConv files) " +
-        f"posDelete=$delS%.2fs ($nDel rows, $touched/$total files) " +
-        f"v2read=$readS%.2fs ($cnt rows)")
-    }
-    run("x1", base, 8)
-    run("x10", x10, 80)
-
-    // history cost per retained version: 50 tiny commits, one .history read
-    val hDir = Scratch.fresh("r7_probe_hist", sfDir)
-    Acid.create(spark, hDir, base.limit(1000), "k", 2)
-    (1 to 50).foreach { i =>
-      Acid.merge(spark, hDir, base.filter(col("k") % 1000 === i % 1000)
-        .withColumn("price_cents", col("price_cents") + i), s"w$i")
-    }
-    val (rows, histS) = t(graft.sources.AcidHistory.rows(hDir))
-    println(f"[r7-probe] history: ${rows.size} versions in $histS%.3fs " +
-      f"(${histS * 1000 / rows.size}%.1f ms/version, driver metadata only)")
-    spark.stop()
-  }
-}
-
-/** Round-9 scale probes (×10 where the verdict asked for one):
-  *  1. MANIFEST-LOG ×10 FILE-COUNT: 25 single-file merges against an
-  *     8-file and an 80-file table — per-commit log bytes must track the
-  *     CHANGED files (delta manifests), not the table's file count, and a
-  *     fresh reader's resolution must stay bounded by checkpoint + tail.
-  *  2. DISJOINT REBASE: a losing writer's metadata-only rebase vs the
-  *     full re-apply the old conflict path forced, at ×1 and ×10 data.
-  *  3. WIDENED READ: snapshot aggregate before vs after a type-widening
-  *     merge (mergeSchema fast path vs declared-schema fallback read).
-  */
-object Round9Probe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.Acid
-    import java.nio.file.{Files, Paths}
-
-    def t[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-    val base = Tables.orders(spark, sfDir).select(
-      col("o_orderkey").as("k"),
-      round(col("o_totalprice") * 100).cast("long").as("price_cents"))
-    val kShift = base.agg(max(col("k"))).head.getLong(0) + 1
-
-    // ---- 1. manifest log at x10 file count --------------------------------
-    def logProbe(tag: String, mult: Int, nFiles: Int): Unit = {
-      val rows =
-        if (mult == 1) base
-        else base.crossJoin(spark.range(mult).toDF("cp"))
-          .withColumn("k", col("k") + col("cp") * kShift).drop("cp")
-      val dir = Scratch.fresh(s"r9_probe_log_$tag", sfDir)
-      Acid.create(spark, dir, rows, "k", nFiles)
-      import spark.implicits._
-      val (_, commitsS) = t((1 to 25).foreach { i =>
-        Acid.merge(spark, dir,
-          Seq((3L + i, 100L + i)).toDF("k", "price_cents"), s"w$i")
-      })
-      val logSizes = (1 to 25).map(v =>
-        Files.size(Paths.get(dir, "_log", f"v$v%05d.txt")))
-      val fullSize = Files.size(Paths.get(dir, "_log", "v00000.txt"))
-      Acid.clearManifestCache()
-      val (_, freshS) = t(Acid.readManifest(dir, 25).files.size)
-      val depth = Acid.logResolutionDepth(dir, 25)
-      println(f"[r9-probe] log $tag%-4s ($nFiles files): 25 merges in " +
-        f"$commitsS%.1fs, delta manifest avg ${logSizes.sum / 25}%d B " +
-        f"(full snapshot $fullSize%d B), fresh read of v25 $freshS%.3fs " +
-        f"resolving $depth log files")
-    }
-    logProbe("x1", 1, 8)
-    logProbe("x10", 10, 80)
-
-    // ---- 2. disjoint rebase vs full re-apply ------------------------------
-    def disjointProbe(tag: String, mult: Int, nFiles: Int): Unit = {
-      val rows =
-        if (mult == 1) base
-        else base.crossJoin(spark.range(mult).toDF("cp"))
-          .withColumn("k", col("k") + col("cp") * kShift).drop("cp")
-      val mk = kShift * mult - 1
-      def freshTable(): String = {
-        val dir = Scratch.fresh(s"r9_probe_dj_${tag}_${Sys.next()}", sfDir)
-        Acid.create(spark, dir, rows, "k", nFiles)
-        dir
-      }
-      val batchLow = base.filter(col("k") % 97 === 0 && col("k") < lit(kShift / 4))
-        .withColumn("price_cents", col("price_cents") + 1)
-      val batchHigh = rows.filter(col("k") % 89 === 0 && col("k") >= lit(mk - kShift / 4))
-        .select(col("k"), (col("price_cents") + 2).as("price_cents"))
-      // losing writer with LOGICAL rebase: ONE apply + metadata commit
-      val d1 = freshTable()
-      Acid.mergeAt(spark, d1, 0, batchLow, "A")
-      val (r1, rebaseS) = t(Acid.mergeAt(spark, d1, 0, batchHigh, "B",
-        disjointRebase = true))
-      // losing writer on the old RE-APPLY path: the lost apply is sunk
-      // cost, then the whole merge runs again
-      val d2 = freshTable()
-      Acid.mergeAt(spark, d2, 0, batchLow, "A")
-      val (_, lostS) = t(Acid.mergeAt(spark, d2, 0, batchHigh, "B")) // discarded
-      val (r2, reapplyS) = t(Acid.merge(spark, d2, batchHigh, "B2"))
-      println(f"[r9-probe] disjoint $tag%-4s: losing writer total " +
-        f"rebase=$rebaseS%.2fs (v${r1.toOption.get.version}) vs " +
-        f"lost+reapply=${lostS + reapplyS}%.2fs (v${r2.version}) " +
-        "-- the rebase commit is metadata-only, re-apply repeats the merge")
-    }
-    disjointProbe("x1", 1, 8)
-    disjointProbe("x10", 10, 80)
-
-    // ---- 3. widened-table read --------------------------------------------
-    val wDir = Scratch.fresh("r9_probe_widen", sfDir)
-    Acid.create(spark, wDir,
-      base.select(col("k"), col("price_cents").cast("int").as("price_cents")),
-      "k", 8)
-    val (a0, beforeS) = t(Acid.snapshot(spark, wDir)
-      .agg(sum(col("price_cents"))).head.getLong(0))
-    import spark.implicits._
-    Acid.merge(spark, wDir, Seq((3L, 5000000000L)).toDF("k", "price_cents"), "w")
-    val (a1, afterS) = t(Acid.snapshot(spark, wDir)
-      .agg(sum(col("price_cents"))).head.getLong(0))
-    println(f"[r9-probe] widen: snapshot agg before=$beforeS%.2fs " +
-      f"($a0) after=$afterS%.2fs ($a1, declared-schema fallback read)")
-    spark.stop()
-  }
-
-  private object Sys {
-    private val c = new java.util.concurrent.atomic.AtomicInteger(0)
-    def next(): Int = c.incrementAndGet()
-  }
-}
-
-/** Round-9 second-wave probes: scan-statistics broadcast A/B, partition
-  * transforms (days/bucket) at ×1 and ×10, and the rate-limited
-  * admission walk over a deep commit backlog. Run:
-  * {{{ sbt "runMain graft.Round9bProbe /root/testdata/sf0.1" }}} */
-object Round9bProbe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.{Acid, AcidSql}
-
-    def t[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-    val base = Tables.orders(spark, sfDir).select(
-      col("o_orderkey").as("k"),
-      round(col("o_totalprice") * 100).cast("long").as("price_cents"))
-    val kShift = base.agg(max(col("k"))).head.getLong(0) + 1
-    def rep(mult: Int) =
-      if (mult == 1) base
-      else base.crossJoin(spark.range(mult).toDF("cp"))
-        .withColumn("k", col("k") + col("cp") * kShift).drop("cp")
-
-    // ---- 1. reported statistics → broadcast vs forced shuffle join -------
-    locally {
-      val root = Scratch.fresh("r9b_stats", sfDir)
-      val cat = "graft_r9b_stats"
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      Acid.create(spark, s"$root/dim",
-        base.filter(col("k") <= lit(kShift / 8)), "k", 4)
-      val fact = rep(10).select(col("k").as("fk"), col("price_cents").as("fpc"))
-        .withColumn("dk", col("fk") % (kShift / 8 + 1))
-      def join() = fact.join(spark.read.table(s"$cat.dim"),
-        col("dk") === col("k")).agg(sum(col("fpc"))).head.getLong(0)
-      val (_, bhjS) = t(join()) // stats → auto-broadcast
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val (_, smjS) = t(join()) // what every join pays without stats
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      println(f"[r9b-probe] stats-broadcast: x10 fact join auto-BHJ " +
-        f"$bhjS%.2fs vs forced-shuffle $smjS%.2fs")
-    }
-
-    // ---- 2. days(ts) transform: window pruning at x1 / x10 ---------------
-    def daysProbe(tag: String, mult: Int): Unit = {
-      val root = Scratch.fresh(s"r9b_days_$tag", sfDir)
-      val cat = s"graft_r9b_days_$tag"
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val ev = Tables.events(spark, sfDir)
-        .select(col("event_id").as("k"), col("ts"),
-          round(col("value") * 100).cast("long").as("cents"))
-      // events frames live in a child session (nanos-scoped conf): view,
-      // catalog registration and INSERT all go through that session
-      val ss = ev.sparkSession
-      ss.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      ss.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val evN =
-        if (mult == 1) ev
-        else ev.crossJoin(ss.range(mult).toDF("cp"))
-          .withColumn("k", col("k") * mult + col("cp")).drop("cp")
-      evN.createOrReplaceTempView(s"r9b_days_src_$tag")
-      spark.sql(s"""CREATE TABLE $cat.ev (k BIGINT, ts TIMESTAMP, cents BIGINT)
-                   |PARTITIONED BY (days(ts))""".stripMargin)
-      val (_, insS) = t(ss.sql(
-        s"INSERT INTO $cat.ev SELECT k, ts, cents FROM r9b_days_src_$tag").count())
-      val win = "ts >= TIMESTAMP'2024-01-08 00:00:00' AND " +
-        "ts < TIMESTAMP'2024-01-15 00:00:00'"
-      val (n, qS) = t(spark.sql(
-        s"SELECT count(*) FROM $cat.ev WHERE $win").head.getLong(0))
-      val (scanned, total) = AcidSql.lastScanFor(s"$root/ev")
-      println(f"[r9b-probe] days $tag%-4s: insert $insS%.1fs, 7/30-day window " +
-        f"($n rows) in $qS%.2fs scanning $scanned/$total files")
-    }
-    daysProbe("x1", 1)
-    daysProbe("x10", 10)
-
-    // ---- 3. bucket(8,k) transform: point probe at x1 / x10 ---------------
-    def bucketProbe(tag: String, mult: Int): Unit = {
-      val root = Scratch.fresh(s"r9b_bkt_$tag", sfDir)
-      val cat = s"graft_r9b_bkt_$tag"
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      rep(mult).createOrReplaceTempView(s"r9b_bkt_src_$tag")
-      spark.sql(s"""CREATE TABLE $cat.bt (k BIGINT, price_cents BIGINT)
-                   |PARTITIONED BY (bucket(8, k))""".stripMargin)
-      val (_, insS) = t(spark.sql(
-        s"INSERT INTO $cat.bt SELECT k, price_cents FROM r9b_bkt_src_$tag").count())
-      val probe = kShift / 2
-      val (n, qS) = t(spark.sql(
-        s"SELECT count(*) FROM $cat.bt WHERE k = $probe").head.getLong(0))
-      val (scanned, total) = AcidSql.lastScanFor(s"$root/bt")
-      println(f"[r9b-probe] bucket $tag%-4s: insert $insS%.1fs, point probe " +
-        f"($n rows) in $qS%.2fs scanning $scanned/$total files")
-    }
-    bucketProbe("x1", 1)
-    bucketProbe("x10", 10)
-
-    // ---- 4. admission control over a deep backlog ------------------------
-    locally {
-      val dir = Scratch.fresh("r9b_rl", sfDir) + "/t"
-      Acid.create(spark, dir, base, "k", 8)
-      import spark.implicits._
-      (1 to 25).foreach(i => Acid.merge(spark, dir,
-        Seq((kShift + i, 1L)).toDF("k", "price_cents"), s"w$i"): Unit)
-      val stream = new graft.sources.AcidSqlMicroBatchStream(dir,
-        org.apache.spark.sql.types.StructType(Nil), Some(4))
-      val lim = stream.getDefaultReadLimit
-      var off: org.apache.spark.sql.connector.read.streaming.Offset =
-        graft.sources.AcidVersionOffset(-1L)
-      var batches = 0
-      val (_, walkS) = t {
-        var prev = -2L
-        while (prev != off.asInstanceOf[graft.sources.AcidVersionOffset].v) {
-          prev = off.asInstanceOf[graft.sources.AcidVersionOffset].v
-          val nxt = stream.latestOffset(off, lim)
-          if (nxt.asInstanceOf[graft.sources.AcidVersionOffset].v != prev) {
-            batches += 1; off = nxt
-          }
-        }
-      }
-      println(f"[r9b-probe] ratelimit: 25-commit backlog at cap 4 drains in " +
-        f"$batches batches (walk $walkS%.2fs total)")
-    }
-    spark.stop()
-  }
-}
-
-/** Round-10 probes: (1) the metadata plane at ×10 FILE COUNT — sharded
-  * manifest cold read, pointer-pruned range planning, and distributed
-  * vacuum must grow sublinearly vs the table's file count (verdict #1);
-  * (2) whether `spark.sql.cbo.enabled` changes any ACID join plan given
-  * the V2 scan's reported statistics (verdict #3 gate — implement column
-  * NDV stats only if a plan actually moves).
-  *
-  *   sbt "runMain graft.Round10Probe /root/testdata/sf0.1"
-  */
-object Round10Probe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.Acid
-
-    def t[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-
-    // ---- 1. metadata plane at x10 file count ------------------------------
-    def metaProbe(tag: String, nFiles: Int): Unit = {
-      val dir = Scratch.fresh(s"r10_probe_meta_$tag", sfDir)
-      val rows = spark.range(nFiles * 10L)
-        .select(col("id").as("k"), (col("id") * 2).as("v"))
-      val (_, createS) = t(Acid.create(spark, dir, rows, "k", nFiles))
-      // orphans: one abandoned staging dir, nFiles/10 files
-      spark.range(nFiles.toLong).select(col("id").as("k"), col("id").as("v"))
-        .repartition(math.max(1, nFiles / 10))
-        .write.parquet(s"$dir/d_abandoned")
-      Acid.clearManifestCache()
-      val (nRead, coldS) = t(Acid.readManifest(dir, 0).files.size)
-      Acid.clearManifestCache()
-      val ((ents, total, shards), planS) =
-        t(Acid.planRangeEntries(dir, 0, 42L, 58L))
-      val (dry, dryS) = t(Acid.vacuum(spark, dir, 0, dryRun = true))
-      val (vac, vacS) = t(Acid.vacuum(spark, dir, 0))
-      println(f"[r10-probe] meta $tag%-4s ($nFiles%5d files): create $createS%5.1fs, " +
-        f"cold full read $coldS%6.3fs ($nRead entries), range plan $planS%6.3fs " +
-        f"(${ents.size} entries, $shards of ${(total + 255) / 256} shards), " +
-        f"vacuum dry $dryS%5.2fs / real $vacS%5.2fs (${dry._1}/${vac._1} orphans)")
-    }
-    metaProbe("x1", 500)
-    metaProbe("x10", 5000)
-
-    // ---- 1b. multi-column partition spec at x10 rows ----------------------
-    def multiProbe(tag: String, rows: Long): Unit = {
-      val root = Scratch.fresh(s"r10_probe_multi_$tag", sfDir)
-      val cat = s"graft_r10m$tag"
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      spark.range(rows).selectExpr("id AS k",
-        s"timestamp_micros(CAST(1704067200000000 + (id DIV ${rows / 30}) * 86400000000 + id AS BIGINT)) AS ts",
-        "CAST(id % 400 AS BIGINT) AS uid", "id AS v")
-        .createOrReplaceTempView(s"r10m_src_$tag")
-      spark.sql(s"DROP TABLE IF EXISTS $cat.ev")
-      spark.sql(s"""CREATE TABLE $cat.ev (k BIGINT, ts TIMESTAMP, uid BIGINT, v BIGINT)
-                   |PARTITIONED BY (days(ts), bucket(8, uid))""".stripMargin)
-      val (_, insS) = t(
-        spark.sql(s"INSERT INTO $cat.ev SELECT k, ts, uid, v FROM r10m_src_$tag"))
-      val win = "ts >= TIMESTAMP'2024-01-08 00:00:00' AND " +
-        "ts < TIMESTAMP'2024-01-15 00:00:00'"
-      spark.sql(s"SELECT count(*) FROM $cat.ev WHERE $win").head
-      val (sDay, total) = graft.sources.AcidSql.lastScanFor(s"$root/ev")
-      spark.sql(s"SELECT count(*) FROM $cat.ev WHERE uid = 7").head
-      val (sBkt, _) = graft.sources.AcidSql.lastScanFor(s"$root/ev")
-      spark.sql(s"SELECT count(*) FROM $cat.ev WHERE $win AND uid = 7").head
-      val (sBoth, _) = graft.sources.AcidSql.lastScanFor(s"$root/ev")
-      println(f"[r10-probe] multi $tag%-4s ($rows%8d rows): insert $insS%5.1fs, " +
-        f"$total%4d files; scans week=$sDay/$total bucket=$sBkt/$total " +
-        f"both=$sBoth/$total")
-    }
-    multiProbe("x1", 100000L)
-    multiProbe("x10", 1000000L)
-
-    // ---- 2. does CBO move any ACID join plan? ------------------------------
-    locally {
-      val root = Scratch.fresh("r10_probe_cbo", sfDir)
-      val cat = "graft_r10cbo"
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      Tables.orders(spark, sfDir).select(col("o_orderkey").as("k"),
-          col("o_custkey").as("ck"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .createOrReplaceTempView("r10cbo_orders")
-      Tables.customer(spark, sfDir).select(col("c_custkey").as("ck"),
-          col("c_nationkey").as("nk")).createOrReplaceTempView("r10cbo_cust")
-      spark.sql(s"DROP TABLE IF EXISTS $cat.fact")
-      spark.sql(s"DROP TABLE IF EXISTS $cat.dim1")
-      spark.sql(s"DROP TABLE IF EXISTS $cat.dim2")
-      spark.sql(s"CREATE TABLE $cat.fact AS SELECT * FROM r10cbo_orders")
-      spark.sql(s"CREATE TABLE $cat.dim1 AS SELECT DISTINCT ck FROM r10cbo_cust")
-      spark.sql(s"CREATE TABLE $cat.dim2 AS " +
-        "SELECT DISTINCT nk AS k2 FROM r10cbo_cust WHERE nk < 3")
-      val q = s"""SELECT count(*), sum(f.cents) FROM $cat.fact f
-                 |JOIN $cat.dim1 d1 ON f.ck = d1.ck
-                 |JOIN $cat.dim2 d2 ON f.k % 25 = d2.k2""".stripMargin
-      def planOf(): String = {
-        val p = spark.sql(q).queryExecution.executedPlan.toString
-        // strip ids/paths so the comparison sees shape, not naming
-        p.replaceAll("#\\d+L?", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
-      }
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-      val off = planOf()
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      val on = planOf()
-      spark.conf.set("spark.sql.cbo.enabled", "false")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-      println(s"[r10-probe] cbo: 3-table ACID join plan " +
-        (if (off == on) "IDENTICAL with cbo+joinReorder on (V2 stats already drive broadcast; no colStats consumer) -- deprioritize column NDV stamping"
-         else "CHANGED with cbo on -- column stats are live, implement NDV stamping"))
-      if (off != on) {
-        val ol = off.linesIterator.toSeq; val nl = on.linesIterator.toSeq
-        ol.zipAll(nl, "<end>", "<end>").filter(p => p._1 != p._2).take(12)
-          .foreach { case (a, b) =>
-            println(s"[r10-probe]   off: $a")
-            println(s"[r10-probe]   on : $b")
-          }
-      }
-      spark.sql(s"DROP TABLE IF EXISTS $cat.fact")
-      spark.sql(s"DROP TABLE IF EXISTS $cat.dim1")
-      spark.sql(s"DROP TABLE IF EXISTS $cat.dim2")
-    }
-    spark.stop()
-  }
-}
-
-/** Round-11 measurement probes backing SURVEY §6:
-  * (1) row-group pruning — a selective key-range aggregate over a
-  *     key-sorted multi-row-group layout must decode a strict block
-  *     subset and beat the full-scan wall;
-  * (2) storage-partitioned join — the same bucket(16,k) join timed with
-  *     SPJ on vs off (spark.sql.sources.v2.bucketing.enabled), exchange
-  *     counts pinned from the plans.
-  *
-  *   sbt "runMain graft.Round11Probe /root/testdata/sf0.1"
-  */
-object Round11Probe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.{Acid, AcidSql}
-
-    def t[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-
-    // ---- 1. row-group pruning on a 4M-row key-sorted layout ---------------
-    locally {
-      val dir = Scratch.fresh("r11_probe_rg", sfDir)
-      val rows = spark.range(4000000L).select(col("id").as("k"),
-        (col("id") * 7 % 99991).as("v"),
-        concat(lit("u"), col("id") % 1000).as("tag"))
-      Acid.create(spark, dir, rows, "k", 4)
-      // default 128 MB block size would give ~1 group/file; 1 MiB blocks
-      // model the many-groups-per-file shape a 1 GB file has at 100 TB
-      val hc = spark.sparkContext.hadoopConfiguration
-      hc.set("parquet.block.size", (1 << 20).toString)
-      try Acid.optimizeRange(spark, dir, 0L, Long.MaxValue, 4)
-      finally hc.unset("parquet.block.size")
-      def read() = spark.read.format("graft-acid-sql").load(dir)
-      // warm
-      read().agg(count(lit(1))).head
-      AcidSql.resetRowGroupMetrics()
-      val (_, fullS) = t(read().agg(sum(col("v"))).head)
-      val fullBlocks = AcidSql.rowGroupsRead.sum
-      AcidSql.resetRowGroupMetrics()
-      val (_, selS) = t(read()
-        .filter(col("k") >= 2000000L && col("k") <= 2040000L)
-        .agg(sum(col("v"))).head)
-      val (selRead, selTotal) = (AcidSql.rowGroupsRead.sum, AcidSql.rowGroupsTotal.sum)
-      println(f"[r11-probe] rowgroup: full scan $fullS%5.2fs ($fullBlocks blocks), " +
-        f"1%% key window $selS%5.2fs ($selRead of $selTotal blocks in touched files) " +
-        f"-> ${fullS / selS}%4.1fx wall, ${fullBlocks.toDouble / math.max(selRead, 1)}%4.1fx decode")
-    }
-
-    // ---- 1b. nested columnar decode: V2 scan vs builtin vectorized reader --
-    locally {
-      val root = Scratch.fresh("r11_probe_nest", sfDir)
-      val cat = "graft_r11p_nest"
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      spark.sql(s"DROP TABLE IF EXISTS $cat.t")
-      spark.sql(s"CREATE TABLE $cat.t (k BIGINT, " +
-        "meta STRUCT<a: BIGINT, tag: STRING>, emb ARRAY<FLOAT>)")
-      spark.range(2000000L).selectExpr("id AS k",
-        "named_struct('a', id * 2, 'tag', concat('t', id % 100)) AS meta",
-        "array(CAST(id AS FLOAT), CAST(id + 1 AS FLOAT), CAST(id + 2 AS FLOAT)) AS emb")
-        .createOrReplaceTempView("r11p_nest_src")
-      spark.sql(s"INSERT INTO $cat.t SELECT * FROM r11p_nest_src")
-      val agg = "sum(meta.a) + sum(size(emb))"
-      spark.sql(s"SELECT $agg FROM $cat.t").head // warm
-      val (v2, v2S) = t(spark.sql(s"SELECT $agg FROM $cat.t").head.getLong(0))
-      val builtin = spark.read.parquet(s"$root/t/dv2_*")
-      builtin.createOrReplaceTempView("r11p_nest_raw")
-      spark.sql(s"SELECT $agg FROM r11p_nest_raw").head // warm
-      val (bi, biS) = t(spark.sql(s"SELECT $agg FROM r11p_nest_raw").head.getLong(0))
-      require(v2 == bi, s"nested parity: $v2 vs $bi")
-      println(f"[r11-probe] nested: 2M-row struct+array aggregate — v2 scan $v2S%5.2fs " +
-        f"vs builtin vectorized $biS%5.2fs -> ${v2S / biS}%4.2fx of builtin")
-    }
-
-    // ---- 2. SPJ on/off A/B on a bucket(16, k) join ------------------------
-    locally {
-      val root = Scratch.fresh("r11_probe_spj", sfDir)
-      val cat = "graft_r11p_spj"
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      Seq("a", "b").foreach { tn =>
-        spark.sql(s"DROP TABLE IF EXISTS $cat.$tn")
-        spark.sql(s"CREATE TABLE $cat.$tn (k BIGINT, v BIGINT) " +
-          "PARTITIONED BY (bucket(16, k))")
-      }
-      spark.range(4000000L).selectExpr("id AS k", "id * 3 AS v")
-        .createOrReplaceTempView("r11p_src")
-      spark.sql(s"INSERT INTO $cat.a SELECT k, v FROM r11p_src")
-      spark.sql(s"INSERT INTO $cat.b SELECT k, v * 2 FROM r11p_src")
-      val q = s"SELECT sum(a.v + b.v) FROM $cat.a a JOIN $cat.b b ON a.k = b.k"
-      val oldB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      def run(): (Double, Int) = {
-        val df = spark.sql(q)
-        val (_, s) = t(df.head)
-        (s, "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).length)
-      }
-      try {
-        spark.sql(q).head // warm file caches
-        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
-        val (offS, offEx) = run()
-        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        val (onS, onEx) = run()
-        println(f"[r11-probe] spj: bucket(16,k) 4M x 4M join — shuffle $offS%5.2fs " +
-          f"($offEx exchanges) vs spj $onS%5.2fs ($onEx exchanges) " +
-          f"-> ${offS / onS}%4.1fx")
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldB)
-        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      }
-    }
-    spark.stop()
-  }
-}
-
-/** Round-14 probes (verdict items #2 and #4).
-  *
-  * 1. REWRITE COMMIT TAX: every rewrite commit since round 13 builds a
-  *    sized key bloom (`bloomWrite`) and stamps cstats/NDV/nullCount in
-  *    the stats pass. A/B the same merge + optimize workload with the
-  *    measurement gates (`spark.graft.bloomOnRewrite`,
-  *    `spark.graft.stampColStats`) on vs off to put a number on the tax
-  *    the r13 verdict could only infer from noisy totals.
-  * 2. MANIFEST-SCALE PLANNING: a synthetic 50,000-entry manifest
-  *    (metadata only — no data files needed for metadata-tier timing)
-  *    through commit (sharded full snapshot), cold full parse, delta
-  *    tail + checkpoint read, and the shard-pruned point-window plan
-  *    (`planRangeEntries`) — the O(50k)-entries regime a 100 TB table's
-  *    log actually lives in.
-  *
-  *   sbt "runMain graft.Round14Probe"
-  */
-object Round14Probe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.Acid
-
-    def t[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-
-    // ---- 1. rewrite commit tax: bloom + column-stats stamps on vs off ----
-    locally {
-      def run(bloom: Boolean, stats: Boolean): (Double, Double, Double) = {
-        spark.conf.set("spark.graft.bloomOnRewrite", bloom.toString)
-        spark.conf.set("spark.graft.stampColStats", stats.toString)
-        val dir = Scratch.fresh(s"r14_tax_${bloom}_$stats", sfDir)
-        val rows = spark.range(100000L).select(col("id").as("k"),
-          (col("id") * 7 % 99991).as("v"),
-          concat(lit("u"), col("id") % 1000).as("tag"))
-        Acid.create(spark, dir, rows, "k", 8)
-        def batch(i: Int) = spark.range(1000L).select(
-          (col("id") * 97 + i).as("k"), lit(-1L).as("v"),
-          lit(s"patched$i").as("tag"))
-        Acid.merge(spark, dir, batch(0), "w")  // warm
-        val times = (1 to 5).map { i =>
-          t(Acid.merge(spark, dir, batch(i), "w"))._2
-        }
-        val (_, optS) = t(Acid.optimize(spark, dir, 4))
-        val (_, smallS) = t(Acid.merge(spark, dir,
-          batch(6).limit(50), "w")) // tiny-commit shape
-        (times.sum / times.size, optS, smallS)
-      }
-      val (onMerge, onOpt, onSmall) = run(bloom = true, stats = true)
-      val (nbMerge, nbOpt, nbSmall) = run(bloom = false, stats = true)
-      val (offMerge, offOpt, offSmall) = run(bloom = false, stats = false)
-      spark.conf.set("spark.graft.bloomOnRewrite", "true")
-      spark.conf.set("spark.graft.stampColStats", "true")
-      println(f"[r14-probe] commit tax (both on / bloom off / both off): " +
-        f"merge ${onMerge}%5.3f / ${nbMerge}%5.3f / ${offMerge}%5.3fs " +
-        f"(bloom ${(onMerge / nbMerge - 1) * 100}%+5.1f%%, total ${(onMerge / offMerge - 1) * 100}%+5.1f%%), " +
-        f"optimize ${onOpt}%5.3f / ${nbOpt}%5.3f / ${offOpt}%5.3fs " +
-        f"(bloom ${(onOpt / nbOpt - 1) * 100}%+5.1f%%, total ${(onOpt / offOpt - 1) * 100}%+5.1f%%), " +
-        f"tiny merge ${onSmall}%5.3f / ${nbSmall}%5.3f / ${offSmall}%5.3fs " +
-        f"(total ${(onSmall / offSmall - 1) * 100}%+5.1f%%)")
-    }
-
-    // ---- 2. 50k-entry manifest: commit, cold parse, plan, checkpoint ----
-    locally {
-      val dir = Scratch.fresh("r14_manifest50k", sfDir)
-      val n = 50000
-      val entries = (0 until n).map { i =>
-        Acid.FileEntry(f"d0/part-$i%05d.parquet", 1000L,
-          i.toLong * 1000L, i.toLong * 1000L + 999L,
-          bytes = 4L << 20,
-          cstats = Seq(("tag", f"a$i%05d", f"z$i%05d")),
-          ndv = Seq(("tag", 900L)), nulls = Seq(("tag", 3L)))
-      }
-      val (_, commitS) = t(Acid.commitManifest(dir,
-        Acid.Manifest(0, -1L, entries, op = "CREATE")))
-      // a 10-deep delta tail, then the v10 checkpoint (cadence)
-      val deltaS = (1 to 10).map { v =>
-        val swapped = entries.updated(v,
-          entries(v).copy(path = f"d$v/part-swap$v%02d.parquet"))
-        t(Acid.commitManifest(dir,
-          Acid.Manifest(v, -1L, swapped.take(v + 1) ++ entries.drop(v + 1),
-            op = "MERGE")))._2
-      }.sum / 10
-      Acid.clearManifestCache()
-      val (m0, coldS) = t(Acid.readManifest(dir, 0))
-      require(m0.files.size == n, s"cold parse lost entries: ${m0.files.size}")
-      Acid.clearManifestCache()
-      val (mc, ckptS) = t(Acid.readManifest(dir, 10))
-      require(mc.files.size == n, s"checkpoint parse: ${mc.files.size}")
-      Acid.clearManifestCache()
-      val ((live, total, shards), planS) =
-        t(Acid.planRangeEntries(dir, 0, 25000000L, 25010000L))
-      require(total == n && live.size >= 10 && live.size <= 12 &&
-        shards >= 1 && shards <= 2,
-        s"shard-pruned plan: ${live.size} of $total via $shards shards")
-      val (warmPlan, warmS) = {
-        Acid.readManifest(dir, 10): Unit // warm the cache
-        t(Acid.planRangeEntries(dir, 10, 25000000L, 25010000L))
-      }
-      require(warmPlan._1.size >= 10)
-      // shard denominator derived from the actual fanout constant, not a
-      // literal (r14 advice: a changed fanout must not misreport here)
-      val totalShards =
-        (n + Acid.CheckpointShardEntries - 1) / Acid.CheckpointShardEntries
-      println(f"[r14-probe] 50k manifest: commit ${commitS}%5.2fs " +
-        f"($totalShards shards), delta commit ${deltaS}%5.3fs, cold full parse ${coldS}%5.2fs, " +
-        f"checkpoint+tail parse ${ckptS}%5.2fs, shard-pruned point plan ${planS}%5.3fs " +
-        f"($shards of $totalShards shards), warm plan ${warmS * 1000}%5.1fms")
-    }
-    spark.stop()
-  }
-}
-
-/** Round-15 probe — column-index (page-filter) OPEN cost on
-  * NON-selective filtered scans (round-14 verdict next #5): the
-  * vectorized V2 open enables `useColumnIndexFilter` whenever ANY
-  * filter is pushed, so a full scan with an all-matching residual
-  * (`v >= 0`) pays the column-index read for every row group while
-  * pruning nothing. A/B via `AcidSql.disableColumnIndexFilter`
-  * (measurement-only hook): if the index read costs real time, the open
-  * should gate on bound-style predicates; if it's noise (parquet-mr
-  * lazy-loads indexes per-row-group), the unconditional flip stands.
-  * A selective point window runs the same A/B as the paired benefit
-  * side.
-  *
-  *   sbt "runMain graft.Round15Probe"
-  */
-object Round15Probe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.{Acid, AcidSql}
-
-    val dir = Scratch.fresh("r15_ci_cost", sfDir)
-    val n = 4000000L
-    // many pages per group: a 32-byte pad column inflates page counts so
-    // index reads have something to cost
-    val t = spark.range(n).select(col("id").as("k"),
-      (col("id") * 7 % 1000003).as("v"),
-      rpad(col("id").cast("string"), 32, "x").as("pad"))
-    Acid.create(spark, dir, t, "k", 8)
-    // decode-heavy twin: 256-byte rows — where skipping pages actually
-    // saves real decode, the regime the page filter exists for
-    val dirW = Scratch.fresh("r15_ci_wide", sfDir)
-    Acid.create(spark, dirW, spark.range(n / 2).select(col("id").as("k"),
-      (col("id") * 7 % 1000003).as("v"),
-      rpad(col("id").cast("string"), 256, "x").as("pad")), "k", 4)
-
-    def v2 = spark.read.format("graft-acid-sql").load(dir)
-    // pushed filter that matches EVERY row: pred.isDefined, zero pruning
-    def fullScan(): Long =
-      v2.filter(col("v") >= 0L).agg(count(lit(1))).head.getLong(0)
-    def pointWindow(): Long =
-      v2.filter(col("k") >= n / 2 && col("k") <= n / 2 + 2000)
-        .agg(count(lit(1))).head.getLong(0)
-    // wide variant reads the fat pad column through the probe so page
-    // skipping saves its decode, not just the longs'
-    def pointWide(): Long =
-      spark.read.format("graft-acid-sql").load(dirW)
-        .filter(col("k") >= n / 4 && col("k") <= n / 4 + 2000)
-        .agg(count(lit(1)), max(length(col("pad")))).head.getLong(0)
-
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-    // INTERLEAVED A/B per rep: back-to-back on/off pairs cancel the
-    // drift (JIT, GC, page cache) that a run-them-in-blocks design
-    // charges entirely to whichever side runs first
-    def abBench(reps: Int)(f: => Long): (Double, Double) = {
-      val pairs = (1 to reps).map { _ =>
-        AcidSql.disableColumnIndexFilter = false
-        val t0 = System.nanoTime(); require(f > 0)
-        val on = (System.nanoTime() - t0) / 1e9
-        AcidSql.disableColumnIndexFilter = true
-        val t1 = System.nanoTime(); require(f > 0)
-        val off = (System.nanoTime() - t1) / 1e9
-        AcidSql.disableColumnIndexFilter = false
-        (on, off)
-      }
-      (median(pairs.map(_._1)), median(pairs.map(_._2)))
-    }
-
-    fullScan(); pointWindow(); pointWide() // warm
-    val reps = 7
-    val (fullOn, fullOff) = abBench(reps)(fullScan())
-    val (ptOn, ptOff) = abBench(reps)(pointWindow())
-    val (wdOn, wdOff) = abBench(reps)(pointWide())
-    println(f"[r15-probe] column-index open cost (median of $reps): " +
-      f"non-selective full scan ${fullOn}%5.3fs with / ${fullOff}%5.3fs without " +
-      f"(${(fullOn / fullOff - 1) * 100}%+5.1f%%); " +
-      f"selective point window ${ptOn}%5.3fs with / ${ptOff}%5.3fs without " +
-      f"(${(ptOn / ptOff - 1) * 100}%+5.1f%%); " +
-      f"wide-row point window ${wdOn}%5.3fs with / ${wdOff}%5.3fs without " +
-      f"(${(wdOn / wdOff - 1) * 100}%+5.1f%%)")
-
-    // ---- metadata-answered count(*) vs the residual-filtered scan over
-    // the same 4M rows: the aggregate-pushdown payoff in one number ----
-    locally {
-      val pushed = median((1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        require(v2.agg(count(lit(1))).head.getLong(0) == n)
-        (System.nanoTime() - t0) / 1e9
-      })
-      println(f"[r15-probe] count(*) pushdown ${pushed * 1000}%5.1fms " +
-        f"vs scan-side count ${fullOff}%5.3fs (${fullOff / pushed}%.0fx)")
-    }
-
-    // ---- manifest footprint over a REAL wide-text corpus (round-15
-    // truncation evidence): documents.text averages KBs per value; the
-    // stamped bounds must keep the per-entry manifest cost at the
-    // Iceberg-like few-hundred-bytes scale, not two-documents scale ----
-    locally {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id").as("k"), col("text"), col("lang"), col("source"))
-      val avgText = docs.agg(avg(length(col("text")))).head.getDouble(0)
-      val ddir = Scratch.fresh("r15_docs_manifest", sfDir)
-      Acid.create(spark, ddir, docs, "k", 50)
-      val m = Acid.readManifest(ddir, Acid.latestVersion(ddir))
-      val logDir = java.nio.file.Paths.get(ddir, "_log")
-      val walked = java.nio.file.Files.walk(logDir)
-      val logBytes =
-        try {
-          import scala.jdk.CollectionConverters._
-          walked.iterator().asScala
-            .filter(java.nio.file.Files.isRegularFile(_))
-            .map(java.nio.file.Files.size).sum
-        } finally walked.close()
-      println(f"[r15-probe] documents manifest: ${m.files.size} entries over " +
-        f"avg-${avgText}%.0f-char text, $logBytes%d log bytes " +
-        f"(${logBytes / m.files.size}%d B/entry)")
-    }
-    spark.stop()
-  }
-}
-
-/** Round-16 probe — (1) estRowsOf ERROR across realistic merge-batch
-  * shapes (r15 verdict next #5): the bloom row floor and expected-NDV
-  * hint feed off this plan-statistics estimate, and the worry was a
-  * post-shuffle foreachBatch CDC batch misestimating badly enough to
-  * misfire the floor by >10x in either direction. Shapes: known-rowCount
-  * local, parquet scan, post-shuffle aggregate of a parquet scan, a
-  * stats-less LogicalRDD (the no-stats sentinel the r15 advice flagged —
-  * must now report UNKNOWN, never a fabricated huge count), and a REAL
-  * foreachBatch micro-batch captured in-flight. (2) The partition-aligned
-  * filtered aggregate pushdown payoff: an aligned `count(*) WHERE ts`
-  * window answered from the manifest vs the same window through the
-  * (pruned) scan.
-  *
-  *   sbt "runMain graft.Round16Probe"
-  */
-object Round16Probe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.{Acid, AcidSql}
-
-    def report(tag: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val actual = df.count()
-      val est = Acid.estRowsOf(df)
-      val ratio = est.map(_.toDouble / math.max(1L, actual))
-      println(f"[r16-probe] estRowsOf $tag: actual=$actual%d " +
-        s"est=${est.map(_.toString).getOrElse("UNKNOWN")} " +
-        f"ratio=${ratio.map(r => f"$r%.2f").getOrElse("n/a")}")
-    }
-
-    report("local-range (rowCount known)", spark.range(50L).toDF("k"))
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    report("parquet filter (sizeInBytes/width)",
-      li.filter(col("l_quantity") > 25))
-    report("post-shuffle aggregate (CDC upsert shape)",
-      li.groupBy(col("l_orderkey").as("k"))
-        .agg(sum(col("l_quantity")).as("q"), count(lit(1)).as("n")))
-    // stats-less LogicalRDD: pre-r16 this divided the Long.MaxValue
-    // sentinel and fabricated a quadrillion-row estimate
-    val rdd = spark.sparkContext.parallelize(Seq((1L, 2L), (3L, 4L)))
-    report("LogicalRDD (no-stats sentinel)",
-      spark.createDataFrame(rdd).toDF("k", "v"))
-
-    // a REAL foreachBatch micro-batch, captured in-flight: the exact
-    // frame mergeNdvHint sees in the streaming-upsert path
-    val srcDir = Scratch.fresh("r16_fb_src", sfDir)
-    spark.range(40000L).select(col("id").as("k"), (col("id") * 3).as("v"))
-      .coalesce(2).write.mode("overwrite").parquet(srcDir)
-    val captured = new java.util.concurrent.atomic.AtomicReference[String]("")
-    val q = spark.readStream
-      .schema("k BIGINT, v BIGINT").parquet(srcDir)
-      .groupBy((col("k") % 1000).as("g")).agg(sum(col("v")).as("sv"))
-      .writeStream.outputMode("complete")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        val actual = b.count()
-        val est = Acid.estRowsOf(b)
-        captured.set(f"actual=$actual%d " +
-          s"est=${est.map(_.toString).getOrElse("UNKNOWN")} " +
-          f"ratio=${est.map(e => f"${e.toDouble / math.max(1L, actual)}%.2f")
-            .getOrElse("n/a")}")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", Scratch.fresh("r16_fb_ckpt", sfDir))
-      .start()
-    q.awaitTermination(120000L)
-    println(s"[r16-probe] estRowsOf foreachBatch micro-batch: ${captured.get}")
-
-    // ---- partition-aligned filtered aggregate payoff ----
-    val root = Scratch.fresh("r16_alignpd", sfDir)
-    val cat = "r16pd"
-    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.ev")
-    spark.sql(s"CREATE TABLE $cat.ev (k BIGINT, ts TIMESTAMP, v BIGINT) " +
-      "PARTITIONED BY (days(ts))")
-    val n = 4000000L
-    spark.range(n).select(col("id").as("k"),
-      timestamp_seconds((col("id") / 100000L).cast("long") * 86400L +
-        (col("id") % 86400L)).as("ts"), (col("id") * 7).as("v"))
-      .createOrReplaceTempView("r16_pd_src")
-    spark.sql(s"INSERT INTO $cat.ev SELECT k, ts, v FROM r16_pd_src")
-    val win = "ts >= TIMESTAMP'1970-01-11 00:00:00' AND " +
-      "ts < TIMESTAMP'1970-01-21 00:00:00'" // 10 of 40 days
-    def timed(f: => Long): (Long, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-    def run(sqlText: String): Double = {
-      val samples = (1 to 7).map { _ =>
-        val (r, t) = timed(spark.sql(sqlText).head.getLong(0))
-        require(r == 1000000L, s"window count $r"); t
-      }
-      median(samples)
-    }
-    val aligned = s"SELECT count(*) AS n FROM $cat.ev WHERE $win"
-    spark.sql(aligned).head // warm
-    val tPushed = run(aligned)
-    // the same window with the claim suppressed: straddle by one second
-    val winS = "ts >= TIMESTAMP'1970-01-10 23:59:59' AND " +
-      "ts < TIMESTAMP'1970-01-21 00:00:00'"
-    val scanSql = s"SELECT count(*) AS n FROM $cat.ev WHERE $winS"
-    val tScan = {
-      val samples = (1 to 7).map { _ =>
-        val (r, t) = timed(spark.sql(scanSql).head.getLong(0))
-        require(r == 1000001L, s"straddle count $r"); t
-      }
-      median(samples)
-    }
-    println(f"[r16-probe] aligned-window count(*): manifest ${tPushed * 1000}%5.1fms " +
-      f"vs pruned scan ${tScan * 1000}%5.1fms (${tScan / tPushed}%.0fx) " +
-      f"over 1M-row window of ${n}%d rows")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.ev")
-
-    // ---- numeric nstats payoff: range skipping + metadata min/max ----
-    // A 4M-row table clustered on a numeric amount column (the common
-    // time-ordered-ingest shape where a monotone-ish business value
-    // tracks the key): a selective range predicate with nstats prunes to
-    // the covering files; the A/B suppresses pruning by straddling every
-    // file (predicate true everywhere), isolating the skip's value.
-    val root2 = Scratch.fresh("r16_nstats_pd", sfDir)
-    val cat2 = "r16np"
-    spark.conf.set(s"spark.sql.catalog.$cat2", "graft.sources.AcidCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat2.root", root2)
-    spark.sql(s"DROP TABLE IF EXISTS $cat2.t")
-    spark.sql(s"CREATE TABLE $cat2.t (k BIGINT, cents BIGINT, pad STRING)")
-    // decode-heavy rows (~260 B of string payload) so the A/B measures
-    // I/O+decode, not job fixed costs
-    val n2 = 4000000L
-    (0 until 8).foreach { b =>
-      spark.range(b * n2 / 8, (b + 1) * n2 / 8).select(col("id").as("k"),
-        (col("id") * 3).as("cents"),
-        concat(lit("pad-"), (col("id") % 997).cast("string"),
-          lit("-"), sha2(col("id").cast("string"), 256),
-          lit("-"), sha2((col("id") + 1).cast("string"), 256),
-          lit("-"), sha2((col("id") + 2).cast("string"), 256)).as("pad"))
-        .repartitionByRange(4, col("k")).createOrReplaceTempView("r16_np_src")
-      spark.sql(s"INSERT INTO $cat2.t SELECT * FROM r16_np_src")
-    }
-    def run2(sqlText: String, expect: Long): (Double, Long) = {
-      var decoded = 0L
-      val samples = (1 to 7).map { _ =>
-        AcidSql.resetRowGroupMetrics()
-        val (r, t) = timed(spark.sql(sqlText).head.getLong(0))
-        require(r == expect, s"count $r != $expect")
-        decoded = AcidSql.vecRowsFooter.sum(); t
-      }
-      (median(samples), decoded)
-    }
-    // 1-of-8-files window; length(pad) forces the wide column's decode
-    val sel = s"SELECT count(*) AS n FROM $cat2.t " +
-      s"WHERE cents >= 300000 AND cents < 1500000 AND length(pad) > 0"
-    spark.sql(sel).head
-    val (tSel, dSel) = run2(sel, 400000L)
-    val (sc1, tt1) = AcidSql.lastScanFor(s"$root2/t")
-    // the same selectivity WITHOUT file skipping: every file straddles
-    // the modular predicate, so nstats keep all 8 — reader-level work
-    // at full width
-    val mod = s"SELECT count(*) AS n FROM $cat2.t " +
-      s"WHERE cents % 30 < 3 AND length(pad) > 0"
-    spark.sql(mod).head
-    val (tMod, dMod) = run2(mod, 400000L)
-    val (sc2, tt2) = AcidSql.lastScanFor(s"$root2/t")
-    println(f"[r16-probe] numeric range skip: pruned $sc1/$tt1 files " +
-      f"${tSel * 1000}%5.1fms ($dSel%d rows decoded) vs unprunable " +
-      f"same-selectivity $sc2/$tt2 ${tMod * 1000}%5.1fms ($dMod%d rows) " +
-      f"— ${tMod / tSel}%.1fx time, ${dMod.toDouble / math.max(1L, dSel)}%.1fx decode, " +
-      f"over ${n2}%d rows")
-    // metadata min/max vs scan-side aggregate over the numeric column
-    val tMeta = {
-      val samples = (1 to 7).map { _ =>
-        val (r, t) = timed(spark.sql(
-          s"SELECT max(cents) AS hi FROM $cat2.t").head.getLong(0))
-        require(r == (n2 - 1) * 3, s"max $r"); t
-      }
-      median(samples)
-    }
-    println(f"[r16-probe] numeric max(cents): manifest ${tMeta * 1000}%5.1fms " +
-      f"(metadata fold; scan-side comparison is the straddle above)")
-    spark.sql(s"DROP TABLE IF EXISTS $cat2.t")
-    AcidSql.resetRowGroupMetrics()
-    spark.stop()
-  }
-}
-
-/** Round-16 continuation probe — the session's two write/plan-side
-  * capabilities measured at fixture scale (4M rows):
-  * (1) ALIGNED DELETE vs legacy copy-on-write: the same day-boundary
-  *     retention delete as one metadata commit vs rewriting the covered
-  *     files, timing both and weighing the bytes each wrote.
-  * (2) RUNTIME (join-driven) file pruning: fact⋈selective-dim with the
-  *     dynamic IN filter on vs off (DPP disabled), decode rows + time.
-  *
-  *   sbt "runMain graft.Round16bProbe"
-  */
-object Round16bProbe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.{Acid, AcidSql}
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def dirBytes(p: String): Long = {
-      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-      try {
-        import scala.jdk.CollectionConverters._
-        w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-          .map(java.nio.file.Files.size).sum
-      } finally w.close()
-    }
-
-    // ---- (1) aligned DELETE vs legacy copy-on-write ----
-    val n = 4000000L
-    def buildDays(tag: String): (String, String) = {
-      val root = Scratch.fresh(tag, sfDir)
-      val cat = tag.takeRight(8).replace('.', '_')
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      spark.sql(s"DROP TABLE IF EXISTS $cat.ev")
-      spark.sql(s"CREATE TABLE $cat.ev (k BIGINT, ts TIMESTAMP, v BIGINT) " +
-        "PARTITIONED BY (days(ts))")
-      spark.range(n).select(col("id").as("k"),
-        timestamp_seconds((col("id") / 100000L).cast("long") * 86400L +
-          (col("id") % 86400L)).as("ts"), (col("id") * 7).as("v"))
-        .createOrReplaceTempView(s"${cat}_src")
-      spark.sql(s"INSERT INTO $cat.ev SELECT k, ts, v FROM ${cat}_src")
-      (root, cat)
-    }
-    val (rootA, catA) = buildDays("r16b_del_meta")
-    val (rootB, _) = buildDays("r16b_del_cow")
-    val preBytesA = dirBytes(rootA)
-    val preBytesB = dirBytes(rootB)
-    // half the table leaves: days 0..19 of 40
-    val (_, tMeta) = timed(spark.sql(
-      s"DELETE FROM $catA.ev WHERE ts < TIMESTAMP'1970-01-21 00:00:00'"))
-    val nA = spark.sql(s"SELECT count(*) FROM $catA.ev").head.getLong(0)
-    val cut = java.sql.Timestamp.valueOf("1970-01-21 00:00:00")
-    val (_, tCow) = timed(Acid.deleteWhere(spark, s"$rootB/ev",
-      col("ts") < lit(cut), None, "probe"))
-    val nB = Acid.snapshot(spark, s"$rootB/ev").count()
-    val wroteA = dirBytes(rootA) - preBytesA
-    val wroteB = dirBytes(rootB) - preBytesB
-    require(nA == nB && nA == n / 2, s"post-delete rows: aligned=$nA cow=$nB")
-    println(f"[r16b-probe] retention delete of ${n / 2}%d/${n}%d rows: " +
-      f"ALIGNED ${tMeta}%.2fs (+${wroteA / 1024}%d KB written) vs " +
-      f"copy-on-write ${tCow}%.2fs (+${wroteB / 1024 / 1024}%d MB written) " +
-      f"— ${tCow / tMeta}%.1fx time, write amplification removed")
-
-    // ---- (2) runtime (join-driven) file pruning A/B ----
-    val rootF = Scratch.fresh("r16b_rtf", sfDir)
-    val dirF = s"$rootF/t"
-    Acid.create(spark, dirF, spark.range(n).toDF("id")
-      .select(col("id").as("k"), (col("id") % 97).as("v")), "k", 32)
-    spark.sql("DROP TABLE IF EXISTS r16b_rtf_t")
-    spark.sql(s"""CREATE TABLE r16b_rtf_t (k BIGINT, v BIGINT)
-                 |USING `graft-acid-sql` OPTIONS (path '$dirF')""".stripMargin)
-    val dimPath = s"$rootF/dim"
-    spark.range(n).select(col("id").as("fk"),
-      when(col("id") % 1000L === 7L &&
-        col("id") >= n * 7L / 8L, lit("hot"))
-        .otherwise(lit("cold")).as("label"))
-      .write.mode("overwrite").parquet(dimPath)
-    def joinCount(): Long = {
-      val dim = spark.read.parquet(dimPath).filter(col("label") === "hot")
-      spark.table("r16b_rtf_t").join(dim, col("k") === col("fk"))
-        .agg(count(lit(1))).head.getLong(0)
-    }
-    def ab(on: Boolean): (Double, Long) = {
-      spark.conf.set(
-        "spark.sql.optimizer.dynamicPartitionPruning.enabled", on.toString)
-      joinCount() // warm
-      val samples = (1 to 5).map { _ =>
-        AcidSql.resetRowGroupMetrics()
-        val (r, t) = timed(joinCount())
-        require(r == n / 8L / 1000L, s"join count $r"); t
-      }
-      val decoded = AcidSql.vecRowsFooter.sum()
-      (samples.sorted.apply(samples.size / 2), decoded)
-    }
-    val (tOn, dOn) = ab(on = true)
-    val (tOff, dOff) = ab(on = false)
-    spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-    println(f"[r16b-probe] runtime file pruning (fact $n%d rows / 32 files, " +
-      f"dim slice ${n / 8L / 1000L}%d keys in the top eighth): " +
-      f"ON ${tOn * 1000}%5.1fms ($dOn%d rows decoded) vs " +
-      f"OFF ${tOff * 1000}%5.1fms ($dOff%d rows) — " +
-      f"${dOff.toDouble / math.max(1L, dOn)}%.1fx decode cut")
-    spark.sql("DROP TABLE IF EXISTS r16b_rtf_t")
-    spark.stop()
-  }
-}
-
-/** Round-17 evidence probe: (1) DV-tolerant metadata counting — per-file
-  * dvRows stamps keep count(*) a metadata read between OPTIMIZE runs
-  * where the r15 contract fell back to a full scan; (2) string identity
-  * partitions — GROUP BY lang answered from the manifest vs the scan;
-  * (3) the retention-window complement DELETE (`< lo OR >= hi`) dropping
-  * both flanks as one manifest commit vs the copy-on-write it used to
-  * pay. Sized at 4M rows so the scan-side comparisons measure real I/O.
-  */
-object Round17Probe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.{Acid, AcidSql}
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def med(f: => Double): Double = {
-      val xs = (1 to 5).map(_ => f).sorted; xs(xs.size / 2)
-    }
-    def dirBytes(p: String): Long = {
-      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-      try {
-        import scala.jdk.CollectionConverters._
-        w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-          .map(java.nio.file.Files.size).sum
-      } finally w.close()
-    }
-    val n = 4000000L
-
-    // ---- (1) DV-tolerant metadata count ----
-    locally {
-      val root = Scratch.fresh("r17p_dv", sfDir)
-      val cat = "r17p_dv_c"
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val dir = s"$root/t"
-      Acid.create(spark, dir, spark.range(n)
-        .select(col("id").as("k"), (col("id") * 7).as("v")), "k", 32)
-      spark.sql(s"DROP TABLE IF EXISTS $cat.missing")
-      val (nDel, _, _) = Acid.deleteWhereMor(spark, dir,
-        col("k") % 9973 === 5, None, "p")
-      val tMeta = med(timed {
-        val c = spark.sql(s"SELECT count(*) FROM $cat.t").head.getLong(0)
-        require(c == n - nDel, s"meta count $c"); c
-      }._2)
-      require(spark.sql(s"SELECT count(*) FROM $cat.t").queryExecution
-        .executedPlan.toString.contains("manifest-aggregate"))
-      val tScan = med(timed {
-        val c = spark.read.format("graft-acid").load(dir).count()
-        require(c == n - nDel, s"scan count $c"); c
-      }._2)
-      println(f"[r17-probe] DV-tolerant count ($n%d rows, $nDel%d MoR-deleted): " +
-        f"metadata ${tMeta * 1000}%6.1fms vs DV-applying scan " +
-        f"${tScan * 1000}%6.1fms — ${tScan / tMeta}%.1fx")
-    }
-
-    // ---- (2) string identity GROUP BY from the manifest ----
-    locally {
-      val root = Scratch.fresh("r17p_lang", sfDir)
-      val cat = "r17p_lg_c"
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      spark.sql(s"DROP TABLE IF EXISTS $cat.t")
-      spark.sql(s"CREATE TABLE $cat.t (k BIGINT, lang STRING, v BIGINT) " +
-        "PARTITIONED BY (lang)")
-      val langs = Seq("ar", "de", "en", "es", "fr", "ja", "pt", "zh")
-      spark.range(n).select(col("id").as("k"),
-        element_at(typedLit(langs), (col("id") % 8 + 1).cast("int")).as("lang"),
-        (col("id") * 3).as("v"))
-        .createOrReplaceTempView("r17p_lg_src")
-      spark.sql(s"INSERT INTO $cat.t SELECT k, lang, v FROM r17p_lg_src")
-      val q = s"SELECT lang, count(*) AS c, sum(v) AS s FROM $cat.t GROUP BY lang"
-      require(spark.sql(q).queryExecution.executedPlan.toString
-        .contains("manifest-aggregate"))
-      val tMeta = med(timed {
-        require(spark.sql(q).collect().length == 8); ()
-      }._2)
-      val dir = s"$root/t"
-      val tScan = med(timed {
-        require(spark.read.format("graft-acid").load(dir)
-          .groupBy("lang").agg(count(lit(1)), sum(col("v")))
-          .collect().length == 8); ()
-      }._2)
-      println(f"[r17-probe] GROUP BY lang ($n%d rows, 8 langs): manifest fold " +
-        f"${tMeta * 1000}%6.1fms vs scan ${tScan * 1000}%6.1fms — " +
-        f"${tScan / tMeta}%.1fx")
-    }
-
-    // ---- (3) retention-complement DELETE: metadata vs copy-on-write ----
-    locally {
-      def build(tag: String): (String, String) = {
-        val root = Scratch.fresh(tag, sfDir)
-        val cat = tag.takeRight(10).replace('.', '_')
-        spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-        spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-        spark.sql(s"DROP TABLE IF EXISTS $cat.ev")
-        spark.sql(s"CREATE TABLE $cat.ev (k BIGINT, ts TIMESTAMP, v BIGINT) " +
-          "PARTITIONED BY (days(ts))")
-        spark.range(n).select(col("id").as("k"),
-          timestamp_seconds((col("id") / 100000L).cast("long") * 86400L +
-            (col("id") % 86400L)).as("ts"), (col("id") * 7).as("v"))
-          .createOrReplaceTempView(s"${cat}_src")
-        spark.sql(s"INSERT INTO $cat.ev SELECT k, ts, v FROM ${cat}_src")
-        (root, cat)
-      }
-      // keep only days 10..29 of 40: both flanks drop metadata-only
-      val aligned = "ts < TIMESTAMP'1970-01-11 00:00:00' OR " +
-        "ts >= TIMESTAMP'1970-01-31 00:00:00'"
-      // shift one bound mid-day: the flank straddler pays copy-on-write
-      val straddle = "ts < TIMESTAMP'1970-01-11 12:00:00' OR " +
-        "ts >= TIMESTAMP'1970-01-31 00:00:00'"
-      val (rootA, catA) = build("r17p_cmeta")
-      val (rootB, catB) = build("r17p_ccow")
-      val preA = dirBytes(rootA); val preB = dirBytes(rootB)
-      val (_, tA) = timed(
-        spark.sql(s"DELETE FROM $catA.ev WHERE $aligned"))
-      val (_, tB) = timed(
-        spark.sql(s"DELETE FROM $catB.ev WHERE $straddle"))
-      val remA = spark.sql(s"SELECT count(*) FROM $catA.ev").head.getLong(0)
-      require(remA == n / 2, s"aligned remainder $remA")
-      println(f"[r17-probe] retention-complement DELETE ($n%d rows, 40 days, " +
-        f"both flanks = 20 days): aligned ${tA}%5.2fs " +
-        f"(+${(dirBytes(rootA) - preA) / 1024}%d KB written) vs one " +
-        f"straddling flank ${tB}%5.2fs " +
-        f"(+${(dirBytes(rootB) - preB) / 1024}%d KB) — " +
-        f"${tB / tA}%.1fx, metadata commit writes no data file")
-      spark.sql(s"DROP TABLE IF EXISTS $catA.ev")
-      spark.sql(s"DROP TABLE IF EXISTS $catB.ev")
-    }
-    spark.stop()
-  }
-}
-
-/** Round-18 scale evidence (run ad hoc, local[32], defaults 4M rows):
-  *
-  *   sbt "runMain graft.Round18Probe [sfDir]"
-  *
-  * (1) STRING partition-set DELETE: `DELETE WHERE lang IN (...)` on an
-  *     identstr-partitioned corpus (metadata-only drop on exact cstats
-  *     evidence) vs the same rows UNPARTITIONED (key-clustered files
-  *     are multi-valued in lang — every file straddles, the full
-  *     copy-on-write). Times + bytes written: the metadata commit
-  *     writes no data file, so at 100 TB the language purge is one
-  *     manifest commit however many files hold the language.
-  * (2) ALTER version write amplification: ADD COLUMN on a 256-file
-  *     table commits a delta manifest — O(1) bytes, not O(table), the
-  *     precondition for versioning EVERY schema change.
-  * (3) identstr SPJ (opt-in knob): lang⋈lang at 4M rows, shuffle vs
-  *     exchange-free co-located join.
-  */
-object Round18Probe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.Acid
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def dirBytes(p: String): Long = {
-      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-      try {
-        import scala.jdk.CollectionConverters._
-        w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-          .map(java.nio.file.Files.size).sum
-      } finally w.close()
-    }
-    val n = 4000000L
-    val langs = 40
-    // lang_00 .. lang_39 — 7 bytes, packs injectively
-    val src = spark.range(n).select(col("id").as("k"),
-      format_string("lang_%02d", col("id") % langs).as("lang"),
-      (col("id") * 3).as("nc"))
-
-    // ---- (1) metadata-only string partition DELETE vs copy-on-write --
-    locally {
-      val root = Scratch.fresh("r18p_sdel", sfDir)
-      val cat = "r18p_sd_c"
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      src.createOrReplaceTempView("r18p_src")
-      spark.sql(s"DROP TABLE IF EXISTS $cat.p")
-      spark.sql(s"""CREATE TABLE $cat.p (k BIGINT, lang STRING, nc BIGINT)
-                   |PARTITIONED BY (lang)""".stripMargin)
-      spark.sql(s"INSERT INTO $cat.p SELECT k, lang, nc FROM r18p_src")
-      spark.sql(s"DROP TABLE IF EXISTS $cat.u")
-      spark.sql(s"CREATE TABLE $cat.u (k BIGINT, lang STRING, nc BIGINT)")
-      spark.sql(s"INSERT INTO $cat.u SELECT /*+ REPARTITION_BY_RANGE(32, k) */ " +
-        "k, lang, nc FROM r18p_src")
-      val purge = "lang IN ('lang_03','lang_11','lang_27','lang_33','lang_39')"
-      val preP = dirBytes(s"$root/p"); val preU = dirBytes(s"$root/u")
-      val (_, tP) = timed(spark.sql(s"DELETE FROM $cat.p WHERE $purge"))
-      val (_, tU) = timed(spark.sql(s"DELETE FROM $cat.u WHERE $purge"))
-      val remP = spark.sql(s"SELECT count(*) FROM $cat.p").head.getLong(0)
-      val remU = spark.sql(s"SELECT count(*) FROM $cat.u").head.getLong(0)
-      require(remP == n * (langs - 5) / langs && remP == remU,
-        s"remainders $remP / $remU")
-      println(f"[r18-probe] string partition DELETE ($n%d rows, $langs%d langs, " +
-        f"purge 5): identstr metadata ${tP}%5.2fs " +
-        f"(+${(dirBytes(s"$root/p") - preP) / 1024}%d KB written) vs " +
-        f"unpartitioned copy-on-write ${tU}%5.2fs " +
-        f"(+${(dirBytes(s"$root/u") - preU) / 1024}%d KB) — ${tU / tP}%.1fx")
-      spark.sql(s"DROP TABLE IF EXISTS $cat.p")
-      spark.sql(s"DROP TABLE IF EXISTS $cat.u")
-    }
-
-    // ---- (2) ALTER version write amplification ------------------------
-    locally {
-      val root = Scratch.fresh("r18p_alter", sfDir)
-      val cat = "r18p_al_c"
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val dir = s"$root/t"
-      Acid.create(spark, dir, spark.range(n)
-        .select(col("id").as("k"), (col("id") * 7).as("v")), "k", 256)
-      spark.sql(s"DROP TABLE IF EXISTS $cat.missing")
-      val v0 = Acid.latestVersion(dir)
-      val full = java.nio.file.Files.size(
-        java.nio.file.Paths.get(dir, "_log", f"v$v0%05d.txt"))
-      val (_, tA) = timed(
-        spark.sql(s"ALTER TABLE $cat.t ADD COLUMN tier STRING DEFAULT 'basic'"))
-      val v1 = Acid.latestVersion(dir)
-      require(v1 == v0 + 1, s"ALTER version $v1")
-      val alter = java.nio.file.Files.size(
-        java.nio.file.Paths.get(dir, "_log", f"v$v1%05d.txt"))
-      val pinned = spark.sql(
-        s"SELECT count(*) FROM $cat.t VERSION AS OF $v1 WHERE tier = 'basic'")
-        .head.getLong(0)
-      require(pinned == n, s"pinned exists-default count $pinned")
-      println(f"[r18-probe] ALTER version on a 256-file table: commit " +
-        f"${tA * 1000}%6.1fms, manifest $alter%d B (vs $full%d B full " +
-        f"base) — O(1) delta; pinned read serves the declared schema")
-      spark.sql(s"DROP TABLE IF EXISTS $cat.t")
-    }
-
-    // ---- (3) identstr key-grouped reporting: exchange-free GROUP BY --
-    // The co-location the knob buys: KeyGroupedPartitioning(identity
-    // (lang)) satisfies the aggregate's clustering, so `GROUP BY lang`
-    // over a non-foldable measure (sum(nc*nc) — the manifest fold only
-    // serves plain count/sum/min/max/avg) runs with NO exchange; off,
-    // the same plan shuffles 4M rows to the final aggregation.
-    locally {
-      val root = Scratch.fresh("r18p_spj", sfDir)
-      val cat = "r18p_sj_c"
-      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-      spark.sql(s"DROP TABLE IF EXISTS $cat.a")
-      spark.sql(s"""CREATE TABLE $cat.a (k BIGINT, lang STRING, nc BIGINT)
-                   |PARTITIONED BY (lang)""".stripMargin)
-      spark.sql(s"INSERT INTO $cat.a SELECT k, lang, nc FROM r18p_src")
-      val q = s"SELECT lang, sum(nc * nc) AS s2 FROM $cat.a GROUP BY lang"
-      val (c1, tOff) = timed(spark.sql(q).collect().length)
-      spark.conf.set("spark.graft.identstrSpj", "true")
-      try {
-        val qq = spark.sql(q)
-        val exchangeFree = !qq.queryExecution.executedPlan.toString
-          .contains("Exchange")
-        val (c2, tOn) = timed(qq.collect().length)
-        require(c1 == langs && c2 == langs, s"groups $c1 / $c2")
-        println(f"[r18-probe] identstr key-grouped GROUP BY ($n%d rows, " +
-          f"$langs%d langs, non-foldable measure): shuffle ${tOff}%5.2fs " +
-          f"vs exchange-free ${tOn}%5.2fs (exchange-free: $exchangeFree) " +
-          f"— ${tOff / tOn}%.1fx")
-      } finally spark.conf.set("spark.graft.identstrSpj", "auto")
-      spark.sql(s"DROP TABLE IF EXISTS $cat.a")
-    }
-
-    // ---- (4) MoR delete-commit cost (the r17 verdict watch item) ------
-    // Times the key-level deleteWhereMor commit itself: first delete
-    // (no prior sidecar) and a second folding delete. The r17
-    // attribution re-scanned every touched file a second time; the
-    // r18 sidecar carries the filename, so attribution is delete-sized.
-    locally {
-      val root = Scratch.fresh("r18p_mor", sfDir)
-      val dir = s"$root/t"
-      Acid.create(spark, dir, spark.range(n)
-        .select(col("id").as("k"), (col("id") * 7).as("v"),
-          (col("id") % 97).as("w")), "k", 32)
-      val (r1, t1) = timed(Acid.deleteWhereMor(spark, dir,
-        col("k") % 9973 === 5, None, "p1"))
-      val (r2, t2) = timed(Acid.deleteWhereMor(spark, dir,
-        col("k") % 9973 === 6, None, "p2"))
-      require(r1._1 > 0 && r2._1 > 0)
-      println(f"[r18-probe] MoR delete commit ($n%d rows, 32 files, " +
-        f"~${r1._1}%d keys/delete): first ${t1}%5.2fs, folding second " +
-        f"${t2}%5.2fs — attribution rides the sidecar write")
-    }
-    spark.stop()
-  }
-}
-
-/** Round-19 probe — monotone-transform write fan-out (the r18 weak mark,
-  * tbl_part_evolve 13.67 s scored): a days(ts)-partitioned INSERT from a
-  * RANDOM-arrival scan (each task spans the full time range) under
-  *   (a) the pre-r19 local-sort-only write (knob=none) and
-  *   (b) the r19 default ordered-range REBALANCE distribution,
-  * printing gen-2 file counts + wall time, then times the slimmed
-  * tbl_part_evolve fixture end-to-end.
-  *
-  *   sbt "runMain graft.Round19Probe /root/testdata/sf0.1"
-  */
-object Round19Probe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.Acid
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-
-    // random-arrival events: ts spans ~90 days, scan order is event_id.
-    // Tables.events binds its DataFrame to a newSession(), so the view and
-    // the INSERT both run on ev.sparkSession (the fixture does the same).
-    val ev = Tables.events(spark, sfDir)
-      .select(col("event_id").as("k"), col("ts"),
-        (col("user_id") % 4).as("p"),
-        round(col("value") * 100).cast("long").as("cents"))
-    val ss = ev.sparkSession
-    ev.createOrReplaceTempView("r19p_src")
-
-    Seq("none" -> "local-sort-only (pre-r19)",
-        "range" -> "ordered-range rebalance (r19 default)").foreach {
-      case (mode, label) =>
-        val root = Scratch.fresh(s"r19p_fan_$mode", sfDir)
-        val cat = s"r19p_$mode"
-        ss.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-        ss.conf.set(s"spark.sql.catalog.$cat.root", root)
-        ss.sql(s"DROP TABLE IF EXISTS $cat.ev")
-        ss.sql(s"""CREATE TABLE $cat.ev (k BIGINT, ts TIMESTAMP, p BIGINT,
-                  |cents BIGINT) PARTITIONED BY (days(ts))""".stripMargin)
-        ss.conf.set("spark.graft.write.monotoneDistribution", mode)
-        try {
-          val (_, t) = timed(
-            ss.sql(s"INSERT INTO $cat.ev SELECT * FROM r19p_src"))
-          val m = Acid.readManifest(s"$root/ev",
-            Acid.latestVersion(s"$root/ev"))
-          println(f"[r19-probe] days(ts) INSERT, random arrival, $label%s: " +
-            f"${m.files.size}%d files in ${t}%5.2fs")
-        } finally
-          ss.conf.set("spark.graft.write.monotoneDistribution", "range")
-        ss.sql(s"DROP TABLE IF EXISTS $cat.ev")
-    }
-
-    // ---- skewed IDENTITY ingest: strict one-task-per-value vs AQE
-    // rebalance (round-19: identity distribution is best-effort now) —
-    // 4 M rows, 90% one lang; strict serializes the hot value through
-    // ONE writer, rebalance splits it while every rolled file stays
-    // single-valued (the stats2/cstats contract is per FILE)
-    locally {
-      val n = 4000000L
-      val skew = spark.range(n).select(col("id").as("k"),
-        when(col("id") % 10 < 9, "lang_hot")
-          .otherwise(format_string("lang_%02d", col("id") % 37)).as("lang"),
-        (col("id") * 3).as("nc"))
-      skew.createOrReplaceTempView("r19p_skew")
-      Seq("strict", "rebalance").foreach { mode =>
-        val root = Scratch.fresh(s"r19p_skew_$mode", sfDir)
-        val cat = s"r19ps_$mode"
-        spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
-        spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-        spark.sql(s"DROP TABLE IF EXISTS $cat.p")
-        spark.sql(s"""CREATE TABLE $cat.p (k BIGINT, lang STRING, nc BIGINT)
-                     |PARTITIONED BY (lang)""".stripMargin)
-        spark.conf.set("spark.graft.write.identityDistribution", mode)
-        try {
-          val (_, t) = timed(
-            spark.sql(s"INSERT INTO $cat.p SELECT * FROM r19p_skew"))
-          val m = Acid.readManifest(s"$root/p", Acid.latestVersion(s"$root/p"))
-          val single = m.files.forall(f =>
-            f.cstats.find(_._1 == "lang").exists(c => c._2 == c._3))
-          println(f"[r19-probe] skewed identity insert ($mode%s): " +
-            f"${t}%5.2fs, ${m.files.size}%d files, all single-valued: $single%s")
-        } finally spark.conf.set(
-          "spark.graft.write.identityDistribution", "rebalance")
-        spark.sql(s"DROP TABLE IF EXISTS $cat.p")
-      }
-    }
-
-    // slimmed fixture end-to-end (the scored row), cold then warm
-    Seq("cold", "warm").foreach { tag =>
-      val (df, tFix) = timed {
-        val r = Acid.queries("tbl_part_evolve")(spark, sfDir)
-        r.collect()
-      }
-      require(df.nonEmpty && df.head.getBoolean(2) && df.head.getBoolean(3) &&
-        df.head.getBoolean(4) && df.head.getBoolean(5),
-        s"fixture booleans regressed: ${df.toSeq}")
-      println(f"[r19-probe] tbl_part_evolve fixture end-to-end ($tag%s): " +
-        f"${tFix}%5.2fs (r18 scored 13.67s, builder 3.74s)")
-    }
-    spark.stop()
-  }
-}

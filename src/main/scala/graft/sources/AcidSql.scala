@@ -1267,10 +1267,12 @@ class AcidSqlTable(dir: String, tableSchema: StructType, pinnedVersion: Int = -1
 
 class AcidRowLevelOperation(dir: String, schema: StructType,
     cmd: RowLevelOperation.Command) extends RowLevelOperation {
-  /** Relative paths of the manifest files the operation's scan planned —
-    * the GROUPS whose content the replace-data write supersedes. Set on
-    * the driver at scan-build time, read at commit time. */
-  @volatile private[sources] var scannedFiles: Seq[String] = Seq.empty
+  /** The manifest entries the operation's scan planned — the GROUPS
+    * whose content the replace-data write supersedes, exactly as read (a
+    * concurrent commit that changed one, even only its deletion vector,
+    * makes the commit refuse). Set on the driver at scan-build time, read
+    * at commit time. */
+  @volatile private[sources] var scannedFiles: Seq[Acid.FileEntry] = Seq.empty
 
   override def command(): RowLevelOperation.Command = cmd
 
@@ -1299,9 +1301,10 @@ class AcidRowLevelOperation(dir: String, schema: StructType,
 /** Copy-on-write replace-data write: tasks stage the rewritten content of
   * the affected groups exactly like an append; the commit swaps
   * `scannedFiles` for the staged files in one atomic manifest move via
-  * `Acid.replaceCommit` (which REFUSES if a concurrent commit already
-  * rewrote an affected file — rebasing would silently drop that writer's
-  * rows, the classic lost-update).
+  * `Acid.replaceCommit`, which REFUSES if a concurrent commit changed an
+  * affected entry — rewrote the file, or kept its path and added a
+  * deletion vector. Rebasing would silently drop that writer's rows (the
+  * classic lost update) or bring its deleted rows back.
   */
 class AcidReplaceGroupsWrite(dir: String, writeSchema: StructType,
     op: AcidRowLevelOperation) extends BatchWrite {
@@ -1317,8 +1320,7 @@ class AcidReplaceGroupsWrite(dir: String, writeSchema: StructType,
     // library merge runs) or partition pruning decays with every rewrite
     val entries = Acid.restampPartStats(SparkSession.active, dir,
       AcidWriteMessages.entriesOf(messages))
-    val v = Acid.replaceCommit(dir, op.scannedFiles.toSet, entries,
-      op = "REWRITE")
+    val v = Acid.replaceCommit(dir, op.scannedFiles, entries, op = "REWRITE")
     // a full-row rewrite writes the table's own shape: when it matches
     // the parent union, the child inherits the cached schemas (r19)
     Acid.seedSchemaCaches(dir, v, Acid.toPhysical(dir, writeSchema))
@@ -2096,7 +2098,7 @@ object AcidAggReaderFactory extends PartitionReaderFactory {
 }
 
 class AcidSqlScanBuilder(dir: String, version: Int, tableSchema: StructType,
-    onPlan: Seq[String] => Unit = _ => (), rowLevel: Boolean = false,
+    onPlan: Seq[Acid.FileEntry] => Unit = _ => (), rowLevel: Boolean = false,
     maxFilesPerTrigger: Option[Int] = None,
     maxBytesPerTrigger: Option[Long] = None)
     extends ScanBuilder with SupportsPushDownFilters
@@ -2999,7 +3001,7 @@ class AcidSqlScanBuilder(dir: String, version: Int, tableSchema: StructType,
       case _ => ranged
     }
     AcidSql.lastScan.put((dir, resolved), (live.size, all0.size))
-    onPlan(live.map(_.path))
+    onPlan(live)
     // Readers receive the PHYSICAL required schema (column-mapped tables)
     // but the scan reports the logical one to Spark — rows are positional,
     // so the translation is free.
@@ -3026,7 +3028,7 @@ class AcidSqlScanBuilder(dir: String, version: Int, tableSchema: StructType,
   */
 class AcidSqlScan(dir: String, live0: Seq[Acid.FileEntry], required: StructType,
     physicalRequired: StructType,
-    onPlan: Seq[String] => Unit = _ => (),
+    onPlan: Seq[Acid.FileEntry] => Unit = _ => (),
     dvKeys: Map[String, Array[Long]] = Map.empty, keyCol: String = "",
     dvPos: Map[String, Array[Long]] = Map.empty, rowLevel: Boolean = false,
     maxFilesPerTrigger: Option[Int] = None,
@@ -3252,7 +3254,7 @@ class AcidSqlScan(dir: String, live0: Seq[Acid.FileEntry], required: StructType,
     }
     keep.foreach { absPaths =>
       live = live.filter(f => absPaths.contains(s"$dir/${f.path}"))
-      onPlan(files)
+      onPlan(live)
     }
     if (rowLevel) return
     // Join-driven runtime file pruning (round-16). NEVER under reported
@@ -3390,7 +3392,8 @@ class AcidSqlScan(dir: String, live0: Seq[Acid.FileEntry], required: StructType,
   // running AFTER PartitionPruning) flips this flag only when BOTH join
   // sides are bare unfiltered graft scans co-partitioned on the join
   // key and no DynamicPruning filter was planted — the lang⋈lang
-  // reporting shape where exchange-free wins 3.5x (Round18Probe). The
+  // reporting shape where exchange-free wins 3.5x (Round18Probe, now in
+  // git history). The
   // fact⋈dim shape keeps runtime pruning untouched. The session knob
   // remains an override: "true" forces reporting, "off"/"false"
   // disables the auto rule, "auto" (default) is rule-driven.

@@ -957,4 +957,70 @@ class AcidSpec extends AnyFunSuite {
       assert(leftover.isEmpty, s"leaked tmp files: $leftover")
     } finally logFiles.close()
   }
+
+  /** The lost-delete interleaving: a rewrite staged from v0, then a
+    * merge-on-read delete that keeps the file's path and adds a deletion
+    * vector, then the rewrite's commit. A path-only conflict check let
+    * the rewrite land as v2 and the deleted row came back; the commit
+    * compares the entries it read byte-for-byte and must refuse. */
+  test("a rewrite refuses to commit over a concurrent merge-on-read delete") {
+    val dir = Scratch.fresh("acid_spec_lost_delete", sf)
+    Acid.create(spark, dir,
+      spark.range(100).select(col("id").as("k"), (col("id") * 10).as("v")), "k", 1)
+    val read = Acid.readManifest(dir, 0).files
+    assert(read.size == 1)
+    // stage the rewrite of v0 into one file, as a row-level UPDATE would
+    Acid.snapshot(spark, dir, 0).withColumn("v", col("v") + 1)
+      .coalesce(1).write.parquet(s"$dir/d_rewrite")
+    val rel = {
+      val ls = Files.list(Paths.get(dir, "d_rewrite"))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".parquet")).toSeq.head
+      finally ls.close()
+    }
+    val staged = Seq(Acid.FileEntry(s"d_rewrite/$rel", 100L, 0L, 99L))
+    // the concurrent delete lands first: same path, new deletion vector
+    Acid.deleteWhereMor(spark, dir, col("k") === 5L, Some((5L, 5L)), "mor")
+    assert(Acid.latestVersion(dir) == 1)
+    assert(Acid.readManifest(dir, 1).files.map(_.path) == read.map(_.path))
+    val r = Try(Acid.replaceCommit(dir, read, staged, op = "REWRITE"))
+    assert(r.isFailure, s"the rewrite committed as v${r.getOrElse(-1)}")
+    assert(Acid.latestVersion(dir) == 1)
+    assert(Acid.snapshot(spark, dir).filter(col("k") === 5L).count() == 0L,
+      "the deleted row must stay deleted")
+  }
+
+  /** One writer per file, each merging a single key from the middle of a
+    * different file's manifest range: every lost race rebases metadata
+    * only (at most 7 per writer, inside the commit loop's budget of 10),
+    * so no writer re-runs its merge and every committed stage is the
+    * first attempt's `a0` directory. */
+  test("disjoint concurrent merges all land without re-applying") {
+    import spark.implicits._
+    val dir = Scratch.fresh("acid_spec_disjoint8", sf)
+    Acid.create(spark, dir,
+      spark.range(800).select(col("id").as("k"), lit(0L).as("v")), "k", 8)
+    val files = Acid.readManifest(dir, 0).files
+    assert(files.size == 8)
+    val keys = files.map(f => f.minKey + (f.maxKey - f.minKey) / 2)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = keys.zipWithIndex.map { case (k, i) =>
+      val th = new Thread(() => {
+        Acid.merge(spark, dir, Seq((k, 1L)).toDF("k", "v"), s"w$i"): Unit
+      })
+      th.setUncaughtExceptionHandler((_, e) => { errs.add(e); () })
+      th
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(errs.isEmpty, s"writer thread failed: ${Option(errs.peek())}")
+    assert(Acid.latestVersion(dir) == 8, "all eight commits must land")
+    val snap = Acid.snapshot(spark, dir)
+    assert(snap.count() == 800L)
+    assert(snap.filter(col("v") === 1L).select("k").as[Long].collect().sorted
+      .toSeq == keys.sorted, "every writer's row must apply exactly once")
+    val stages = Acid.readManifest(dir, 8).files
+      .map(_.path.takeWhile(_ != '/')).filterNot(_ == "d0_init").distinct
+    assert(stages.size == 8 && stages.forall(_.endsWith("a0")),
+      s"a writer re-ran its merge: $stages")
+  }
 }

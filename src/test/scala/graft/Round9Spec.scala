@@ -459,7 +459,7 @@ class Round9Spec extends AnyFunSuite {
     assert(a.exists(_.version == 1))
     // B from the stale base, disjoint key range: loses the race for v1,
     // lands v2 WITHOUT re-running — its d1_B files commit as written
-    val b = Acid.mergeAt(spark, dir, 0, batchB, "B", disjointRebase = true)
+    val b = Acid.mergeAt(spark, dir, 0, batchB, "B")
     assert(b.exists(_.version == 2))
     val v2 = Acid.readManifest(dir, 2).files
     assert(v2.exists(_.path.startsWith("d1_B")),
@@ -471,7 +471,7 @@ class Round9Spec extends AnyFunSuite {
     // C from the stale base touching the files A rewrote: REFUSED, not
     // silently rebased (lost-update protection)
     val batchC = Seq((10L, -100L)).toDF("k", "v")
-    val c = Acid.mergeAt(spark, dir, 0, batchC, "C", disjointRebase = true)
+    val c = Acid.mergeAt(spark, dir, 0, batchC, "C")
     assert(c.isLeft && c.swap.exists(_.contains("overlap conflict")))
     // concurrent APPEND inside the batch key range also refuses: the
     // merge's matched/unmatched classification could be stale
@@ -484,7 +484,7 @@ class Round9Spec extends AnyFunSuite {
     }
     val rel = s"$dd/${Paths.get(part).getFileName}"
     assert(Acid.appendCommit(dir, Seq(Acid.FileEntry(rel, 1L, 750L, 750L))) === 3)
-    val e = Acid.mergeAt(spark, dir, 2, batchB, "E", disjointRebase = true)
+    val e = Acid.mergeAt(spark, dir, 2, batchB, "E")
     assert(e.isLeft && e.swap.exists(_.contains("overlap conflict")),
       "an interleaved append inside the batch range must refuse the rebase")
   }

@@ -9,8 +9,8 @@ import graft.{Scratch, TestSpark}
   * (round-14 verdict missing #1): untruncated min/max of a wide text
   * column — the `documents.text` LLM-corpus shape — embed two whole
   * documents per manifest entry, and at O(50k) entries that bloats the
-  * metadata tier Round14Probe proved fast from MBs into GBs. The lower
-  * bound truncates to a ≤16-code-point prefix (≤ the value under UTF-8
+  * metadata tier Round14Probe (now in git history) proved fast from MBs
+  * into GBs. The lower bound truncates to a ≤16-code-point prefix (≤ the value under UTF-8
   * order by construction); the upper truncates then INCREMENTS its last
   * code point (≥ the value: the first differing position carries the
   * larger code point, and UTF-8 encodes code-point order), skipping the

@@ -567,7 +567,7 @@ class Round16Spec extends AnyFunSuite {
       .filter(col("score") === 999.25).count() === 1L)
   }
 
-  /** Round16Probe measured the sizeInBytes row heuristic 20x OVER on a
+  /** Round16Probe (now in git history) measured the sizeInBytes row heuristic 20x OVER on a
     * real post-shuffle foreachBatch micro-batch (est 20131, actual 1000)
     * — past the r15 verdict's 10x line, so the bloom floor can no longer
     * trust an inexact estimate near the floor: inside the measured error
