@@ -76,32 +76,6 @@ object Xml {
       .orderBy(col("n_nationkey"))
   }
 
-  /** Path-aware XML record splitting — the reference XML Reader's node
-    * path is an element PATH (`/catalog/book`), not a tag name: a document
-    * with the same tag at two depths must split only at the declared path.
-    * Spark's `rowTag` option matches the tag anywhere, so this reader keeps
-    * an ancestor stack with a single-pass StAX scan and captures exactly
-    * the subtrees whose full path equals the node path; the snippets then
-    * flow through the codegen'd `from_xml` for typed extraction.
-    *
-    * Scale shape: parallel ACROSS files (one task per file — the layout a
-    * 100 TB XML corpus actually has); within one file the scan is
-    * sequential because ancestor context is a prefix property of the
-    * document — the same contract as the reference's StAX chunker. Nested
-    * same-name tags inside a captured record stay part of that record and
-    * never re-trigger capture.
-    *
-    * Path steps match element LOCAL names — optionally qualified by a
-    * namespace URI via a prefix resolved from the caller's bindings (see
-    * parseNodePath) — and each step may carry one `[@attr='value']` (or
-    * double-quoted) attribute predicate, evaluated at the step's own
-    * start tag — see PathStep. Captured subtrees RE-INJECT ancestor
-    * namespace declarations the record element doesn't redeclare (round
-    * 9 — closes the former documented limitation): a feed binding
-    * prefixes on the document root (the common real-world shape) yields
-    * snippets whose prefixes stay bound, in both this reader and the
-    * byte-level split reader.
-    */
   /** One step of a node path: an element local name plus an optional
     * `[@attr='value']` attribute predicate (single or double quotes) —
     * the XPath subset a split-time reader can evaluate from the start
@@ -156,128 +130,194 @@ object Xml {
     * one 100 GB feed must not become a one-task straggler. */
   private val SplitThresholdBytes = 32L << 20
 
+  /** `.xml` files of `dir` with their sizes, in name order. */
+  private def listXml(dir: String): Seq[(String, Long)] = {
+    val listing = Files.list(Paths.get(dir))
+    try listing.toArray.map(_.toString).filter(_.endsWith(".xml")).sorted.toSeq
+      .map(f => f -> Files.size(Paths.get(f)))
+    finally listing.close()
+  }
+
+  /** Spark's `FilePartition.getFilePartitions` rule over `items`, kept in
+    * order: a bin closes when its bytes plus the next item's size exceed
+    * `target`, and each item charges its size plus
+    * `spark.sql.files.openCostInBytes`. Both node-path readers pack their
+    * parse tasks with it, so twelve small files become as many tasks as
+    * Spark's own file sources would give them, not twelve.
+    */
+  private[graft] def packBins[A](items: Seq[A], conf: SQLConf, target: Long)(
+      size: A => Long): Seq[Seq[A]] = {
+    val openCost = conf.filesOpenCostInBytes
+    val bins = Seq.newBuilder[Seq[A]]
+    var bin = Vector.empty[A]; var bytes = 0L
+    items.foreach { it =>
+      if (bin.nonEmpty && bytes + size(it) > target) { bins += bin; bin = Vector.empty; bytes = 0L }
+      bytes += size(it) + openCost; bin :+= it
+    }
+    if (bin.nonEmpty) bins += bin
+    bins.result()
+  }
+
+  /** Path-aware XML record splitting — the reference XML Reader's node
+    * path is an element PATH (`/catalog/book`), not a tag name: a document
+    * with the same tag at two depths must split only at the declared path.
+    * Spark's `rowTag` option matches the tag anywhere, so this reader keeps
+    * an ancestor stack with a single-pass StAX scan and captures exactly
+    * the subtrees whose full path equals the node path; the snippets then
+    * flow through the codegen'd `from_xml` for typed extraction.
+    *
+    * Scale shape: parallel ACROSS files. Consecutive files (in name order)
+    * are packed into tasks by `packBins` at the `splitTargetBytes` target,
+    * Spark's file-partition rule, so a directory of small files parses in
+    * as many tasks as Spark's own file sources would use (12 files of
+    * ~40 KB: 4 tasks on 4 cores, not 12) and each task builds its three
+    * StAX factories once. Records come out in file order, then document
+    * order, as with one task per file. Within one file the scan is
+    * sequential because ancestor context is a prefix property of the
+    * document — the same contract as the reference's StAX chunker; a file
+    * over `SplitThresholdBytes` sends the whole directory to
+    * `readXmlNodePathSplit`. Nested same-name tags inside a captured
+    * record stay part of that record and never re-trigger capture.
+    *
+    * Path steps match element LOCAL names — optionally qualified by a
+    * namespace URI via a prefix resolved from the caller's bindings (see
+    * parseNodePath) — and each step may carry one `[@attr='value']` (or
+    * double-quoted) attribute predicate, evaluated at the step's own
+    * start tag — see PathStep. Captured subtrees RE-INJECT ancestor
+    * namespace declarations the record element doesn't redeclare (round
+    * 9 — closes the former documented limitation): a feed binding
+    * prefixes on the document root (the common real-world shape) yields
+    * snippets whose prefixes stay bound, in both this reader and the
+    * byte-level split reader.
+    */
   def readXmlNodePath(s: SparkSession, dir: String, nodePath: String,
       ns: Map[String, String] = Map.empty): DataFrame = {
     import s.implicits._
     val path = parseNodePath(nodePath, ns)
-    val listing = Files.list(Paths.get(dir))
-    val files =
-      try listing.toArray.map(_.toString).filter(_.endsWith(".xml")).sorted
-      finally listing.close()
-    if (files.exists(f => Files.size(Paths.get(f)) > SplitThresholdBytes)) {
+    val files = listXml(dir)
+    if (files.exists(_._2 > SplitThresholdBytes)) {
       require(path.forall(_.nsUri.isEmpty),
         "namespace-qualified node paths are not supported by the intra-file " +
           "split reader (byte-level tag scan has no in-scope prefix table)")
       return readXmlNodePathSplit(s, dir, nodePath)
     }
-    s.sparkContext.parallelize(files.toSeq, math.max(files.length, 1))
-      .flatMap { file =>
+    val conf = s.sessionState.conf
+    val bins = packBins(files, conf,
+      splitTargetBytes(conf, s.sparkContext.defaultParallelism, files.map(_._2)))(_._2)
+    s.sparkContext.parallelize(bins.map(_.map(_._1)), math.max(bins.size, 1))
+      .flatMap { bin =>
         import javax.xml.stream.{XMLEventFactory, XMLInputFactory, XMLOutputFactory}
-        import javax.xml.stream.events.Namespace
         val xif = XMLInputFactory.newInstance()
         xif.setProperty(XMLInputFactory.SUPPORT_DTD, false)
         xif.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
         xif.setProperty(XMLInputFactory.IS_COALESCING, true)
         val xof = XMLOutputFactory.newInstance()
         val xef = XMLEventFactory.newInstance()
-        val in = Files.newInputStream(Paths.get(file))
-        try {
-          val reader = xif.createXMLEventReader(in, "UTF-8")
-          val stack = scala.collection.mutable.ArrayBuffer.empty[String]
-          // okStack(i) = levels 1..i+1 all match the path prefix (names AND
-          // attribute predicates) — predicates are a start-tag property, so
-          // each level's verdict is final at push time and ancestors'
-          // verdicts are simply carried down the stack.
-          val okStack = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-          // nsStack(i) = CUMULATIVE in-scope namespace bindings (prefix →
-          // URI, "" = default) at depth i+1 — the ancestor context a
-          // captured subtree would lose at re-serialization (round-9
-          // verdict #4): missing bindings are re-injected onto the record
-          // start element so root-declared feeds (the common real-world
-          // shape) yield well-formed, prefix-bound snippets.
-          val nsStack = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
-          val out = scala.collection.mutable.ListBuffer.empty[String]
-          var sw: java.io.StringWriter = null
-          var writer: javax.xml.stream.XMLEventWriter = null
-          var captureDepth = -1
-          while (reader.hasNext) {
-            val ev = reader.nextEvent()
-            if (ev.isStartElement) {
-              val se = ev.asStartElement
-              stack += se.getName.getLocalPart
-              val declared = {
-                var m = Map.empty[String, String]
-                val it = se.getNamespaces
-                while (it.hasNext) {
-                  val n = it.next().asInstanceOf[Namespace]
-                  m += (Option(n.getPrefix).getOrElse("") -> n.getNamespaceURI)
-                }
-                m
-              }
-              val parentNs =
-                if (nsStack.isEmpty) Map.empty[String, String] else nsStack.last
-              nsStack += (parentNs ++ declared)
-              val depth = stack.size
-              val ok = (depth == 1 || okStack(depth - 2)) &&
-                depth <= path.size && {
-                  val step = path(depth - 1)
-                  step.name == stack(depth - 1) &&
-                    step.nsUri.forall(u => se.getName.getNamespaceURI == u) &&
-                    step.pred.forall { case (a, v) =>
-                      val attr = se.getAttributeByName(
-                        new javax.xml.namespace.QName(a))
-                      attr != null && attr.getValue == v
-                    }
-                }
-              okStack += ok
-              var evOut: javax.xml.stream.events.XMLEvent = ev
-              if (captureDepth < 0 && depth == path.size && ok) {
-                captureDepth = stack.size
-                sw = new java.io.StringWriter()
-                writer = xof.createXMLEventWriter(sw)
-                // re-inject ancestor bindings the record doesn't redeclare
-                val missing = parentNs.filterNot { case (p, _) => declared.contains(p) }
-                if (missing.nonEmpty) {
-                  val nss = new java.util.ArrayList[Namespace]()
-                  val it = se.getNamespaces
-                  while (it.hasNext) nss.add(it.next().asInstanceOf[Namespace])
-                  missing.toSeq.sorted.foreach { case (p, u) =>
-                    nss.add(if (p.isEmpty) xef.createNamespace(u)
-                            else xef.createNamespace(p, u))
-                  }
-                  evOut = xef.createStartElement(
-                    se.getName, se.getAttributes, nss.iterator())
-                }
-              }
-              if (captureDepth > 0) writer.add(evOut)
-            } else if (ev.isEndElement) {
-              if (captureDepth > 0) {
-                writer.add(ev)
-                if (stack.size == captureDepth) {
-                  writer.close()
-                  out += sw.toString
-                  captureDepth = -1
-                }
-              }
-              stack.remove(stack.size - 1)
-              okStack.remove(okStack.size - 1)
-              nsStack.remove(nsStack.size - 1)
-            } else if (captureDepth > 0 && (ev.isCharacters ||
-                ev.getEventType == javax.xml.stream.XMLStreamConstants.CDATA ||
-                ev.getEventType == javax.xml.stream.XMLStreamConstants.COMMENT ||
-                ev.getEventType ==
-                  javax.xml.stream.XMLStreamConstants.PROCESSING_INSTRUCTION)) {
-              // Comments and PIs inside a record are part of the subtree —
-              // forward them so snippets stay faithful to the source
-              // (harmless to from_xml). Ancestor namespace declarations
-              // remain the one documented infidelity.
-              writer.add(ev)
-            }
-          }
-          out.toList
-        } finally in.close()
+        bin.iterator.flatMap(file => staxRecords(file, path, xif, xof, xef))
       }
       .toDF("xml")
+  }
+
+  /** The StAX scan of one file: every subtree at `path`, re-serialized. */
+  private def staxRecords(file: String, path: Seq[PathStep],
+      xif: javax.xml.stream.XMLInputFactory, xof: javax.xml.stream.XMLOutputFactory,
+      xef: javax.xml.stream.XMLEventFactory): List[String] = {
+    import javax.xml.stream.events.Namespace
+    val in = Files.newInputStream(Paths.get(file))
+    try {
+      val reader = xif.createXMLEventReader(in, "UTF-8")
+      val stack = scala.collection.mutable.ArrayBuffer.empty[String]
+      // okStack(i) = levels 1..i+1 all match the path prefix (names AND
+      // attribute predicates) — predicates are a start-tag property, so
+      // each level's verdict is final at push time and ancestors'
+      // verdicts are simply carried down the stack.
+      val okStack = scala.collection.mutable.ArrayBuffer.empty[Boolean]
+      // nsStack(i) = CUMULATIVE in-scope namespace bindings (prefix →
+      // URI, "" = default) at depth i+1 — the ancestor context a
+      // captured subtree would lose at re-serialization (round-9
+      // verdict #4): missing bindings are re-injected onto the record
+      // start element so root-declared feeds (the common real-world
+      // shape) yield well-formed, prefix-bound snippets.
+      val nsStack = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
+      val out = scala.collection.mutable.ListBuffer.empty[String]
+      var sw: java.io.StringWriter = null
+      var writer: javax.xml.stream.XMLEventWriter = null
+      var captureDepth = -1
+      while (reader.hasNext) {
+        val ev = reader.nextEvent()
+        if (ev.isStartElement) {
+          val se = ev.asStartElement
+          stack += se.getName.getLocalPart
+          val declared = {
+            var m = Map.empty[String, String]
+            val it = se.getNamespaces
+            while (it.hasNext) {
+              val n = it.next().asInstanceOf[Namespace]
+              m += (Option(n.getPrefix).getOrElse("") -> n.getNamespaceURI)
+            }
+            m
+          }
+          val parentNs =
+            if (nsStack.isEmpty) Map.empty[String, String] else nsStack.last
+          nsStack += (parentNs ++ declared)
+          val depth = stack.size
+          val ok = (depth == 1 || okStack(depth - 2)) &&
+            depth <= path.size && {
+              val step = path(depth - 1)
+              step.name == stack(depth - 1) &&
+                step.nsUri.forall(u => se.getName.getNamespaceURI == u) &&
+                step.pred.forall { case (a, v) =>
+                  val attr = se.getAttributeByName(
+                    new javax.xml.namespace.QName(a))
+                  attr != null && attr.getValue == v
+                }
+            }
+          okStack += ok
+          var evOut: javax.xml.stream.events.XMLEvent = ev
+          if (captureDepth < 0 && depth == path.size && ok) {
+            captureDepth = stack.size
+            sw = new java.io.StringWriter()
+            writer = xof.createXMLEventWriter(sw)
+            // re-inject ancestor bindings the record doesn't redeclare
+            val missing = parentNs.filterNot { case (p, _) => declared.contains(p) }
+            if (missing.nonEmpty) {
+              val nss = new java.util.ArrayList[Namespace]()
+              val it = se.getNamespaces
+              while (it.hasNext) nss.add(it.next().asInstanceOf[Namespace])
+              missing.toSeq.sorted.foreach { case (p, u) =>
+                nss.add(if (p.isEmpty) xef.createNamespace(u)
+                        else xef.createNamespace(p, u))
+              }
+              evOut = xef.createStartElement(
+                se.getName, se.getAttributes, nss.iterator())
+            }
+          }
+          if (captureDepth > 0) writer.add(evOut)
+        } else if (ev.isEndElement) {
+          if (captureDepth > 0) {
+            writer.add(ev)
+            if (stack.size == captureDepth) {
+              writer.close()
+              out += sw.toString
+              captureDepth = -1
+            }
+          }
+          stack.remove(stack.size - 1)
+          okStack.remove(okStack.size - 1)
+          nsStack.remove(nsStack.size - 1)
+        } else if (captureDepth > 0 && (ev.isCharacters ||
+            ev.getEventType == javax.xml.stream.XMLStreamConstants.CDATA ||
+            ev.getEventType == javax.xml.stream.XMLStreamConstants.COMMENT ||
+            ev.getEventType ==
+              javax.xml.stream.XMLStreamConstants.PROCESSING_INSTRUCTION)) {
+          // Comments and PIs inside a record are part of the subtree —
+          // forward them so snippets stay faithful to the source
+          // (harmless to from_xml).
+          writer.add(ev)
+        }
+      }
+      out.toList
+    } finally in.close()
   }
 
   // ========================================================================
@@ -340,7 +380,8 @@ object Xml {
     * value text, "" = the default namespace). Values stay source-raw so
     * re-serialization preserves the original escaping. */
   private def nsDeclsOf(tagStr: String): Map[String, String] =
-    AttrRe.findAllMatchIn(tagStr).flatMap { m =>
+    if (!tagStr.contains("xmlns")) Map.empty
+    else AttrRe.findAllMatchIn(tagStr).flatMap { m =>
       val name = m.group(1)
       val v = if (m.group(2) != null) m.group(2) else m.group(3)
       if (name == "xmlns") Some("" -> v)
@@ -362,6 +403,45 @@ object Xml {
     tagStr.substring(0, cut) + decls + tagStr.substring(cut)
   }
 
+  /** Unsynchronized growable byte buffer for the scanner's tag and record
+    * bytes (a `ByteArrayOutputStream` locks on every write). */
+  private final class ByteBuf {
+    var arr = new Array[Byte](256)
+    var len = 0
+    def reset(): Unit = len = 0
+    def add(b: Int): Unit = {
+      if (len == arr.length) grow(1)
+      arr(len) = b.toByte; len += 1
+    }
+    def add(src: Array[Byte], off: Int, n: Int): Unit = {
+      if (len + n > arr.length) grow(n)
+      System.arraycopy(src, off, arr, len, n); len += n
+    }
+    private def grow(n: Int): Unit =
+      arr = java.util.Arrays.copyOf(arr, math.max(arr.length * 2, len + n))
+    def utf8: String = new String(arr, 0, len, java.nio.charset.StandardCharsets.UTF_8)
+  }
+
+  /** A token terminator with its KMP failure table: the search is the exact
+    * substring automaton ("]]>" is found in "]]]>") at one compare per
+    * byte, with nothing allocated. */
+  private final class Terminator(t: String) {
+    val bytes: Array[Byte] = t.getBytes("US-ASCII")
+    val fail: Array[Int] = {
+      val f = new Array[Int](bytes.length); var k = 0
+      for (i <- 1 until bytes.length) {
+        while (k > 0 && bytes(i) != bytes(k)) k = f(k - 1)
+        if (bytes(i) == bytes(k)) k += 1
+        f(i) = k
+      }
+      f
+    }
+  }
+  private val CommentEnd = new Terminator("->") // searched from after "<!-"
+  private val CdataEnd = new Terminator("]]>")
+  private val PiEnd = new Terminator("?>")
+  private val TagEnd = new Terminator(">") // end tags, DOCTYPE (no internal subsets)
+
   /** One byte-level path-aware scan. `seedOk` pre-seeds the ancestor
     * match flags (phase 2 passes all-true for a planned record start; the
     * parallel planner's pass B passes the exact flags of the stitched
@@ -373,6 +453,17 @@ object Xml {
     * `captureBytes`, each record's bytes are passed to `onRecord`, the
     * start tag rewritten to re-declare any ancestor binding the record
     * doesn't carry itself.
+    *
+    * The per-byte work is a compare in the read buffer: a run of text up
+    * to the next `<`, a comment/CDATA/PI/end-tag/DOCTYPE body up to its
+    * terminator and a start tag up to its unquoted `>` are each scanned in
+    * place and, inside a record, copied into the record buffer in one
+    * block. Only start tags at depth ≤ the path length are decoded to a
+    * string and run through `startTagOk` and `nsDeclsOf`. A deeper start
+    * tag is skipped: it can neither match a step nor start a capture
+    * (records start at exactly the path's depth), and no capture reads its
+    * namespace scope (a record re-declares its PARENT's scope), so it
+    * pushes `ok = false` and its parent's scope unread.
     */
   private def scanPath(in: java.io.InputStream, base: Long, path: Seq[PathStep],
       seedOk: Seq[Boolean], seedNs: Map[String, String], captureBytes: Boolean,
@@ -380,90 +471,110 @@ object Xml {
       onRecord: String => Unit): Unit = {
     val buf = new Array[Byte](1 << 16)
     var bufLen = 0; var bufI = 0; var pos = base
-    def next(): Int = {
-      if (bufI >= bufLen) { bufLen = in.read(buf); bufI = 0; if (bufLen <= 0) return -1 }
-      val b = buf(bufI); bufI += 1; pos += 1; b & 0xFF
+    // whether unread bytes remain, refilling the drained buffer
+    def fill(): Boolean =
+      bufI < bufLen || { bufLen = in.read(buf); bufI = 0; bufLen > 0 }
+    def next(): Int =
+      if (!fill()) -1 else { val b = buf(bufI); bufI += 1; pos += 1; b & 0xFF }
+    // consume the next n buffered bytes, copying them to `to` unless null
+    def take(n: Int, to: ByteBuf): Unit = {
+      if (to != null) to.add(buf, bufI, n)
+      bufI += n; pos += n
     }
+    val recordDepth = path.size
     val okStack = scala.collection.mutable.ArrayBuffer.from(seedOk)
     // cumulative in-scope bindings per open depth, aligned with okStack;
     // seeded levels collapse to the caller's seedNs (their declarations
     // live before the seek point)
     val nsStack = scala.collection.mutable.ArrayBuffer.fill(seedOk.size)(seedNs)
-    val cap = new java.io.ByteArrayOutputStream()
-    val tag = new java.io.ByteArrayOutputStream()
+    val cap = new ByteBuf
+    val tag = new ByteBuf
     var capturing = false
     var captureDepth = -1
 
-    // consume a start/end/special tag into `tag` (already holding "<" + b1).
-    // Returns (selfClosing) for start tags; quote-aware '>' detection.
-    def readStartRest(): Boolean = {
+    // consume the rest of a start tag ("<" and its first byte already
+    // taken), quote-aware: a '>' inside a quoted value does not end it.
+    // Returns whether it self-closes.
+    def readStartRest(to: ByteBuf): Boolean = {
       var q = 0 // 0 = outside quotes, else the quote char
       var prev = 0
-      while (true) {
-        val b = next(); if (b < 0) return false
-        tag.write(b)
-        if (q == 0 && (b == '"' || b == '\'')) q = b
-        else if (q != 0 && b == q) q = 0
-        else if (q == 0 && b == '>') return prev == '/'
-        if (b != '>') prev = b
+      while (fill()) {
+        val n = bufLen; var i = bufI; var end = false
+        while (!end && i < n) {
+          val b = buf(i) & 0xFF
+          if (q == 0 && (b == '"' || b == '\'')) q = b
+          else if (q != 0 && b == q) q = 0
+          else if (q == 0 && b == '>') end = true
+          if (b != '>') prev = b
+          i += 1
+        }
+        take(i - bufI, to)
+        if (end) return prev == '/'
       }
       false
     }
-    def readUntil(term: String): Unit = {
-      val t = term.getBytes; var m = 0
-      while (m < t.length) {
-        val b = next(); if (b < 0) return
-        tag.write(b)
-        // exact substring automaton (the naive two-case reset missed
-        // overlapping prefixes: "]]>" in "]]]>"): longest k ≤ m+1 with
-        // (matched + b) ending in t[0..k)
-        var k = math.min(m + 1, t.length)
-        while (k > 0 && !((0 until k).forall(j =>
-          (if (j == k - 1) b else t(m - (k - 1) + j) & 0xFF) == (t(j) & 0xFF)))) k -= 1
-        m = k
+    // consume through the first occurrence of `t`, matched from here on
+    def readUntil(t: Terminator, to: ByteBuf): Unit = {
+      val tb = t.bytes; val fail = t.fail; var m = 0
+      while (m < tb.length && fill()) {
+        val n = bufLen; var i = bufI
+        while (m < tb.length && i < n) {
+          val b = buf(i)
+          while (m > 0 && b != tb(m)) m = fail(m - 1)
+          if (b == tb(m)) m += 1
+          i += 1
+        }
+        take(i - bufI, to)
       }
     }
 
     while (true) {
       if (!capturing && stopAt >= 0 && pos >= stopAt) return
-      val b = next(); if (b < 0) return
-      if (b != '<') { if (capturing) cap.write(b) }
+      if (!fill()) return
+      val n = bufLen; var i = bufI
+      while (i < n && buf(i) != '<') i += 1
+      if (i > bufI) take(i - bufI, if (capturing) cap else null) // text run
       else {
-        val ltOff = pos - 1
-        tag.reset(); tag.write('<')
+        val ltOff = pos
+        take(1, null)
         val b1 = next(); if (b1 < 0) return
-        tag.write(b1)
+        val to = if (capturing) cap else null
         b1 match {
           case '!' =>
             val b2 = next(); if (b2 < 0) return
-            tag.write(b2)
-            if (b2 == '-') readUntil("->") // "<!-" + "-" then scan to "-->"
-            else if (b2 == '[') readUntil("]]>") // CDATA
-            else readUntil(">") // DOCTYPE etc (no internal subsets)
-            if (capturing) cap.write(tag.toByteArray)
+            if (to != null) { to.add('<'); to.add('!'); to.add(b2) }
+            readUntil(if (b2 == '-') CommentEnd else if (b2 == '[') CdataEnd else TagEnd, to)
           case '?' =>
-            readUntil("?>")
-            if (capturing) cap.write(tag.toByteArray)
+            if (to != null) { to.add('<'); to.add('?') }
+            readUntil(PiEnd, to)
           case '/' =>
-            readUntil(">")
-            if (capturing) cap.write(tag.toByteArray)
+            if (to != null) { to.add('<'); to.add('/') }
+            readUntil(TagEnd, to)
             if (capturing && okStack.size == captureDepth) {
-              onRecord(cap.toString("UTF-8")); cap.reset()
+              onRecord(cap.utf8); cap.reset()
               capturing = false; captureDepth = -1
             }
             if (okStack.nonEmpty) okStack.remove(okStack.size - 1)
             if (nsStack.nonEmpty) nsStack.remove(nsStack.size - 1)
+          case _ if okStack.size >= recordDepth =>
+            // deeper than a record start: no name, predicate or xmlns work
+            if (to != null) { to.add('<'); to.add(b1) }
+            if (!readStartRest(to)) {
+              okStack += false
+              nsStack += (if (nsStack.isEmpty) seedNs else nsStack.last)
+            }
           case _ =>
-            val selfClosing = readStartRest()
-            val tagStr = tag.toString("UTF-8")
+            tag.reset(); tag.add('<'); tag.add(b1)
+            val selfClosing = readStartRest(tag)
+            val tagStr = tag.utf8
             val depth = okStack.size + 1
             val ok = startTagOk(path, depth == 1 || okStack(depth - 2), depth, tagStr)
             okStack += ok
             val parentNs = if (nsStack.isEmpty) seedNs else nsStack.last
             val declared = nsDeclsOf(tagStr)
-            nsStack += (parentNs ++ declared)
+            nsStack += (if (declared.isEmpty) parentNs else parentNs ++ declared)
             var justStarted = false
-            if (captureDepth < 0 && depth == path.size && ok) {
+            if (captureDepth < 0 && depth == recordDepth && ok) {
               onRecordStart(ltOff, parentNs)
               if (captureBytes) { capturing = true; cap.reset(); justStarted = true }
               captureDepth = depth // suppresses nested same-path re-trigger
@@ -473,13 +584,14 @@ object Xml {
                 if (justStarted)
                   parentNs.filterNot { case (p, _) => declared.contains(p) }
                 else Map.empty[String, String]
-              if (missing.nonEmpty)
-                cap.write(injectNs(tagStr, missing).getBytes("UTF-8"))
-              else cap.write(tag.toByteArray)
+              if (missing.nonEmpty) {
+                val b = injectNs(tagStr, missing).getBytes("UTF-8")
+                cap.add(b, 0, b.length)
+              } else cap.add(tag.arr, 0, tag.len)
             }
             if (selfClosing) {
               if (capturing && okStack.size == captureDepth) {
-                onRecord(cap.toString("UTF-8")); cap.reset()
+                onRecord(cap.utf8); cap.reset()
                 capturing = false; captureDepth = -1
               }
               if (!captureBytes && okStack.size == captureDepth) captureDepth = -1
@@ -554,8 +666,11 @@ object Xml {
   //     unchanged and output is record-identical to the sequential
   //     planner (Round7Spec pins it on a hazard-dense fixture).
   //
-  // The sequential planner stays as the small-file fast path; files
-  // larger than 2× the target go through this one.
+  // The sequential planner stays as the small-file fast path: files up to
+  // 2× the target plan with it, one task each, and their ranges then share
+  // parse tasks by Spark's file-partition rule (`packBins`), as small files
+  // do on the StAX path; files larger than 2× the target go through this
+  // one.
   // ========================================================================
 
   /** Lexical exit of a chunk scan. `kind`: "content", a pending token
@@ -962,35 +1077,39 @@ object Xml {
     * listing by `splitTargetBytes` (Spark's file-partition rule), so a
     * file's ranges spread over the session's cores. Phase 1 plans offsets
     * only — no record materialization, no shuffle; the collected ranges
-    * are metadata-sized. Phase 2 is embarrassingly parallel over ranges.
+    * are metadata-sized. Files up to 2× the target plan with the
+    * sequential `planSplits`, one task each; bigger ones with the chunked
+    * `planSplitsParallel`. Phase 2 is embarrassingly parallel over
+    * ranges, which `packBins` packs by the same rule in file and offset
+    * order: a big file's ~target-sized ranges keep a task each, while the
+    * ranges of small files share tasks, so the records come out in the
+    * same order as one task per range would give.
     */
   def readXmlNodePathSplit(s: SparkSession, dir: String, nodePath: String,
       targetSplitBytes: Long = 0L): DataFrame = {
     import s.implicits._
     val path = parseNodePath(nodePath)
-    val listing = Files.list(Paths.get(dir))
-    val files =
-      try listing.toArray.map(_.toString).filter(_.endsWith(".xml")).sorted
-        .map(f => f -> Files.size(Paths.get(f)))
-      finally listing.close()
+    val files = listXml(dir)
+    val conf = s.sessionState.conf
     val target =
       if (targetSplitBytes > 0) targetSplitBytes
-      else splitTargetBytes(s.sessionState.conf, s.sparkContext.defaultParallelism,
-        files.map(_._2).toSeq)
+      else splitTargetBytes(conf, s.sparkContext.defaultParallelism, files.map(_._2))
     // Small files: one sequential planning task per file (cheap constant).
     // Big files (> 2× target): the chunked parallel planner — a 100 GB
     // single file's planning pass is no longer one thread.
     val (big, small) = files.partition(_._2 > 2L * target)
     val smallRanges =
       if (small.isEmpty) Seq.empty
-      else s.sparkContext.parallelize(small.toSeq.map(_._1), small.length)
+      else s.sparkContext.parallelize(small.map(_._1), small.length)
         .flatMap(f => planSplits(f, path, target))
         .collect().toSeq
     val ranges = (smallRanges ++
-      big.toSeq.flatMap(f => planSplitsParallel(s, f._1, path, target)))
+      big.flatMap(f => planSplitsParallel(s, f._1, path, target)))
       .sortBy(r => (r.file, r.start))
-    s.sparkContext.parallelize(ranges, math.max(ranges.length, 1))
-      .flatMap { r =>
+    val sizes = files.toMap
+    val bins = packBins(ranges, conf, target)(r => math.min(r.end, sizes(r.file)) - r.start)
+    s.sparkContext.parallelize(bins, math.max(bins.size, 1))
+      .flatMap(_.flatMap { r =>
         val out = scala.collection.mutable.ListBuffer.empty[String]
         val ch = java.nio.channels.FileChannel.open(Paths.get(r.file))
         try {
@@ -1001,7 +1120,7 @@ object Xml {
             onRecordStart = (_, _) => (), onRecord = out += _)
         } finally ch.close()
         out.toList
-      }
+      })
       .toDF("xml")
   }
 

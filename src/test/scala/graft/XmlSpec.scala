@@ -2,8 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -191,5 +193,84 @@ class XmlSpec extends AnyFunSuite {
     val seq = read(1L << 30)
     assert(seq.size == 6001 && seq(3000).contains("wide"))
     assert(read(128L << 10) == seq)
+  }
+
+  /** A catalog of `n` books from key `k0`: two in three bind to
+    * urn:graft:books through the root-declared `x:` prefix, the third to a
+    * decoy URI through `d:`. About 70 bytes a book. */
+  private def catalogDoc(k0: Int, n: Int): String =
+    (k0 until k0 + n).map { k =>
+      val p = if (k % 3 == 2) "d" else "x"
+      s"""  <$p:book key="$k"><name>n$k</name><region>${k % 5}</region></$p:book>"""
+    }.mkString("<catalog xmlns:x=\"urn:graft:books\" xmlns:d=\"urn:graft:decoy\">\n", "\n",
+      "\n</catalog>\n")
+
+  /** Writes each (name, doc) into `root/all` and alone into `root/<name>`. */
+  private def writeFeed(docs: Seq[(String, String)]): java.nio.file.Path = {
+    val root = Files.createTempDirectory("graft_xmlpack")
+    Files.createDirectories(root.resolve("all"))
+    docs.foreach { case (name, doc) =>
+      Files.write(root.resolve("all").resolve(name), doc.getBytes("UTF-8"))
+      val one = Files.createDirectories(root.resolve(name.stripSuffix(".xml")))
+      Files.write(one.resolve(name), doc.getBytes("UTF-8"))
+    }
+    root
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getString(0)).toSeq
+
+  test("small files pack into Spark's file partitions, records in single-file order") {
+    val docs = (0 until 12).map(f => f"cat_$f%02d.xml" -> catalogDoc(f * 1000, 560))
+    val root = writeFeed(docs)
+    val all = root.resolve("all")
+    val sizes = docs.map(d => Files.size(all.resolve(d._1)))
+    assert(sizes.forall(n => n > 36000 && n < 44000)) // ~40 KB, as in the xml_ingest feed
+    val conf = spark.sessionState.conf
+    val files = docs.zip(sizes).map { case ((name, _), n) =>
+      PartitionedFile(InternalRow.empty, SparkPath.fromPathString(all.resolve(name).toString), 0L, n)
+    }
+    val sparkBins = FilePartition.getFilePartitions(spark, files,
+      FilePartition.maxSplitBytes(spark, sizes.map(_ + conf.filesOpenCostInBytes).sum))
+    assert(sparkBins.size == 4) // local[4]: three ~40 KB files a task
+    val target = Xml.splitTargetBytes(conf, spark.sparkContext.defaultParallelism, sizes)
+    assert(Xml.packBins(sizes, conf, target)(identity).map(_.size) ==
+      sparkBins.map(_.files.length))
+    val ns = Map("ns" -> "urn:graft:books")
+    val counts = Seq("/catalog/book", "/catalog/ns:book").map { path =>
+      val packed = Xml.readXmlNodePath(spark, all.toString, path, ns)
+      assert(packed.rdd.getNumPartitions == sparkBins.size)
+      val single = docs.flatMap { case (name, _) =>
+        rows(Xml.readXmlNodePath(spark, root.resolve(name.stripSuffix(".xml")).toString, path, ns))
+      }
+      val got = rows(packed)
+      assert(got == single, s"packed read of $path reordered or changed records")
+      got.size
+    }
+    assert(counts == Seq(12 * 560, 12 * 560 * 2 / 3))
+  }
+
+  test("split path: small-file ranges share tasks beside a big file's ranges, same order") {
+    // a small open cost lets a sub-MiB listing show the rule; a big file in
+    // the middle of the name order, eleven small ones around it
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.files.openCostInBytes", "8192")
+    val docs = (0 until 12).map { f =>
+      f"cat_$f%02d.xml" -> catalogDoc(f * 100000, if (f == 5) 12000 else 280)
+    }
+    val root = writeFeed(docs)
+    val sizes = docs.map(d => Files.size(root.resolve("all").resolve(d._1)))
+    val target = Xml.splitTargetBytes(ss.sessionState.conf, ss.sparkContext.defaultParallelism,
+      sizes)
+    assert(sizes(5) > 2 * target && sizes.patch(5, Nil, 1).forall(_ <= 2 * target))
+    val packed = Xml.readXmlNodePathSplit(ss, root.resolve("all").toString, "/catalog/book")
+    // unpacked, the eleven small files alone would be eleven tasks
+    assert(packed.rdd.getNumPartitions > 1 && packed.rdd.getNumPartitions < 11)
+    val single = docs.flatMap { case (name, _) =>
+      rows(Xml.readXmlNodePathSplit(ss, root.resolve(name.stripSuffix(".xml")).toString,
+        "/catalog/book", target))
+    }
+    val got = rows(packed)
+    assert(got.size == 11 * 280 + 12000)
+    assert(got == single, "packed split read reordered or changed records")
   }
 }
