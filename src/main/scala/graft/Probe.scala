@@ -400,8 +400,8 @@ object XmlPlanProbe {
     println(f"[xml-probe] target=${targetMB}MB seq=${seqMs}ms (${mb * 1000 / seqMs}%.0f MB/s, 1 thread) " +
       f"par=${parMs}ms (${mb * 1000 / parMs}%.0f MB/s) speedup=${seqMs.toDouble / parMs}%.1fx " +
       f"ranges seq=$nSeq par=$nPar")
-    val n = graft.sources.Xml.readXmlNodePathSplit(
-      spark, dir.toString, path, targetMB.toLong << 20).count()
+    val n = graft.sources.Xml.readXmlNodePath(
+      spark, dir.toString, path, targetSplitBytes = targetMB.toLong << 20).count()
     println(s"[xml-probe] full split read records=$n (expect $key)")
     val s2 = java.nio.file.Files.walk(dir)
     try s2.sorted(java.util.Comparator.reverseOrder())

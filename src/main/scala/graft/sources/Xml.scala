@@ -83,8 +83,8 @@ object Xml {
     * single-pass). Richer predicates (positions, child text) remain
     * post-parse territory via fn_xml_parse's full extraction.
     */
-  private final case class PathStep(name: String, nsUri: Option[String],
-                                    pred: Option[(String, String)])
+  private[graft] final case class PathStep(name: String, nsUri: Option[String],
+                                           pred: Option[(String, String)])
 
   private val StepRe =
     """^([^\[\]@]+)(?:\[@([A-Za-z_][\w.:-]*)=(?:'([^']*)'|"([^"]*)")\])?$""".r
@@ -97,7 +97,7 @@ object Xml {
     * (XML-namespace semantics). An unprefixed step keeps the historical
     * behavior of matching the local name in any namespace.
     */
-  private def parseNodePath(nodePath: String,
+  private[graft] def parseNodePath(nodePath: String,
       ns: Map[String, String] = Map.empty): Seq[PathStep] = {
     val steps = nodePath.split("/").filter(_.nonEmpty).toSeq.map { raw =>
       def split(qname: String): (String, Option[String]) =
@@ -125,11 +125,6 @@ object Xml {
     steps
   }
 
-  /** Files above this size route through the intra-file split reader,
-    * whose ranges `splitTargetBytes` sizes by Spark's file-partition rule —
-    * one 100 GB feed must not become a one-task straggler. */
-  private val SplitThresholdBytes = 32L << 20
-
   /** `.xml` files of `dir` with their sizes, in name order. */
   private def listXml(dir: String): Seq[(String, Long)] = {
     val listing = Files.list(Paths.get(dir))
@@ -141,8 +136,8 @@ object Xml {
   /** Spark's `FilePartition.getFilePartitions` rule over `items`, kept in
     * order: a bin closes when its bytes plus the next item's size exceed
     * `target`, and each item charges its size plus
-    * `spark.sql.files.openCostInBytes`. Both node-path readers pack their
-    * parse tasks with it, so twelve small files become as many tasks as
+    * `spark.sql.files.openCostInBytes`. The node-path reader packs its
+    * parse ranges with it, so twelve small files become as many tasks as
     * Spark's own file sources would give them, not twelve.
     */
   private[graft] def packBins[A](items: Seq[A], conf: SQLConf, target: Long)(
@@ -158,222 +153,82 @@ object Xml {
     bins.result()
   }
 
-  /** Path-aware XML record splitting — the reference XML Reader's node
-    * path is an element PATH (`/catalog/book`), not a tag name: a document
-    * with the same tag at two depths must split only at the declared path.
-    * Spark's `rowTag` option matches the tag anywhere, so this reader keeps
-    * an ancestor stack with a single-pass StAX scan and captures exactly
-    * the subtrees whose full path equals the node path; the snippets then
-    * flow through the codegen'd `from_xml` for typed extraction.
-    *
-    * Scale shape: parallel ACROSS files. Consecutive files (in name order)
-    * are packed into tasks by `packBins` at the `splitTargetBytes` target,
-    * Spark's file-partition rule, so a directory of small files parses in
-    * as many tasks as Spark's own file sources would use (12 files of
-    * ~40 KB: 4 tasks on 4 cores, not 12) and each task builds its three
-    * StAX factories once. Records come out in file order, then document
-    * order, as with one task per file. Within one file the scan is
-    * sequential because ancestor context is a prefix property of the
-    * document — the same contract as the reference's StAX chunker; a file
-    * over `SplitThresholdBytes` sends the whole directory to
-    * `readXmlNodePathSplit`. Nested same-name tags inside a captured
-    * record stay part of that record and never re-trigger capture.
-    *
-    * Path steps match element LOCAL names — optionally qualified by a
-    * namespace URI via a prefix resolved from the caller's bindings (see
-    * parseNodePath) — and each step may carry one `[@attr='value']` (or
-    * double-quoted) attribute predicate, evaluated at the step's own
-    * start tag — see PathStep. Captured subtrees RE-INJECT ancestor
-    * namespace declarations the record element doesn't redeclare (round
-    * 9 — closes the former documented limitation): a feed binding
-    * prefixes on the document root (the common real-world shape) yields
-    * snippets whose prefixes stay bound, in both this reader and the
-    * byte-level split reader.
-    */
-  def readXmlNodePath(s: SparkSession, dir: String, nodePath: String,
-      ns: Map[String, String] = Map.empty): DataFrame = {
-    import s.implicits._
-    val path = parseNodePath(nodePath, ns)
-    val files = listXml(dir)
-    if (files.exists(_._2 > SplitThresholdBytes)) {
-      require(path.forall(_.nsUri.isEmpty),
-        "namespace-qualified node paths are not supported by the intra-file " +
-          "split reader (byte-level tag scan has no in-scope prefix table)")
-      return readXmlNodePathSplit(s, dir, nodePath)
-    }
-    val conf = s.sessionState.conf
-    val bins = packBins(files, conf,
-      splitTargetBytes(conf, s.sparkContext.defaultParallelism, files.map(_._2)))(_._2)
-    s.sparkContext.parallelize(bins.map(_.map(_._1)), math.max(bins.size, 1))
-      .flatMap { bin =>
-        import javax.xml.stream.{XMLEventFactory, XMLInputFactory, XMLOutputFactory}
-        val xif = XMLInputFactory.newInstance()
-        xif.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-        xif.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-        xif.setProperty(XMLInputFactory.IS_COALESCING, true)
-        val xof = XMLOutputFactory.newInstance()
-        val xef = XMLEventFactory.newInstance()
-        bin.iterator.flatMap(file => staxRecords(file, path, xif, xof, xef))
-      }
-      .toDF("xml")
-  }
-
-  /** The StAX scan of one file: every subtree at `path`, re-serialized. */
-  private def staxRecords(file: String, path: Seq[PathStep],
-      xif: javax.xml.stream.XMLInputFactory, xof: javax.xml.stream.XMLOutputFactory,
-      xef: javax.xml.stream.XMLEventFactory): List[String] = {
-    import javax.xml.stream.events.Namespace
-    val in = Files.newInputStream(Paths.get(file))
-    try {
-      val reader = xif.createXMLEventReader(in, "UTF-8")
-      val stack = scala.collection.mutable.ArrayBuffer.empty[String]
-      // okStack(i) = levels 1..i+1 all match the path prefix (names AND
-      // attribute predicates) — predicates are a start-tag property, so
-      // each level's verdict is final at push time and ancestors'
-      // verdicts are simply carried down the stack.
-      val okStack = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-      // nsStack(i) = CUMULATIVE in-scope namespace bindings (prefix →
-      // URI, "" = default) at depth i+1 — the ancestor context a
-      // captured subtree would lose at re-serialization (round-9
-      // verdict #4): missing bindings are re-injected onto the record
-      // start element so root-declared feeds (the common real-world
-      // shape) yield well-formed, prefix-bound snippets.
-      val nsStack = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
-      val out = scala.collection.mutable.ListBuffer.empty[String]
-      var sw: java.io.StringWriter = null
-      var writer: javax.xml.stream.XMLEventWriter = null
-      var captureDepth = -1
-      while (reader.hasNext) {
-        val ev = reader.nextEvent()
-        if (ev.isStartElement) {
-          val se = ev.asStartElement
-          stack += se.getName.getLocalPart
-          val declared = {
-            var m = Map.empty[String, String]
-            val it = se.getNamespaces
-            while (it.hasNext) {
-              val n = it.next().asInstanceOf[Namespace]
-              m += (Option(n.getPrefix).getOrElse("") -> n.getNamespaceURI)
-            }
-            m
-          }
-          val parentNs =
-            if (nsStack.isEmpty) Map.empty[String, String] else nsStack.last
-          nsStack += (parentNs ++ declared)
-          val depth = stack.size
-          val ok = (depth == 1 || okStack(depth - 2)) &&
-            depth <= path.size && {
-              val step = path(depth - 1)
-              step.name == stack(depth - 1) &&
-                step.nsUri.forall(u => se.getName.getNamespaceURI == u) &&
-                step.pred.forall { case (a, v) =>
-                  val attr = se.getAttributeByName(
-                    new javax.xml.namespace.QName(a))
-                  attr != null && attr.getValue == v
-                }
-            }
-          okStack += ok
-          var evOut: javax.xml.stream.events.XMLEvent = ev
-          if (captureDepth < 0 && depth == path.size && ok) {
-            captureDepth = stack.size
-            sw = new java.io.StringWriter()
-            writer = xof.createXMLEventWriter(sw)
-            // re-inject ancestor bindings the record doesn't redeclare
-            val missing = parentNs.filterNot { case (p, _) => declared.contains(p) }
-            if (missing.nonEmpty) {
-              val nss = new java.util.ArrayList[Namespace]()
-              val it = se.getNamespaces
-              while (it.hasNext) nss.add(it.next().asInstanceOf[Namespace])
-              missing.toSeq.sorted.foreach { case (p, u) =>
-                nss.add(if (p.isEmpty) xef.createNamespace(u)
-                        else xef.createNamespace(p, u))
-              }
-              evOut = xef.createStartElement(
-                se.getName, se.getAttributes, nss.iterator())
-            }
-          }
-          if (captureDepth > 0) writer.add(evOut)
-        } else if (ev.isEndElement) {
-          if (captureDepth > 0) {
-            writer.add(ev)
-            if (stack.size == captureDepth) {
-              writer.close()
-              out += sw.toString
-              captureDepth = -1
-            }
-          }
-          stack.remove(stack.size - 1)
-          okStack.remove(okStack.size - 1)
-          nsStack.remove(nsStack.size - 1)
-        } else if (captureDepth > 0 && (ev.isCharacters ||
-            ev.getEventType == javax.xml.stream.XMLStreamConstants.CDATA ||
-            ev.getEventType == javax.xml.stream.XMLStreamConstants.COMMENT ||
-            ev.getEventType ==
-              javax.xml.stream.XMLStreamConstants.PROCESSING_INSTRUCTION)) {
-          // Comments and PIs inside a record are part of the subtree —
-          // forward them so snippets stay faithful to the source
-          // (harmless to from_xml).
-          writer.add(ev)
-        }
-      }
-      out.toList
-    } finally in.close()
-  }
-
   // ========================================================================
-  // Intra-file split for the path-aware chunker (round-6: clears the
-  // single-giant-file `weak` mark). Two passes:
-  //   1. per file, ONE sequential skeleton scan (byte-level, no record
-  //      materialization) notes the byte offset of every path-matched
-  //      record start and plans split ranges of ~targetSplitBytes, each
-  //      beginning exactly at a record start;
-  //   2. ranges parse IN PARALLEL: each task seeks to its start offset and
-  //      scans with the ancestor stack pre-seeded to the node-path prefix —
-  //      sound because a planned range starts at a record whose ancestors
-  //      all matched (phase 1 proved it), and every later sibling/uncle
-  //      element inside the range carries its own real tags, so predicate
-  //      failures (`<shelf genre="tech">`) still suppress capture.
+  // The node-path reader: ONE byte-level scanner (`scanPath`) for every
+  // file, routed by Spark's own split rule (a file is split only when it
+  // is larger than the target):
+  //   - a file at or below the split target is one whole-file range,
+  //     scanned from offset 0 with nothing seeded and no planning pass;
+  //   - a larger file is planned into ranges of ~target bytes, each
+  //     beginning exactly at a record start (the chunked planner below),
+  //     and each range is scanned with the ancestor stack pre-seeded: the
+  //     match flags (all true — the planner proved the record's ancestors
+  //     matched) and ONE namespace scope per ancestor level (declarations
+  //     before the seek point that the range cannot see). Every later
+  //     sibling/uncle element inside the range carries its own real tags,
+  //     so predicate failures (`<shelf genre="tech">`) still suppress
+  //     capture and a popped level's scope is its own, not the record's.
+  // Ranges then parse IN PARALLEL, packed into tasks by `packBins`.
   // The scanner is byte-level (UTF-8; multi-byte code points never contain
-  // '<') so phase-2 seeks are exact, and a captured record is a BYTE SLICE
-  // of the source — higher fidelity than event re-serialization. Phase 1
-  // is sequential per file by nature (ancestor context is a prefix
-  // property — same contract as the reference's StAX chunker) but touches
-  // no record content; the heavy parse work is phase 2. Known limits,
-  // documented: UTF-8 only (other encodings go through the built-in
-  // src_xml_read splitter) and no DOCTYPE internal subsets.
+  // '<') so seeks are exact, and a captured record is a BYTE SLICE of the
+  // source (CDATA and the source's quoting kept). Known limits, documented:
+  // UTF-8 only (other encodings go through the built-in src_xml_read
+  // splitter), no DOCTYPE internal subsets, and end-tag NAMES are not
+  // checked — only the balance is (end of input inside an open element,
+  // or an end tag with none open, fails the read; a mismatched end tag
+  // inside a record reaches `from_xml`, whose parse mode decides).
   // ========================================================================
 
-  /** Minimal entity decode for attribute-value predicate comparison. */
+  private val EntityRe = """&(?:(lt|gt|quot|apos|amp)|#([0-9]+)|#x([0-9a-fA-F]+));""".r
+  private val NamedEntities =
+    Map("lt" -> "<", "gt" -> ">", "quot" -> "\"", "apos" -> "'", "amp" -> "&")
+
+  /** Entity decode for attribute-value predicates and namespace URIs: the
+    * five predefined entities and numeric character references (`&#65;`,
+    * `&#x41;`), in one pass so `&amp;#65;` stays `&#65;`. */
   private def decodeEntities(v: String): String =
-    v.replace("&lt;", "<").replace("&gt;", ">").replace("&quot;", "\"")
-      .replace("&apos;", "'").replace("&amp;", "&")
+    if (v.indexOf('&') < 0) v
+    else EntityRe.replaceAllIn(v, m => scala.util.matching.Regex.quoteReplacement(
+      if (m.group(1) != null) NamedEntities(m.group(1))
+      else new String(Character.toChars(
+        if (m.group(2) != null) Integer.parseInt(m.group(2))
+        else Integer.parseInt(m.group(3), 16)))))
 
   private val AttrRe = """([A-Za-z_][\w.:-]*)\s*=\s*(?:"([^"]*)"|'([^']*)')""".r
 
-  /** Local element name of a raw start/end tag string (`<ns:book k="1">`
-    * → `book`). */
-  private def tagLocalName(tagStr: String): String = {
+  /** Qualified element name of a raw start/end tag string (`<ns:book k="1">`
+    * → `ns:book`). */
+  private def tagQName(tagStr: String): String = {
     val nameEnd = tagStr.indexWhere(c =>
       c == ' ' || c == '\t' || c == '\r' || c == '\n' || c == '/' || c == '>', 1)
-    val raw = tagStr.substring(1, if (nameEnd < 0) tagStr.length else nameEnd)
-    raw.substring(raw.indexOf(':') + 1)
+    tagStr.substring(1, if (nameEnd < 0) tagStr.length else nameEnd)
   }
 
   /** The path-match rule for one start tag at `depth` (1-based), given the
-    * parent's match flag — shared by the sequential scanner and the
+    * parent's match flag and the tag's own namespace `scope` (its parent's
+    * bindings plus its own declarations) — shared by the scanner and the
     * parallel planner's driver-side stitch so both evaluate predicates
-    * identically.
+    * identically. A namespace-qualified step resolves the tag's prefix
+    * (the default namespace for an unprefixed tag) in `scope` and compares
+    * URIs; an unqualified step never looks at the scope.
     */
   private def startTagOk(path: Seq[PathStep], okPrev: Boolean, depth: Int,
-      tagStr: String): Boolean =
+      tagStr: String, scope: Map[String, String]): Boolean =
     okPrev && depth <= path.size && {
       val step = path(depth - 1)
-      step.name == tagLocalName(tagStr) && step.pred.forall { case (a, v) =>
-        AttrRe.findAllMatchIn(tagStr).exists { m =>
-          m.group(1) == a &&
-            decodeEntities(if (m.group(2) != null) m.group(2) else m.group(3)) == v
+      val qname = tagQName(tagStr)
+      val colon = qname.indexOf(':')
+      step.name == qname.substring(colon + 1) &&
+        step.nsUri.forall { uri =>
+          scope.get(if (colon < 0) "" else qname.substring(0, colon))
+            .exists(v => decodeEntities(v) == uri)
+        } &&
+        step.pred.forall { case (a, v) =>
+          AttrRe.findAllMatchIn(tagStr).exists { m =>
+            m.group(1) == a &&
+              decodeEntities(if (m.group(2) != null) m.group(2) else m.group(3)) == v
+          }
         }
-      }
     }
 
   /** xmlns declarations of one raw start tag (prefix → raw attribute
@@ -390,8 +245,7 @@ object Xml {
     }.toMap
 
   /** Rewrite a record start tag to carry ancestor bindings it doesn't
-    * redeclare (the byte-level analogue of the StAX reader's re-injected
-    * start element — round-9 verdict #4). */
+    * redeclare (round-9 verdict #4), so a snippet's prefixes stay bound. */
   private def injectNs(tagStr: String, missing: Map[String, String]): String = {
     val cut = if (tagStr.endsWith("/>")) tagStr.length - 2 else tagStr.length - 1
     val decls = missing.toSeq.sorted.map { case (p, u) =>
@@ -442,35 +296,45 @@ object Xml {
   private val PiEnd = new Terminator("?>")
   private val TagEnd = new Terminator(">") // end tags, DOCTYPE (no internal subsets)
 
-  /** One byte-level path-aware scan. `seedOk` pre-seeds the ancestor
-    * match flags (phase 2 passes all-true for a planned record start; the
-    * parallel planner's pass B passes the exact flags of the stitched
-    * boundary stack) and `seedNs` the in-scope namespace bindings at the
-    * scan start (ancestors are before the seek point, so phase 2 cannot
-    * see their declarations); `stopAt >= 0` ends the scan at that offset
-    * once outside a record; `onRecordStart` fires at every capture
-    * trigger with the record's ANCESTOR-scope bindings; with
+  /** One byte-level path-aware scan of `file` from byte `start`. `seedOk`
+    * pre-seeds the ancestor match flags and `seedNs` each seeded level's
+    * namespace scope, outermost first (ancestors are before the seek
+    * point, so the scan cannot see their declarations): a planned range
+    * passes all-true flags and its first record's ancestor scopes, the
+    * parallel planner's pass B the exact flags and scopes of the stitched
+    * boundary stack, and a whole-file scan nothing. `stopAt >= 0` ends the
+    * scan at that offset once outside a record; `onRecordStart` fires at
+    * every capture trigger with the record's ancestor scopes, outermost
+    * first (a live view, valid only during the call); with
     * `captureBytes`, each record's bytes are passed to `onRecord`, the
     * start tag rewritten to re-declare any ancestor binding the record
     * doesn't carry itself.
+    *
+    * Reaching end of input inside an open element, or an end tag with no
+    * element open, fails the scan with an IOException naming the file and
+    * byte offset: the document is truncated or has more end tags than
+    * start tags.
     *
     * The per-byte work is a compare in the read buffer: a run of text up
     * to the next `<`, a comment/CDATA/PI/end-tag/DOCTYPE body up to its
     * terminator and a start tag up to its unquoted `>` are each scanned in
     * place and, inside a record, copied into the record buffer in one
     * block. Only start tags at depth ≤ the path length are decoded to a
-    * string and run through `startTagOk` and `nsDeclsOf`. A deeper start
+    * string and run through `nsDeclsOf` and `startTagOk`. A deeper start
     * tag is skipped: it can neither match a step nor start a capture
-    * (records start at exactly the path's depth), and no capture reads its
-    * namespace scope (a record re-declares its PARENT's scope), so it
-    * pushes `ok = false` and its parent's scope unread.
+    * (records start at exactly the path's depth), and no capture or match
+    * reads its namespace scope (a record re-declares its PARENT's scope),
+    * so it pushes `ok = false` and its parent's scope unread.
     */
-  private def scanPath(in: java.io.InputStream, base: Long, path: Seq[PathStep],
-      seedOk: Seq[Boolean], seedNs: Map[String, String], captureBytes: Boolean,
-      stopAt: Long, onRecordStart: (Long, Map[String, String]) => Unit,
+  private def scanPath(file: String, start: Long, path: Seq[PathStep],
+      seedOk: Seq[Boolean], seedNs: Seq[Map[String, String]], captureBytes: Boolean,
+      stopAt: Long, onRecordStart: (Long, collection.Seq[Map[String, String]]) => Unit,
       onRecord: String => Unit): Unit = {
+    val ch = java.nio.channels.FileChannel.open(Paths.get(file))
+    ch.position(start)
+    val in = java.nio.channels.Channels.newInputStream(ch)
     val buf = new Array[Byte](1 << 16)
-    var bufLen = 0; var bufI = 0; var pos = base
+    var bufLen = 0; var bufI = 0; var pos = start
     // whether unread bytes remain, refilling the drained buffer
     def fill(): Boolean =
       bufI < bufLen || { bufLen = in.read(buf); bufI = 0; bufLen > 0 }
@@ -483,10 +347,15 @@ object Xml {
     }
     val recordDepth = path.size
     val okStack = scala.collection.mutable.ArrayBuffer.from(seedOk)
-    // cumulative in-scope bindings per open depth, aligned with okStack;
-    // seeded levels collapse to the caller's seedNs (their declarations
-    // live before the seek point)
-    val nsStack = scala.collection.mutable.ArrayBuffer.fill(seedOk.size)(seedNs)
+    // in-scope bindings per open depth, aligned with okStack
+    val nsStack = scala.collection.mutable.ArrayBuffer.from(seedNs)
+    def parentScope = if (nsStack.isEmpty) Map.empty[String, String] else nsStack.last
+    def malformed(off: Long, what: String): Nothing =
+      throw new java.io.IOException(s"malformed XML in $file at byte $off: $what")
+    // end of input: every element opened or seeded must have closed
+    def atEnd(): Unit =
+      if (okStack.nonEmpty)
+        malformed(pos, s"end of input inside ${okStack.size} open element(s)")
     val cap = new ByteBuf
     val tag = new ByteBuf
     var capturing = false
@@ -528,116 +397,121 @@ object Xml {
       }
     }
 
-    while (true) {
-      if (!capturing && stopAt >= 0 && pos >= stopAt) return
-      if (!fill()) return
-      val n = bufLen; var i = bufI
-      while (i < n && buf(i) != '<') i += 1
-      if (i > bufI) take(i - bufI, if (capturing) cap else null) // text run
-      else {
-        val ltOff = pos
-        take(1, null)
-        val b1 = next(); if (b1 < 0) return
-        val to = if (capturing) cap else null
-        b1 match {
-          case '!' =>
-            val b2 = next(); if (b2 < 0) return
-            if (to != null) { to.add('<'); to.add('!'); to.add(b2) }
-            readUntil(if (b2 == '-') CommentEnd else if (b2 == '[') CdataEnd else TagEnd, to)
-          case '?' =>
-            if (to != null) { to.add('<'); to.add('?') }
-            readUntil(PiEnd, to)
-          case '/' =>
-            if (to != null) { to.add('<'); to.add('/') }
-            readUntil(TagEnd, to)
-            if (capturing && okStack.size == captureDepth) {
-              onRecord(cap.utf8); cap.reset()
-              capturing = false; captureDepth = -1
-            }
-            if (okStack.nonEmpty) okStack.remove(okStack.size - 1)
-            if (nsStack.nonEmpty) nsStack.remove(nsStack.size - 1)
-          case _ if okStack.size >= recordDepth =>
-            // deeper than a record start: no name, predicate or xmlns work
-            if (to != null) { to.add('<'); to.add(b1) }
-            if (!readStartRest(to)) {
-              okStack += false
-              nsStack += (if (nsStack.isEmpty) seedNs else nsStack.last)
-            }
-          case _ =>
-            tag.reset(); tag.add('<'); tag.add(b1)
-            val selfClosing = readStartRest(tag)
-            val tagStr = tag.utf8
-            val depth = okStack.size + 1
-            val ok = startTagOk(path, depth == 1 || okStack(depth - 2), depth, tagStr)
-            okStack += ok
-            val parentNs = if (nsStack.isEmpty) seedNs else nsStack.last
-            val declared = nsDeclsOf(tagStr)
-            nsStack += (if (declared.isEmpty) parentNs else parentNs ++ declared)
-            var justStarted = false
-            if (captureDepth < 0 && depth == recordDepth && ok) {
-              onRecordStart(ltOff, parentNs)
-              if (captureBytes) { capturing = true; cap.reset(); justStarted = true }
-              captureDepth = depth // suppresses nested same-path re-trigger
-            }
-            if (capturing) {
-              val missing =
-                if (justStarted)
-                  parentNs.filterNot { case (p, _) => declared.contains(p) }
-                else Map.empty[String, String]
-              if (missing.nonEmpty) {
-                val b = injectNs(tagStr, missing).getBytes("UTF-8")
-                cap.add(b, 0, b.length)
-              } else cap.add(tag.arr, 0, tag.len)
-            }
-            if (selfClosing) {
+    try {
+      while (true) {
+        if (!capturing && stopAt >= 0 && pos >= stopAt) return
+        if (!fill()) { atEnd(); return }
+        val n = bufLen; var i = bufI
+        while (i < n && buf(i) != '<') i += 1
+        if (i > bufI) take(i - bufI, if (capturing) cap else null) // text run
+        else {
+          val ltOff = pos
+          take(1, null)
+          val b1 = next(); if (b1 < 0) { atEnd(); return }
+          val to = if (capturing) cap else null
+          b1 match {
+            case '!' =>
+              val b2 = next(); if (b2 < 0) { atEnd(); return }
+              if (to != null) { to.add('<'); to.add('!'); to.add(b2) }
+              readUntil(if (b2 == '-') CommentEnd else if (b2 == '[') CdataEnd else TagEnd, to)
+            case '?' =>
+              if (to != null) { to.add('<'); to.add('?') }
+              readUntil(PiEnd, to)
+            case '/' =>
+              if (okStack.isEmpty) malformed(ltOff, "end tag with no open element")
+              if (to != null) { to.add('<'); to.add('/') }
+              readUntil(TagEnd, to)
               if (capturing && okStack.size == captureDepth) {
                 onRecord(cap.utf8); cap.reset()
                 capturing = false; captureDepth = -1
               }
-              if (!captureBytes && okStack.size == captureDepth) captureDepth = -1
               okStack.remove(okStack.size - 1)
               nsStack.remove(nsStack.size - 1)
-            }
+            case _ if okStack.size >= recordDepth =>
+              // deeper than a record start: no name, predicate or xmlns work
+              if (to != null) { to.add('<'); to.add(b1) }
+              if (!readStartRest(to)) {
+                okStack += false
+                nsStack += parentScope
+              }
+            case _ =>
+              tag.reset(); tag.add('<'); tag.add(b1)
+              val selfClosing = readStartRest(tag)
+              val tagStr = tag.utf8
+              val depth = okStack.size + 1
+              val parentNs = parentScope
+              val declared = nsDeclsOf(tagStr)
+              val scope = if (declared.isEmpty) parentNs else parentNs ++ declared
+              val ok = startTagOk(path, depth == 1 || okStack(depth - 2), depth, tagStr, scope)
+              val startsRecord = captureDepth < 0 && depth == recordDepth && ok
+              if (startsRecord) onRecordStart(ltOff, nsStack)
+              okStack += ok
+              nsStack += scope
+              if (startsRecord) {
+                if (captureBytes) {
+                  capturing = true; cap.reset()
+                  val missing = parentNs.filterNot { case (p, _) => declared.contains(p) }
+                  if (missing.nonEmpty) {
+                    val b = injectNs(tagStr, missing).getBytes("UTF-8")
+                    cap.add(b, 0, b.length)
+                  } else cap.add(tag.arr, 0, tag.len)
+                }
+                captureDepth = depth // suppresses nested same-path re-trigger
+              } else if (capturing) cap.add(tag.arr, 0, tag.len)
+              if (selfClosing) {
+                if (capturing && okStack.size == captureDepth) {
+                  onRecord(cap.utf8); cap.reset()
+                  capturing = false; captureDepth = -1
+                }
+                if (!captureBytes && okStack.size == captureDepth) captureDepth = -1
+                okStack.remove(okStack.size - 1)
+                nsStack.remove(nsStack.size - 1)
+              }
+          }
+          // planning scans' capture-end bookkeeping for non-self-closing
+          // records is on the end-tag branch; mirror it when not
+          // materializing bytes
+          if (!captureBytes && captureDepth > 0 && okStack.size < captureDepth)
+            captureDepth = -1
         }
-        // phase 1 capture-end bookkeeping for non-self-closing records is
-        // on the end-tag branch; mirror it when not materializing bytes
-        if (!captureBytes && captureDepth > 0 && okStack.size < captureDepth)
-          captureDepth = -1
       }
-    }
+    } finally ch.close()
   }
 
+  /** A parse range of one file: bytes [start, end) (`end` = Long.MaxValue
+    * runs to end of file) and `ns`, the namespace scope of each ancestor
+    * level of the record at `start`, outermost first. A whole-file range
+    * starts at 0 and seeds nothing. */
   private[graft] final case class XmlSplitRange(file: String, start: Long, end: Long,
-      ns: Map[String, String] = Map.empty)
+      ns: Seq[Map[String, String]] = Nil)
 
-  /** Phase 1: plan split ranges for one file — a sequential skeleton scan
-    * collecting record-start offsets (plus each start's ancestor-scope
-    * namespace bindings, which phase 2 cannot see past its seek point),
-    * grouped greedily into ~`targetSplitBytes` ranges, each beginning at
-    * a record start. */
+  /** Ranges from a file's ordered record starts (offset, ancestor scopes):
+    * each runs to the next start, the last to end of file. */
+  private def rangesOf(file: String,
+      starts: Seq[(Long, Seq[Map[String, String]])]): Seq[XmlSplitRange] =
+    starts.lazyZip(starts.drop(1).map(_._1) :+ Long.MaxValue).map {
+      case ((a, ns), b) => XmlSplitRange(file, a, b, ns)
+    }
+
+  /** Sequential planning of one file — a skeleton scan collecting record
+    * starts (with each start's ancestor scopes, which a range cannot see
+    * past its seek point) greedily every ≥ `targetSplitBytes`, so each range
+    * begins at a record start. The chunked planner's fallback for a tag
+    * longer than `MaxSpecTag`, and `probePlanners`' baseline. */
   private def planSplits(file: String, path: Seq[PathStep],
       targetSplitBytes: Long): Seq[XmlSplitRange] = {
-    val starts = scala.collection.mutable.ArrayBuffer.empty[(Long, Map[String, String])]
-    val in = Files.newInputStream(Paths.get(file))
-    try scanPath(in, 0L, path, seedOk = Nil, seedNs = Map.empty,
-      captureBytes = false, stopAt = -1L,
-      onRecordStart = (off, ns) => starts += ((off, ns)), onRecord = _ => ())
-    finally in.close()
-    if (starts.isEmpty) Seq.empty
-    else {
-      val bounds = scala.collection.mutable.ArrayBuffer(starts.head)
-      starts.foreach { s =>
-        if (s._1 - bounds.last._1 >= targetSplitBytes) bounds += s
-      }
-      bounds.toSeq.zipAll(bounds.toSeq.drop(1),
-          (0L, Map.empty[String, String]), (Long.MaxValue, Map.empty[String, String]))
-        .map { case ((a, ns), (b, _)) => XmlSplitRange(file, a, b, ns) }
-    }
+    val starts = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Map[String, String]])]
+    scanPath(file, 0L, path, seedOk = Nil, seedNs = Nil, captureBytes = false, stopAt = -1L,
+      onRecordStart = (off, ns) =>
+        if (starts.isEmpty || off - starts.last._1 >= targetSplitBytes)
+          starts += ((off, ns.toVector)),
+      onRecord = _ => ())
+    rangesOf(file, starts.toSeq)
   }
 
   // ========================================================================
-  // PARALLEL phase-1 planning (round-7: removes the last sequential
-  // straggler — `planSplits` above is one O(file) task per file). The
+  // PARALLEL planning of a file larger than the split target (round-7:
+  // `planSplits` above is one O(file) scan on one thread). The
   // speculative chunked-scan idea from the parallel-CSV/JSON parsing
   // literature (ParPaRaw, Mison), re-derived for this scanner's exact
   // lexical rules:
@@ -657,20 +531,19 @@ object Xml {
   //   stitch (driver, sequential over per-chunk SUMMARIES only): fold
   //     left to right, resolving each chunk's entry context from its
   //     predecessor's exit, maintaining the exact open-ancestor-tag stack
-  //     at every boundary. O(#chunks × depth) — microseconds where the
-  //     old phase 1 was O(file bytes).
+  //     at every boundary. O(#chunks × depth) — microseconds where
+  //     `planSplits` is O(file bytes).
   //   pass B (parallel): each chunk re-scans from its resolved resume
-  //     offset with the TRUE seeded ancestor flags and early-exits at its
-  //     first record start (typically a record-length of bytes). Those
-  //     starts are exact record starts — the range boundaries; phase 2 is
-  //     unchanged and output is record-identical to the sequential
-  //     planner (Round7Spec pins it on a hazard-dense fixture).
+  //     offset with the TRUE seeded ancestor flags and per-level namespace
+  //     scopes and early-exits at its first record start (typically a
+  //     record-length of bytes). Those starts are exact record starts —
+  //     the range boundaries; output is record-identical to a whole-file
+  //     scan (Round7Spec pins it on hazard-dense fixtures).
   //
-  // The sequential planner stays as the small-file fast path: files up to
-  // 2× the target plan with it, one task each, and their ranges then share
-  // parse tasks by Spark's file-partition rule (`packBins`), as small files
-  // do on the StAX path; files larger than 2× the target go through this
-  // one.
+  // A file at or below the split target is never planned: it is one
+  // whole-file range. `planSplits` remains only as this planner's
+  // fallback for a tag longer than `MaxSpecTag` and `probePlanners`'
+  // baseline.
   // ========================================================================
 
   /** Lexical exit of a chunk scan. `kind`: "content", a pending token
@@ -903,19 +776,20 @@ object Xml {
     } finally ch.close()
   }
 
-  /** Match flags for a reconstructed boundary stack — the same rule
-    * scanPath applies tag by tag. */
-  private def okBooleans(path: Seq[PathStep], stack: Seq[String]): Seq[Boolean] = {
+  /** Match flags for a reconstructed boundary stack and each level's
+    * namespace scope — the same rule scanPath applies tag by tag. */
+  private def okBooleans(path: Seq[PathStep], stack: Seq[String],
+      scopes: Seq[Map[String, String]]): Seq[Boolean] = {
     val oks = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    stack.foreach { tagStr =>
+    stack.lazyZip(scopes).foreach { (tagStr, scope) =>
       val depth = oks.size + 1
-      oks += startTagOk(path, depth == 1 || oks(depth - 2), depth, tagStr)
+      oks += startTagOk(path, depth == 1 || oks(depth - 2), depth, tagStr, scope)
     }
     oks.toSeq
   }
 
   private final case class PassB(resume: Long, stopAt: Long, seedOk: Seq[Boolean],
-      seedNs: Map[String, String])
+      seedNs: Seq[Map[String, String]])
 
   /** Driver-side stitch: fold per-chunk summaries into the exact boundary
     * contexts. Returns one pass-B task per chunk whose bytes are reachable
@@ -971,8 +845,9 @@ object Xml {
           }
       }
       if (resume >= 0) {
-        out += PassB(resume, ce, okBooleans(path, stack.toSeq),
-          stack.foldLeft(Map.empty[String, String])((acc, t) => acc ++ nsDeclsOf(t)))
+        // one scope per open level: its parent's plus its own declarations
+        val scopes = stack.toSeq.scanLeft(Map.empty[String, String])(_ ++ nsDeclsOf(_)).tail
+        out += PassB(resume, ce, okBooleans(path, stack.toSeq, scopes), scopes)
         val (pops, opens, exit) = sc.contentScans(resume)
         (1 to pops).foreach(_ => pop())
         opens.foreach(stack += _)
@@ -982,31 +857,26 @@ object Xml {
     if (overflow) None else Some(out.toList)
   }
 
-  /** Pass B: first record start in [resume, stopAt) with its ancestor-
-    * scope bindings, early-exit. */
+  /** Pass B: first record start in [resume, stopAt) with its ancestor
+    * scopes, early-exit. */
   private def firstRecordStart(file: String, p: PassB,
-      path: Seq[PathStep]): Option[(Long, Map[String, String])] = {
-    final class Found(val off: Long, val ns: Map[String, String])
+      path: Seq[PathStep]): Option[(Long, Seq[Map[String, String]])] = {
+    final class Found(val off: Long, val ns: Seq[Map[String, String]])
       extends RuntimeException(null, null, false, false)
-    val ch = java.nio.channels.FileChannel.open(Paths.get(file))
     try {
-      ch.position(p.resume)
-      val in = java.nio.channels.Channels.newInputStream(ch)
-      try {
-        scanPath(in, p.resume, path, p.seedOk, p.seedNs, captureBytes = false,
-          stopAt = p.stopAt,
-          onRecordStart = (off, ns) => throw new Found(off, ns),
-          onRecord = _ => ())
-        None
-      } catch { case f: Found => Some((f.off, f.ns)) }
-    } finally ch.close()
+      scanPath(file, p.resume, path, p.seedOk, p.seedNs, captureBytes = false,
+        stopAt = p.stopAt,
+        onRecordStart = (off, ns) => throw new Found(off, ns.toVector),
+        onRecord = _ => ())
+      None
+    } catch { case f: Found => Some((f.off, f.ns)) }
   }
 
   /** Observability for the Round7Spec pin: planning chunks scanned by the
     * most recent parallel plan. */
   private[graft] val lastPlanChunks = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Parallel phase 1 for ONE big file (see section comment above).
+  /** Parallel planning of ONE big file (see section comment above).
     * Record output is identical to `planSplits`; boundaries land on true
     * record starts at ~chunk spacing. A tag longer than `MaxSpecTag`
     * across a chunk boundary sends the file to `planSplits` instead.
@@ -1027,10 +897,7 @@ object Xml {
           .parallelize(passB, math.max(passB.size, 1))
           .flatMap(p => firstRecordStart(file, p, path))
           .collect().sortBy(_._1).toSeq
-        if (starts.isEmpty) Seq.empty
-        else starts.zipAll(starts.drop(1),
-            (0L, Map.empty[String, String]), (Long.MaxValue, Map.empty[String, String]))
-          .map { case ((a, ns), (b, _)) => XmlSplitRange(file, a, b, ns) }
+        rangesOf(file, starts)
     }
   }
 
@@ -1052,7 +919,7 @@ object Xml {
   }
 
   /** Split target for a listing of files of `sizes` bytes: Spark's own
-    * `FilePartition.maxSplitBytes` rule, so the split reader follows the
+    * `FilePartition.maxSplitBytes` rule, so the node-path reader follows the
     * sizing confs of every other file source and has no knob of its own.
     * Each file is charged `spark.sql.files.openCostInBytes`; the total is
     * spread over `spark.sql.files.minPartitionNum`, else
@@ -1070,55 +937,64 @@ object Xml {
       math.max(openCost, sizes.map(_ + openCost).sum / slots))
   }
 
-  /** Path-aware node-path read with INTRA-FILE parallelism: same semantics
-    * and output as `readXmlNodePath`, but one huge file becomes
-    * ceil(bytes/target) tasks instead of one straggler. The target is
-    * `targetSplitBytes` when positive; by default it is derived from the
-    * listing by `splitTargetBytes` (Spark's file-partition rule), so a
-    * file's ranges spread over the session's cores. Phase 1 plans offsets
-    * only — no record materialization, no shuffle; the collected ranges
-    * are metadata-sized. Files up to 2× the target plan with the
-    * sequential `planSplits`, one task each; bigger ones with the chunked
-    * `planSplitsParallel`. Phase 2 is embarrassingly parallel over
-    * ranges, which `packBins` packs by the same rule in file and offset
-    * order: a big file's ~target-sized ranges keep a task each, while the
-    * ranges of small files share tasks, so the records come out in the
-    * same order as one task per range would give.
+  /** Path-aware XML record splitting — the reference XML Reader's node
+    * path is an element PATH (`/catalog/book`), not a tag name: a document
+    * with the same tag at two depths must split only at the declared path.
+    * Spark's `rowTag` option matches the tag anywhere, so this reader keeps
+    * an ancestor stack in one byte-level scan (`scanPath`) and captures
+    * exactly the subtrees whose full path equals the node path, each as a
+    * byte slice of the source; the snippets then flow through the
+    * codegen'd `from_xml` for typed extraction. Nested same-name tags
+    * inside a captured record stay part of that record and never
+    * re-trigger capture.
+    *
+    * Path steps match element LOCAL names — optionally qualified by a
+    * namespace URI via a prefix resolved from the caller's bindings `ns`
+    * (see parseNodePath; the document's prefix is resolved in the tag's own
+    * scope, at any file size) — and each step may carry one
+    * `[@attr='value']` (or double-quoted) attribute predicate, evaluated at
+    * the step's own start tag — see PathStep. Captured subtrees RE-INJECT
+    * ancestor namespace declarations the record element doesn't redeclare,
+    * so a feed binding prefixes on the document root (the common
+    * real-world shape) yields snippets whose prefixes stay bound.
+    *
+    * Routing follows Spark's split rule: the target is `targetSplitBytes`
+    * when positive, else `splitTargetBytes` of the listing (Spark's
+    * file-partition rule). A file at or below the target is one whole-file
+    * range, scanned from offset 0 with no planning pass; a larger file is
+    * planned into ~target-sized ranges by `planSplitsParallel`, so one huge
+    * file parses in ceil(bytes/target) tasks instead of one straggler
+    * (planning collects offsets only — no record materialization, no
+    * shuffle). The ranges, in file (name) and offset order, are packed
+    * into tasks by `packBins`: a big file's ranges keep a task each, small
+    * files share tasks (12 files of ~40 KB: 4 tasks on 4 cores), and the
+    * records come out in file order, then document order.
+    *
+    * A truncated document (end of input inside an open element) or an end
+    * tag with no element open fails the read with the file and byte
+    * offset; end-tag names are not checked (see the section comment).
     */
-  def readXmlNodePathSplit(s: SparkSession, dir: String, nodePath: String,
-      targetSplitBytes: Long = 0L): DataFrame = {
+  def readXmlNodePath(s: SparkSession, dir: String, nodePath: String,
+      ns: Map[String, String] = Map.empty, targetSplitBytes: Long = 0L): DataFrame = {
     import s.implicits._
-    val path = parseNodePath(nodePath)
+    val path = parseNodePath(nodePath, ns)
     val files = listXml(dir)
     val conf = s.sessionState.conf
     val target =
       if (targetSplitBytes > 0) targetSplitBytes
       else splitTargetBytes(conf, s.sparkContext.defaultParallelism, files.map(_._2))
-    // Small files: one sequential planning task per file (cheap constant).
-    // Big files (> 2× target): the chunked parallel planner — a 100 GB
-    // single file's planning pass is no longer one thread.
-    val (big, small) = files.partition(_._2 > 2L * target)
-    val smallRanges =
-      if (small.isEmpty) Seq.empty
-      else s.sparkContext.parallelize(small.map(_._1), small.length)
-        .flatMap(f => planSplits(f, path, target))
-        .collect().toSeq
-    val ranges = (smallRanges ++
-      big.flatMap(f => planSplitsParallel(s, f._1, path, target)))
-      .sortBy(r => (r.file, r.start))
+    val ranges = files.flatMap { case (f, size) =>
+      if (size <= target) Seq(XmlSplitRange(f, 0L, Long.MaxValue))
+      else planSplitsParallel(s, f, path, target)
+    }
     val sizes = files.toMap
     val bins = packBins(ranges, conf, target)(r => math.min(r.end, sizes(r.file)) - r.start)
     s.sparkContext.parallelize(bins, math.max(bins.size, 1))
       .flatMap(_.flatMap { r =>
         val out = scala.collection.mutable.ListBuffer.empty[String]
-        val ch = java.nio.channels.FileChannel.open(Paths.get(r.file))
-        try {
-          ch.position(r.start)
-          val in = java.nio.channels.Channels.newInputStream(ch)
-          scanPath(in, r.start, path, seedOk = Seq.fill(path.size - 1)(true),
-            seedNs = r.ns, captureBytes = true, stopAt = r.end,
-            onRecordStart = (_, _) => (), onRecord = out += _)
-        } finally ch.close()
+        scanPath(r.file, r.start, path, seedOk = r.ns.map(_ => true), seedNs = r.ns,
+          captureBytes = true, stopAt = r.end, onRecordStart = (_, _) => (),
+          onRecord = out += _)
         out.toList
       })
       .toDF("xml")
@@ -1316,7 +1192,7 @@ object Xml {
     }.mkString("\n")
     Files.write(Paths.get(dir, "cat_all.xml"),
       s"<catalog>\n$body\n</catalog>".getBytes("UTF-8"))
-    val snippets = readXmlNodePathSplit(s, dir, "/catalog/book",
+    val snippets = readXmlNodePath(s, dir, "/catalog/book",
       targetSplitBytes = 1024L)
     val parallel = snippets.rdd.getNumPartitions > 1
     val schema = StructType(Seq(

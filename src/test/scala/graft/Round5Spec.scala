@@ -188,5 +188,17 @@ class Round5Spec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       graft.sources.Xml.readXmlNodePath(spark, dir, "/r/x[position()=1]/y")
     }
+    // numeric character references decode before the compare (`&#49;` is
+    // "1", `&#x65;` is "e"); an escaped ampersand does not (`&amp;#49;` is
+    // the text "&#49;")
+    val refs = Scratch.fresh("r5_nodepath_refs", sf)
+    Files.write(Paths.get(refs, "a.xml"),
+      ("""<r><x k="&#49;"><y lang="&#x65;n">A</y><y lang="fr">B</y></x>""" +
+        """<x k="&amp;#49;"><y lang="en">C</y></x></r>""").getBytes("UTF-8"))
+    val byRef = graft.sources.Xml.readXmlNodePath(spark, refs, """/r/x[@k="1"]/y[@lang='en']""")
+      .collect().map(_.getString(0))
+    assert(byRef.length == 1 && byRef.head.contains(">A<"),
+      s"character references must decode in predicates: ${byRef.toSeq}")
+    assert(graft.sources.Xml.readXmlNodePath(spark, refs, "/r/x[@k='&#49;']/y").count() == 1L)
   }
 }

@@ -242,8 +242,9 @@ class Round6Spec extends AnyFunSuite {
       .withColumn("p", from_xml(col("xml"), schema))
       .select(col("p._key"), col("p.name"), col("p.region"))
       .collect().toSet
-    val single = Xml.readXmlNodePath(spark, dir, nodePath)
-    val split = Xml.readXmlNodePathSplit(spark, dir, nodePath, targetSplitBytes = 512L)
+    val single = spark.createDataset(StaxOracle.records(dir, nodePath))(
+      org.apache.spark.sql.Encoders.STRING).toDF("xml")
+    val split = Xml.readXmlNodePath(spark, dir, nodePath, targetSplitBytes = 512L)
     assert(split.rdd.getNumPartitions > 1,
       s"one file must split into >1 tasks (got ${split.rdd.getNumPartitions})")
     val s1 = parsed(single); val s2 = parsed(split)

@@ -130,21 +130,20 @@ class Round7Spec extends AnyFunSuite {
     val dir = Scratch.fresh("r7_xml_parplan", sf)
     Files.write(Paths.get(dir, "big.xml"), hazardCatalog(40).getBytes("UTF-8"))
     val path = hazardPath
-    // ground truth: the SEQUENTIAL planner (file < 2x a huge target), same
+    // ground truth: one whole-file range (file below a huge target), same
     // raw-byte capture scanner — the verdict's "byte-identical to the
-    // current planner" criterion. The event-based readXmlNodePath
-    // re-serializes CDATA so it cross-checks keys only.
-    val seq = graft.sources.Xml.readXmlNodePathSplit(spark, dir, path, 1L << 30)
+    // current planner" criterion. The StAX reference reader re-serializes
+    // CDATA so it cross-checks keys only.
+    val seq = graft.sources.Xml.readXmlNodePath(spark, dir, path, targetSplitBytes = 1L << 30)
       .collect().map(_.getString(0)).sorted.toSeq
     assert(seq.nonEmpty && seq.exists(_.contains("blob")))
     val KeyRe = """key="(\d+)"""".r
     def keys(rs: Seq[String]) =
       rs.map(r => KeyRe.findFirstMatchIn(r).get.group(1).toLong).sorted
-    val eventKeys = keys(graft.sources.Xml.readXmlNodePath(spark, dir, path)
-      .collect().map(_.getString(0)).toSeq)
+    val eventKeys = keys(StaxOracle.records(dir, path))
     assert(keys(seq) == eventKeys, "byte scanner vs event reader key drift")
     for (target <- Seq(64L * 1024, 1536L)) {
-      val par = graft.sources.Xml.readXmlNodePathSplit(spark, dir, path, target)
+      val par = graft.sources.Xml.readXmlNodePath(spark, dir, path, targetSplitBytes = target)
         .collect().map(_.getString(0)).sorted.toSeq
       assert(graft.sources.Xml.lastPlanChunks.get() > 4,
         s"expected >4 planning chunks at target=$target")
@@ -157,16 +156,17 @@ class Round7Spec extends AnyFunSuite {
 
   test("XML split read at the default target: chunked plan, same ordered records") {
     val dir = Scratch.fresh("r7_xml_default_target", sf)
-    // ~10 MiB: over twice the 4 MiB target Spark's file-partition rule
-    // gives it on local[4] (max(4 MiB open cost, (size + 4 MiB) / 4))
+    // ~10 MiB: over the 4 MiB target Spark's file-partition rule gives it
+    // on local[4] (max(4 MiB open cost, (size + 4 MiB) / 4))
     Files.write(Paths.get(dir, "big.xml"), hazardCatalog(2800).getBytes("UTF-8"))
     def snippets(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getString(0)).toSeq
-    // an explicit target is used as given: one range, sequential planner
+    // an explicit target is used as given: one whole-file range, no planning
     graft.sources.Xml.lastPlanChunks.set(0)
-    val whole = graft.sources.Xml.readXmlNodePathSplit(spark, dir, hazardPath, 1L << 30)
+    val whole = graft.sources.Xml.readXmlNodePath(spark, dir, hazardPath,
+      targetSplitBytes = 1L << 30)
     assert(whole.rdd.getNumPartitions == 1 && graft.sources.Xml.lastPlanChunks.get() == 0)
     val seq = snippets(whole)
-    val default = graft.sources.Xml.readXmlNodePathSplit(spark, dir, hazardPath)
+    val default = graft.sources.Xml.readXmlNodePath(spark, dir, hazardPath)
     assert(graft.sources.Xml.lastPlanChunks.get() > 1,
       "the default target should send the file through the chunked planner")
     assert(default.rdd.getNumPartitions > 1)
@@ -222,26 +222,79 @@ class Round7Spec extends AnyFunSuite {
       val dir = Scratch.fresh(s"r7_xml_pin_$name", sf)
       Files.write(Paths.get(dir, "in.xml"), doc.getBytes("UTF-8"))
       Seq(1L << 30, 64L << 10, 1536L).map { target =>
-        val rs = graft.sources.Xml.readXmlNodePathSplit(spark, dir, path, target)
+        val rs = graft.sources.Xml.readXmlNodePath(spark, dir, path, targetSplitBytes = target)
           .collect().map(_.getString(0)).toSeq
         s"$name@$target" -> s"${rs.size}:${sha(rs)}"
       }
     }
-    // The split reader's bytes: a change to the scanner or the planners
-    // must move none of them. ns@1536 differs from the whole-file read: a
-    // planning chunk that opens inside an element below record depth seeds
-    // that element's xmlns declarations into the scope of the records
-    // after it (the seeded ancestor levels share one collapsed scope).
-    // Mending that will change this one hash.
+    // The reader's bytes: a change to the scanner or the planners must move
+    // none of them, and every target reads what the whole-file scan reads
+    // (each seeded ancestor level carries its own namespace scope, so a
+    // planning chunk opening inside an element below record depth does not
+    // leak that element's xmlns declarations into later records).
     val pinned = Map(
       "hazard@1073741824" -> "501:17fc3aa0baab5ca997fd32c371c42a00219cbd0c6284bd6a2ac86b7c9f5c564c",
       "hazard@65536" -> "501:17fc3aa0baab5ca997fd32c371c42a00219cbd0c6284bd6a2ac86b7c9f5c564c",
       "hazard@1536" -> "501:17fc3aa0baab5ca997fd32c371c42a00219cbd0c6284bd6a2ac86b7c9f5c564c",
       "ns@1073741824" -> "1800:c41b90afc09e7dd4fb6a0e90ae25d5498428bcbfcdc789fddcd2e4400ee02836",
       "ns@65536" -> "1800:c41b90afc09e7dd4fb6a0e90ae25d5498428bcbfcdc789fddcd2e4400ee02836",
-      "ns@1536" -> "1800:2e601fc942fea46d27515d799b76098a01b4d711fdf00ca984a1aabb2fa167b4")
+      "ns@1536" -> "1800:c41b90afc09e7dd4fb6a0e90ae25d5498428bcbfcdc789fddcd2e4400ee02836")
     got.foreach { case (k, v) => assert(v == pinned(k), s"snippet bytes moved at $k") }
     assert(got.map(_._1).toSet == pinned.keySet)
+  }
+
+  test("byte scanner matches the StAX reference reader: keys and in-scope namespaces at three targets") {
+    // a namespace-qualified path over a root-bound prefix, a record's own
+    // prefix, a default namespace and a prefix rebound to a decoy URI
+    val qualified = (0 until 1500).map { k =>
+      (k % 4) match {
+        case 0 => s"""  <x:book key="$k"><name>n$k</name></x:book>"""
+        case 1 => s"""  <b:book xmlns:b="urn:graft:books" key="$k"/>"""
+        case 2 => s"""  <book xmlns="urn:graft:books" key="$k"><name>d$k</name></book>"""
+        case _ => s"""  <x:book xmlns:x="urn:graft:decoy" key="$k"/>"""
+      }
+    }.mkString("<catalog xmlns:x=\"urn:graft:books\">\n", "\n", "\n</catalog>\n")
+    assert(qualified.length > (64 << 10)) // above every target but 1 GiB
+    val ns = Map("ns" -> "urn:graft:books")
+    val inputs = Seq(
+      ("hazard", hazardCatalog(40), hazardPath),
+      ("ns", nsHazardCatalog(150), "/catalog/shelf/book"),
+      ("qualified", qualified, "/catalog/ns:book"))
+    for ((name, doc, path) <- inputs) {
+      val dir = Scratch.fresh(s"r7_xml_oracle_$name", sf)
+      Files.write(Paths.get(dir, "in.xml"), doc.getBytes("UTF-8"))
+      val expected = StaxOracle.records(dir, path, ns).map(StaxOracle.keyAndScope)
+      assert(expected.nonEmpty && expected.forall(_._1 != null))
+      if (name == "qualified")
+        assert(expected.map(_._1.toInt) == (0 until 1500).filter(_ % 4 != 3))
+      for (target <- Seq(1L << 30, 64L << 10, 1536L)) {
+        val got = graft.sources.Xml.readXmlNodePath(spark, dir, path, ns, target)
+          .collect().map(r => StaxOracle.keyAndScope(r.getString(0))).toSeq
+        val firstDiff = got.zip(expected).find { case (g, e) => g != e }
+        assert(got == expected, s"$name@$target: ${got.size} vs ${expected.size} records, " +
+          s"first difference (reader, StAX) $firstDiff")
+      }
+    }
+  }
+
+  test("a seeded range gives each ancestor level its own namespace scope") {
+    val dir = Scratch.fresh("r7_xml_ns_levels", sf)
+    // only the first shelf declares xmlns:s and xmlns; the trailing comment
+    // pads the file past the target, so one planned range starts at book 1
+    // and spans both shelves
+    val doc = """<catalog><shelf xmlns:s="urn:s0" xmlns="urn:d0"><book k="1"/></shelf>""" +
+      """<shelf><book k="2"/></shelf></catalog>""" + "\n<!-- " + ("pad " * 1000) + "-->\n"
+    Files.write(Paths.get(dir, "in.xml"), doc.getBytes("UTF-8"))
+    graft.sources.Xml.lastPlanChunks.set(0)
+    val rs = graft.sources.Xml.readXmlNodePath(spark, dir, "/catalog/shelf/book",
+        targetSplitBytes = 1024L).collect().map(_.getString(0)).toSeq
+    assert(graft.sources.Xml.lastPlanChunks.get() > 1, "the file must be planned, not read whole")
+    assert(rs.size == 2)
+    assert(rs(0).contains("urn:d0") && rs(0).contains("urn:s0"))
+    assert(!rs(1).contains("urn:d0") && !rs(1).contains("urn:s0"),
+      s"book 2 took the first shelf's bindings: ${rs(1)}")
+    assert(rs.map(StaxOracle.keyAndScope) ==
+      StaxOracle.records(dir, "/catalog/shelf/book").map(StaxOracle.keyAndScope))
   }
 
   test("optimizeRange rewrites only the overlapping files, carries the rest by sha") {

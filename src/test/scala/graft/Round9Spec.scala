@@ -263,18 +263,24 @@ class Round9Spec extends AnyFunSuite {
     Files.write(Paths.get(dir, "cat.xml"),
       ("""<catalog xmlns:x="urn:x">""" + "\n" + body + "\n</catalog>")
         .getBytes("UTF-8"))
-    // sequential (StAX) reader: prefixes bound, no duplicate declarations
-    val seqRows = Xml.readXmlNodePath(spark, dir, "/catalog/book")
+    // the StAX reference reader, then the byte scanner over the whole file
+    // (one range at a 1 GiB target): prefixes bound, no duplicate
+    // declarations
+    val seqRows = StaxOracle.records(dir, "/catalog/book").toArray
+    val wholeRows = Xml.readXmlNodePath(spark, dir, "/catalog/book",
+        targetSplitBytes = 1L << 30)
       .collect().map(_.getString(0))
-    assert(seqRows.length === 40)
-    assert(seqRows.filter(_.contains("<x:book"))
-      .forall(_.contains("xmlns:x=\"urn:x\"")))
-    assert(seqRows.filter(_.contains("<b:book"))
-      .forall(r => "xmlns:b".r.findAllIn(r).size == 1),
-      "a record redeclaring its own prefix must not get a duplicate")
-    // byte-level split reader at a forced split size: same records, same
-    // re-injection (ranges after the first rely on the planned seedNs)
-    val splitRows = Xml.readXmlNodePathSplit(spark, dir, "/catalog/book",
+    for (rows <- Seq(seqRows, wholeRows)) {
+      assert(rows.length === 40)
+      assert(rows.filter(_.contains("<x:book"))
+        .forall(_.contains("xmlns:x=\"urn:x\"")))
+      assert(rows.filter(_.contains("<b:book"))
+        .forall(r => "xmlns:b".r.findAllIn(r).size == 1),
+        "a record redeclaring its own prefix must not get a duplicate")
+    }
+    // byte-level scanner at a forced split size: same records, same
+    // re-injection (ranges after the first rely on the planned scopes)
+    val splitRows = Xml.readXmlNodePath(spark, dir, "/catalog/book",
         targetSplitBytes = 512)
       .collect().map(_.getString(0))
     assert(splitRows.length === 40)
@@ -291,7 +297,8 @@ class Round9Spec extends AnyFunSuite {
           StructType(Seq(StructField("_key", LongType)))))
         .select("p._key").collect().map(_.getLong(0)).sorted.toSeq
     }
-    assert(keys(seqRows) === (0L until 40L) && keys(splitRows) === keys(seqRows))
+    assert(keys(seqRows) === (0L until 40L) && keys(splitRows) === keys(seqRows) &&
+      keys(wholeRows) === keys(seqRows))
   }
 
   test("merge-time type widening: wide snapshot, narrow carried files, safe follow-ups") {

@@ -159,12 +159,12 @@ class XmlSpec extends AnyFunSuite {
       Xml.splitTargetBytes(conf, cores, sizes)
     }
     val mib = 1L << 20
-    val file = 32 * mib + mib / 4 // 32.25 MiB, just over the routing threshold
+    val file = 32 * mib + mib / 4 // 32.25 MiB, the size of xml_ingest's big file
     // default confs: 128 MiB cap, 4 MiB open cost charged per file
     assert(target(4, Seq(file)) == (file + 4 * mib) / 4)
-    assert(target(4, Seq(file)) == 9502720L) // 9.06 MiB: > 2x smaller, 4 chunks
-    // one core: the target covers the whole file, so it is not "big" (the
-    // sequential planner) and its records fit in one range
+    assert(target(4, Seq(file)) == 9502720L) // 9.06 MiB: 4 chunks
+    // one core: the target covers the whole file, so it is one whole-file
+    // range with no planning pass
     assert(target(1, Seq(file)) >= file)
     // maxPartitionBytes caps the target
     assert(target(4, Seq(file), "spark.sql.files.maxPartitionBytes" -> "2m") == 2 * mib)
@@ -188,7 +188,8 @@ class XmlSpec extends AnyFunSuite {
     val dir = Paths.get(tmpFile("wide_tag.xml",
       (head ++ Seq(big) ++ tail).mkString("<catalog>\n", "\n", "\n</catalog>")))
       .getParent.toString
-    def read(target: Long) = Xml.readXmlNodePathSplit(spark, dir, "/catalog/book", target)
+    def read(target: Long) =
+      Xml.readXmlNodePath(spark, dir, "/catalog/book", targetSplitBytes = target)
       .collect().map(_.getString(0)).toSeq
     val seq = read(1L << 30)
     assert(seq.size == 6001 && seq(3000).contains("wide"))
@@ -261,16 +262,50 @@ class XmlSpec extends AnyFunSuite {
     val sizes = docs.map(d => Files.size(root.resolve("all").resolve(d._1)))
     val target = Xml.splitTargetBytes(ss.sessionState.conf, ss.sparkContext.defaultParallelism,
       sizes)
-    assert(sizes(5) > 2 * target && sizes.patch(5, Nil, 1).forall(_ <= 2 * target))
-    val packed = Xml.readXmlNodePathSplit(ss, root.resolve("all").toString, "/catalog/book")
+    assert(sizes(5) > 2 * target && sizes.patch(5, Nil, 1).forall(_ <= target))
+    val packed = Xml.readXmlNodePath(ss, root.resolve("all").toString, "/catalog/book")
     // unpacked, the eleven small files alone would be eleven tasks
     assert(packed.rdd.getNumPartitions > 1 && packed.rdd.getNumPartitions < 11)
     val single = docs.flatMap { case (name, _) =>
-      rows(Xml.readXmlNodePathSplit(ss, root.resolve(name.stripSuffix(".xml")).toString,
-        "/catalog/book", target))
+      rows(Xml.readXmlNodePath(ss, root.resolve(name.stripSuffix(".xml")).toString,
+        "/catalog/book", targetSplitBytes = target))
     }
     val got = rows(packed)
     assert(got.size == 11 * 280 + 12000)
     assert(got == single, "packed split read reordered or changed records")
+  }
+
+  test("malformed documents: a truncated file or a stray end tag fails the read with file and offset") {
+    val doc = (1 to 400).map(i => s"""  <book key="$i"><name>n$i</name></book>""")
+      .mkString("<catalog>\n", "\n", "\n</catalog>\n")
+    def dirOf(name: String, content: String) = Paths.get(tmpFile(name, content)).getParent.toString
+    def failure(name: String, content: String, target: Long): String = {
+      val e = intercept[Exception](Xml.readXmlNodePath(spark, dirOf(name, content),
+        "/catalog/book", targetSplitBytes = target).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(msgs.contains("malformed XML") && msgs.contains(name), msgs)
+      msgs
+    }
+    // cut inside the last record: as one whole-file range, and above the
+    // target, where the file's last planned range reaches end of input
+    val cut = doc.substring(0, doc.length - 40)
+    assert(cut.length > 4 * 1024)
+    for ((name, target) <- Seq("cut_small.xml" -> (1L << 30), "cut_big.xml" -> 1024L))
+      assert(failure(name, cut, target).contains(s"at byte ${cut.length}: end of input"))
+    // one end tag more than start tags
+    for ((name, target) <- Seq("stray_small.xml" -> (1L << 30), "stray_big.xml" -> 1024L))
+      assert(failure(name, doc + "</catalog>\n", target).contains(s"at byte ${doc.length}"))
+    // a mismatched end tag inside a record balances: the record reaches
+    // from_xml, whose PERMISSIVE mode routes it to the corrupt column
+    val schema = StructType(Seq(StructField("_key", LongType), StructField("name", StringType),
+      StructField("_corrupt", StringType)))
+    val parsed = Xml.readXmlNodePath(spark,
+        dirOf("mismatch.xml", doc.replace("<name>n7</name>", "<name>n7</nam>")), "/catalog/book")
+      .select(from_xml(col("xml"), schema, java.util.Map.of("mode", "PERMISSIVE",
+        "columnNameOfCorruptRecord", "_corrupt")).as("p"))
+      .select(col("p._key"), col("p._corrupt").isNotNull).collect()
+    assert(parsed.length == 400)
+    assert(parsed.count(_.getBoolean(1)) == 1 && parsed.count(r => !r.isNullAt(0)) == 399)
   }
 }
