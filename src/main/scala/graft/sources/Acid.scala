@@ -1151,13 +1151,8 @@ object Acid {
         .toSeq.sortBy(_._1)
       finally st.close()
     }
-    listed.headOption
-      .filter(_ => listed.forall(_._2 > 0L))
-      .flatMap { case (p0, b0) => cachedFooterSchema(s, p0, b0) } match {
-      case Some(sch) =>
-        org.apache.spark.sql.GraftSqlBridge.manifestParquetFrame(s, sch, listed)
-      case None => s.read.parquet(s"$tableDir/$dataDir")
-    }
+    footerFrame(s, listed, oneWriter = true)
+      .getOrElse(s.read.parquet(s"$tableDir/$dataDir"))
   }
 
   /** DataFrame over an explicit list of immutable committed files (dv
@@ -1169,14 +1164,8 @@ object Acid {
   private def sidecarFrame(s: SparkSession, dir: String,
       paths: Seq[String]): DataFrame = {
     val abs = paths.map(p => s"$dir/$p")
-    val sized = abs.map(p => (p, Try(Files.size(Paths.get(p))).getOrElse(0L)))
-    val schemas = sized.map { case (p, b) =>
-      if (b > 0L) cachedFooterSchema(s, p, b) else None }
-    if (paths.nonEmpty && schemas.forall(_.isDefined) &&
-        schemas.forall(_ == schemas.head))
-      org.apache.spark.sql.GraftSqlBridge.manifestParquetFrame(
-        s, schemas.head.get, sized)
-    else s.read.parquet(abs: _*)
+    footerFrame(s, abs.map(p => (p, Try(Files.size(Paths.get(p))).getOrElse(0L))))
+      .getOrElse(s.read.parquet(abs: _*))
   }
 
   private def statsOf(s: SparkSession, tableDir: String, dataDir: String,
@@ -1405,14 +1394,8 @@ object Acid {
     // uniform cached footer schema build over the manifest file index
     // (round 21 — zero listing/inference job, same as readMergedSubset).
     val df = {
-      val paths = entries.map(e => s"$tableDir/${e.path}")
-      val schemas = entries.map(e =>
-        if (e.bytes > 0L) cachedFooterSchema(s, s"$tableDir/${e.path}", e.bytes)
-        else None)
-      if (schemas.forall(_.isDefined) && schemas.forall(_ == schemas.head))
-        org.apache.spark.sql.GraftSqlBridge.manifestParquetFrame(
-          s, schemas.head.get, entries.map(e => (s"$tableDir/${e.path}", e.bytes)))
-      else s.read.parquet(paths: _*)
+      val abs = entries.map(e => (s"$tableDir/${e.path}", e.bytes))
+      footerFrame(s, abs).getOrElse(s.read.parquet(abs.map(_._1): _*))
     }
     val srcs = transformSrcCols(df, monotone)
     if (srcs.isEmpty) return entries
@@ -2569,11 +2552,8 @@ object Acid {
     // the union is one footer's schema — the one case the generic
     // commit seeding's one-directory guard cannot see (round 20)
     for (idv <- manifestIdOf(dir, 0); f <- entries.headOption;
-         sch <- org.apache.spark.sql.execution.datasources.parquet
-           .GraftParquetBridge.footerSchema(s, s"$dir/${f.path}"))
-      // asNullable: cache the forced-nullable shape inference would return
-      mergedSchemaCache.put((dir, 0),
-        (idv, org.apache.spark.sql.GraftSqlBridge.forceNullable(sch)))
+         sch <- footerSchemaOf(s, dir, f))
+      cacheUnion(dir, 0, idv, sch)
     values.length
   }
 
@@ -2973,37 +2953,21 @@ object Acid {
     case None => compute
   }
 
-  /** Commit-time cache SEEDING: an append whose (physical) write schema
-    * matches the parent version's footer union — by catalogString, i.e.
-    * names+types, nullability/metadata-insensitive — cannot change the
-    * union, so the child version inherits the parent's cached schemas
-    * and its first post-commit query skips the footer sweep entirely.
-    * Schema-evolving or truncating commits simply don't seed (their
-    * first read re-infers). The composed table schema is inherited with
-    * the parent's sidecar fingerprint — lookups re-check the live
-    * fingerprint, so a sidecar write between commit and query still
-    * misses correctly. */
-  private[sources] def seedSchemaCaches(dir: String, v: Int,
-      physWrite: StructType): Unit =
-    for (idv <- manifestIdOf(dir, v); idp <- manifestIdOf(dir, v - 1)) {
-      Option(mergedSchemaCache.get((dir, v - 1))).foreach { case (cid, sch) =>
-        if (cid == idp && sch.catalogString == physWrite.catalogString) {
-          mergedSchemaCache.put((dir, v), (idv, sch))
-          Option(tableSchemaCache.get((dir, v - 1, false))).foreach {
-            case (tid, tfp, tsch) =>
-              if (tid == idp) tableSchemaCache.put((dir, v, false), (idv, tfp, tsch))
-          }
-        }
-      }
-    }
+  /** The one writer of `mergedSchemaCache`: version `v`'s footer union,
+    * guarded by its manifest identity. */
+  private def cacheUnion(dir: String, v: Int, id: ManifestId,
+      sch: StructType): Unit = {
+    if (mergedSchemaCache.size > 16384) mergedSchemaCache.clear()
+    mergedSchemaCache.put((dir, v), (id, sch))
+  }
 
   /** COMMIT-TIME cache seeding for every main-line commit (round 20):
     * called by `commitManifest` after the put-if-absent succeeds, so the
     * table's FIRST post-commit read skips mergeSchema inference — a
     * distributed listing + footer-merge job over the whole live set
-    * (measured 1.3 s at 600 files, minutes at 10^6; the round-19 seeding
-    * only covered same-shape SQL appends with an already-cached parent).
-    * Three exact cases, everything else left to inference:
+    * (measured 1.3 s at 600 files, minutes at 10^6). It covers every
+    * writer, the SQL appends, rewrites, overwrites and streaming epochs
+    * included. Three exact cases, everything else left to inference:
     *
     *  1. SAME FILE SET as the parent (DV / positional-delete / bloom /
     *     constraint stamps): the union depends only on file contents —
@@ -3011,15 +2975,23 @@ object Acid {
     *  2. NEW FILES all in ONE staged directory — one logical write, so
     *     one footer IS the segment's schema (read driver-side, row
     *     groups skipped, no job):
-    *     a. full replace (CREATE / CTAS / RTAS / truncating overwrite /
-    *        full OPTIMIZE): the union IS the segment schema.
-    *     b. delta commit (append / merge / partial rewrite) whose
-    *        segment schema catalogString-matches the parent's cached
-    *        union (the r19 seeding convention): the union is absorbing —
+    *     a. the segment schema catalogString-matches the parent's cached
+    *        union (names+types, nullability/metadata-insensitive): the
+    *        child inherits the parent's cached schemas. On a delta commit
+    *        (append / merge / partial rewrite) the union is absorbing —
     *        carried files merged into the parent union before, and the
-    *        new segment re-carries every parent-union column — so the
-    *        child inherits the parent's cached schemas whatever the
-    *        commit removed.
+    *        new segment re-carries every parent-union column — whatever
+    *        the commit removed; a full replace (a rewrite of every file)
+    *        writes the parent's shape again.
+    *     b. otherwise a full replace (CREATE / CTAS / RTAS / truncating
+    *        overwrite / full OPTIMIZE): the union IS the segment schema.
+    *
+    * An inherited composed table schema keeps the parent's sidecar
+    * fingerprint — lookups re-check the live fingerprint, so a sidecar
+    * write between commit and query still misses — and is inherited only
+    * when it was cached for the parent's CURRENT manifest: after a DROP
+    * and a recreate under the same path, the dead table's entry for that
+    * version number must not reach the new table.
     *
     * CONVERT is excluded (it adopts pre-existing files of unproven
     * shapes); a shrinking file set (drop-only DELETE) never seeds — a
@@ -3031,60 +3003,51 @@ object Acid {
     if (s == null) return
     val idv = manifestIdOf(dir, v).orNull
     if (idv == null) return
-    def inherit(sch: StructType, fromV: Int): Unit = {
-      if (mergedSchemaCache.size > 16384) mergedSchemaCache.clear()
-      mergedSchemaCache.put((dir, v), (idv, sch))
-      // composed table schema: same union + live-fingerprint-checked
-      // sidecars ⇒ inheritable, exactly like seedSchemaCaches (r19)
-      Option(tableSchemaCache.get((dir, fromV, false))).foreach {
-        case (_, tfp, tsch) => tableSchemaCache.put((dir, v, false), (idv, tfp, tsch))
+    // the parent's cached union, when cached for its current manifest
+    lazy val parent: Option[(ManifestId, StructType)] =
+      if (v == 0) None
+      else for (idp <- manifestIdOf(dir, v - 1);
+                (cid, sch) <- Option(mergedSchemaCache.get((dir, v - 1)))
+                if cid == idp) yield (idp, sch)
+    def inherit(idp: ManifestId, sch: StructType): Unit = {
+      cacheUnion(dir, v, idv, sch)
+      Option(tableSchemaCache.get((dir, v - 1, false))).foreach {
+        case (tid, tfp, tsch) =>
+          if (tid == idp) tableSchemaCache.put((dir, v, false), (idv, tfp, tsch))
       }
     }
-    val paths = m.files.map(_.path)
     val parentPaths: Set[String] =
       if (v == 0) Set.empty
       else Try(readManifest(dir, v - 1).files.map(_.path).toSet)
         .getOrElse(return)
-    val newPaths = paths.filterNot(parentPaths)
-    if (newPaths.isEmpty) {
-      if (paths.toSet == parentPaths && v > 0)
-        for (idp <- manifestIdOf(dir, v - 1);
-             (cid, sch) <- Option(mergedSchemaCache.get((dir, v - 1)))
-             if cid == idp) inherit(sch, v - 1)
+    val added = m.files.filterNot(f => parentPaths(f.path))
+    if (added.isEmpty) {
+      if (m.files.map(_.path).toSet == parentPaths)
+        parent.foreach { case (idp, sch) => inherit(idp, sch) }
       return
     }
     def dirOf(p: String) = {
       val i = p.lastIndexOf('/'); if (i < 0) "" else p.substring(0, i)
     }
-    val d0 = dirOf(newPaths.head)
-    if (d0.isEmpty || !newPaths.forall(dirOf(_) == d0)) return
-    // asNullable (round 21, r20 ADVICE high): raw footers mark parquet
-    // REQUIRED fields nullable=false; the caches must hold the forced-
-    // nullable shape inference returns (s.read applies asNullable via
-    // DataSource.resolveRelation), or a seeded union poisons NULL-predicate
-    // queries after a later commit writes the first NULLs.
-    def fsch = org.apache.spark.sql.execution.datasources.parquet
-      .GraftParquetBridge.footerSchema(s, s"$dir/${newPaths.head}")
-      .map(org.apache.spark.sql.GraftSqlBridge.forceNullable)
-    if (newPaths.size == paths.size)
-      fsch.foreach { sch =>
-        if (mergedSchemaCache.size > 16384) mergedSchemaCache.clear()
-        mergedSchemaCache.put((dir, v), (idv, sch))
+    val d0 = dirOf(added.head.path)
+    if (d0.isEmpty || !added.forall(f => dirOf(f.path) == d0)) return
+    val fullReplace = added.size == m.files.size
+    // a delta commit checks the parent's cache FIRST — the footer read,
+    // cheap as it is, is pure waste when there is nothing to inherit
+    if (!fullReplace && parent.isEmpty) return
+    footerSchemaOf(s, dir, added.head).foreach { sch =>
+      parent.filter(_._2.catalogString == sch.catalogString) match {
+        case Some((idp, psch)) => inherit(idp, psch)
+        case None => if (fullReplace) cacheUnion(dir, v, idv, sch)
       }
-    else
-      // delta commit: check the parent's cache FIRST — the footer read,
-      // cheap as it is, is pure waste when there is nothing to inherit
-      for (idp <- manifestIdOf(dir, v - 1);
-           (cid, psch) <- Option(mergedSchemaCache.get((dir, v - 1)))
-           if cid == idp;
-           sch <- fsch if psch.catalogString == sch.catalogString)
-        inherit(psch, v - 1)
+    }
   } catch { case scala.util.control.NonFatal(_) => () }
 
   /** readMerged for the FULL live file set of version `v`, with the
     * footer-union schema cached per manifest identity. Subset reads
-    * (merge/delete touched-file scans) stay on plain readMerged — their
-    * unions are subset-dependent and the sets are operation-bounded.
+    * (merge/delete touched-file scans) go through readMergedSubset —
+    * their unions are subset-dependent and the sets are
+    * operation-bounded.
     * On a schema-cache hit with every entry's exact byte length stamped,
     * the frame builds over the MANIFEST file index (zero filesystem
     * listing — `spark.read.parquet(paths)` re-stats every path, a
@@ -3116,25 +3079,22 @@ object Acid {
               Option(fileSchemaCache.get((s"$dir/${f.path}", f.bytes)))
             else None)
           val sch =
-            (if (hits.forall(_.isDefined))
-              Try(hits.flatten.reduceLeft((a, b) =>
-                org.apache.spark.sql.GraftSqlBridge.mergeSchemas(a, b,
-                  s.conf.get("spark.sql.caseSensitive", "false").toBoolean)))
-                .toOption
+            (if (hits.forall(_.isDefined)) foldFooters(s, hits.flatten)
             else None).getOrElse(
               inferMerged(s, dir)(files.map(f => s"$dir/${f.path}"): _*).schema)
-          if (mergedSchemaCache.size > 16384) mergedSchemaCache.clear()
-          mergedSchemaCache.put((dir, v), (id, sch))
+          cacheUnion(dir, v, id, sch)
           Some(sch)
         }
     }
   }
 
-  // Per-file FOOTER SCHEMA cache (round 20, the per-file twin of
-  // fileFieldsCache): data files are immutable once committed and staged
-  // names are UUID-unique, so the schema is keyed by (absolute path,
-  // manifest-stamped bytes) and never invalidates. One raw footer read
-  // on first touch (~1 ms, row groups skipped), zero after.
+  // Per-file FOOTER SCHEMA cache (round 20) — the engine's one footer
+  // reader: data files are immutable once committed and staged names are
+  // UUID-unique, so the schema is keyed by (absolute path, manifest-
+  // stamped bytes) and never invalidates. One raw footer read on first
+  // touch (~1 ms, row groups skipped), zero after. An entry with no
+  // stamped length (bytes 0) has no identity to key on: it reads the
+  // footer every time.
   private val fileSchemaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), StructType]
   private def cachedFooterSchema(s: SparkSession, absPath: String,
@@ -3151,51 +3111,66 @@ object Acid {
     org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
       .footerSchema(s, absPath).map { sch0 =>
         val sch = org.apache.spark.sql.GraftSqlBridge.forceNullable(sch0)
-        if (fileSchemaCache.size > 65536) fileSchemaCache.clear()
-        fileSchemaCache.put(k, sch)
+        if (bytes > 0L) {
+          if (fileSchemaCache.size > 65536) fileSchemaCache.clear()
+          fileSchemaCache.put(k, sch)
+        }
         sch
       }
   }
+  private def footerSchemaOf(s: SparkSession, dir: String,
+      f: FileEntry): Option[StructType] =
+    cachedFooterSchema(s, s"$dir/${f.path}", f.bytes)
+
+  /** The mergeSchema union of footer schemas folded DRIVER-SIDE (round
+    * 21, r20 verdict next #5): the same reduceLeft in file order
+    * mergeSchemasInParallel runs as a distributed job, so the union — and
+    * the EXISTS-default null fill it implies — is identical by
+    * construction. None on incompatible types, where the inference job
+    * would throw too. */
+  private def foldFooters(s: SparkSession,
+      schemas: Seq[StructType]): Option[StructType] =
+    Try(schemas.reduceLeft((a, b) =>
+      org.apache.spark.sql.GraftSqlBridge.mergeSchemas(a, b,
+        s.conf.get("spark.sql.caseSensitive", "false").toBoolean))).toOption
+
+  /** A frame over immutable files — (absolute path, exact length) —
+    * through the manifest file index: zero listing and zero inference
+    * jobs (round 21). The schema is the one their cached footers agree
+    * on; `union` folds disagreeing footers into the mergeSchema union
+    * instead, and `oneWriter` (one job wrote every file) lets the first
+    * footer speak for all. None on an unknown length, an unreadable
+    * footer or a disagreement not folded: each caller keeps its own
+    * fallback reader. */
+  private def footerFrame(s: SparkSession, files: Seq[(String, Long)],
+      union: Boolean = false, oneWriter: Boolean = false): Option[DataFrame] =
+    if (files.isEmpty || files.exists(_._2 <= 0L)) None
+    else {
+      val schemas = (if (oneWriter) files.take(1) else files)
+        .map { case (p, b) => cachedFooterSchema(s, p, b) }
+      val sch =
+        if (schemas.exists(_.isEmpty)) None
+        else if (schemas.forall(_ == schemas.head)) schemas.head
+        else if (union) foldFooters(s, schemas.flatten)
+        else None
+      sch.map(org.apache.spark.sql.GraftSqlBridge.manifestParquetFrame(s, _, files))
+    }
 
   /** Subset read with readMerged's EXACT subset-union semantics, minus
-    * the distributed inference in the overwhelmingly common case: when
-    * every file of the subset carries the IDENTICAL footer schema
-    * (checked against the per-file cache — op-bounded driver reads, then
-    * free), the mergeSchema union IS that schema, so the frame builds
-    * over the manifest file index with zero listing and zero inference
-    * jobs. Any schema divergence (an evolved subset) falls back to plain
-    * readMerged — same result, paid inference. Used by the REWRITE paths
+    * the distributed inference: the union of the subset's cached footers
+    * (op-bounded driver reads, then free) builds the frame over the
+    * manifest file index. An unstamped entry, an unreadable footer or
+    * incompatible types fall back to plain readMerged — same union, paid
+    * inference, and its declared-schema rescue. Used by the REWRITE paths
     * (merge / delete / optimize touched-file scans), which must keep
     * subset-union semantics: reading under the full-version union would
     * write explicit NULLs into files that never carried a column and
     * flip the EXISTS-default fill for those rows. */
   private[sources] def readMergedSubset(s: SparkSession, dir: String,
       files: Seq[FileEntry]): DataFrame = {
-    val paths = files.map(f => s"$dir/${f.path}")
-    val schemas = files.map(f => cachedFooterSchema(s, s"$dir/${f.path}", f.bytes))
-    // Diverged (schema-evolved) subsets merge the cached footer schemas
-    // DRIVER-SIDE (round 21, r20 verdict next #5): the same reduceLeft in
-    // file order mergeSchemasInParallel runs as a distributed job, so the
-    // union — and the EXISTS-default null fill it implies — is identical
-    // by construction. Incompatible types throw exactly like the
-    // inference job would; that case falls back to readMerged, whose
-    // declared-schema rescue handles it.
-    val unionSch: Option[StructType] =
-      if (files.isEmpty || schemas.exists(_.isEmpty)) None
-      else if (schemas.forall(_ == schemas.head)) schemas.head
-      else Try(schemas.flatten.reduceLeft((a, b) =>
-        org.apache.spark.sql.GraftSqlBridge.mergeSchemas(a, b,
-          s.conf.get("spark.sql.caseSensitive", "false").toBoolean))).toOption
-    unionSch match {
-      case Some(sch) =>
-        val df =
-          if (files.forall(_.bytes > 0L))
-            org.apache.spark.sql.GraftSqlBridge.manifestParquetFrame(
-              s, sch, files.map(f => (s"$dir/${f.path}", f.bytes)))
-          else s.read.schema(sch).parquet(paths: _*)
-        widenToDeclared(dir, df)
-      case None => readMerged(s, dir)(paths: _*)
-    }
+    val abs = files.map(f => (s"$dir/${f.path}", f.bytes))
+    footerFrame(s, abs, union = true).map(widenToDeclared(dir, _))
+      .getOrElse(readMerged(s, dir)(abs.map(_._1): _*))
   }
 
   /** Read ANY subset of version `v`'s files under the version's
@@ -3259,41 +3234,19 @@ object Acid {
   /** EXISTS-default fill on the LIBRARY read path (round-17): files that
     * predate a defaulted column read the default instead of NULL — the
     * same per-file rule the V2 readers apply at open. The per-file
-    * evidence here is the parquet FOOTER (one driver read per file,
-    * defaulted tables only — every other table pays one Files.exists);
-    * the fill targets exactly the rows of column-less files via the
-    * `_metadata` filename, so post-ALTER stored NULLs stay NULL. */
-  // Per-file footer FIELD-NAME cache (round 19, fillDefaults' footer
-  // sweep was O(live files) driver IO per snapshot call on defaulted
-  // tables): data files are immutable once committed and staged names
-  // are UUID-unique, so the field set is keyed by (absolute path,
-  // manifest-stamped bytes) and never invalidates.
-  private val fileFieldsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Set[String]]
-  private def fileFields(absPath: String, bytes: Long): Set[String] = {
-    val k = (absPath, bytes)
-    val hit = fileFieldsCache.get(k)
-    if (hit != null) return hit
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(absPath),
-      new org.apache.hadoop.conf.Configuration())
-    val fr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    val fields =
-      try fr.getFooter.getFileMetaData.getSchema.getFields.asScala
-        .map(_.getName).toSet
-      finally fr.close()
-    if (fileFieldsCache.size > 65536) fileFieldsCache.clear()
-    fileFieldsCache.put(k, fields)
-    fields
-  }
-
+    * evidence here is the cached parquet FOOTER (one driver read per file
+    * on first touch, defaulted tables only — every other table pays one
+    * Files.exists); the fill targets exactly the rows of column-less
+    * files via the `_metadata` filename, so post-ALTER stored NULLs stay
+    * NULL. */
   private def fillDefaults(s: SparkSession, dir: String,
       files: Seq[FileEntry], raw: DataFrame): DataFrame = {
     val ds = defaultsOf(dir)
     if (ds.isEmpty) return raw
     val present: Map[String, Set[String]] = files.map { f =>
       f.path.substring(f.path.lastIndexOf('/') + 1) ->
-        fileFields(s"$dir/${f.path}", f.bytes)
+        footerSchemaOf(s, dir, f).getOrElse(throw new java.io.IOException(
+          s"$dir/${f.path}: unreadable parquet footer")).fieldNames.toSet
     }.toMap
     val withName = raw.withColumn("__gf",
       expr("substring_index(_metadata.file_path, '/', -1)"))
@@ -3324,13 +3277,10 @@ object Acid {
       if (live.isEmpty) snapshot(s, dir).limit(0)
       else applyDv(s, dir, live,
         readMergedSubsetAt(s, dir, latestVersion(dir), live))
-    // the key column's name comes from a surviving file's footer, not a
-    // full-manifest read (which would defeat the pruned planning); raw
-    // footer bridge (round 20) — no listing, no DataFrame analysis
+    // the key column's name comes from a surviving file's cached footer,
+    // not a full-manifest read (which would defeat the pruned planning)
     val key = live.headOption
-      .flatMap(f => org.apache.spark.sql.execution.datasources.parquet
-        .GraftParquetBridge.footerSchema(s, s"$dir/${f.path}")
-        .map(_.fields.head.name))
+      .flatMap(footerSchemaOf(s, dir, _).map(_.fields.head.name))
       .getOrElse(keyColOf(s, dir))
     (df.filter(col(key).between(lo, hi)), live.size, total)
   }
@@ -3341,14 +3291,12 @@ object Acid {
     if (m.files.isEmpty)
       declaredSchema(dir).getOrElse(throw new IllegalStateException(
         s"$dir: empty table with no declared schema")).fields.head.name
-    else {
-      // raw footer bridge (round 20): keyColOf runs on nearly every
-      // library operation — one footer read, no listing/analysis
-      val p = s"$dir/${m.files.head.path}"
-      org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
-        .footerSchema(s, p).map(_.fields.head.name)
-        .getOrElse(s.read.parquet(p).schema.fields.head.name)
-    }
+    else
+      // keyColOf runs on nearly every library operation — the cached
+      // footer, no listing/analysis
+      footerSchemaOf(s, dir, m.files.head).map(_.fields.head.name)
+        .getOrElse(s.read.parquet(s"$dir/${m.files.head.path}")
+          .schema.fields.head.name)
   }
 
   // ---- Bloom point-lookup skipping (tbl_bloom_skip) --------------------
@@ -3459,13 +3407,11 @@ object Acid {
     val (envelope, total, _) =
       if (probes.isEmpty) planRangeEntries(dir, latestVersion(dir), 0L, -1L)
       else planRangeEntries(dir, latestVersion(dir), probes.min, probes.max)
-    // key name from a surviving file's footer, not a full-manifest read —
-    // via the raw footer bridge (round 20): same schema a single-file
-    // spark.read would derive, without the listing + DataFrame analysis
+    // key name from a surviving file's cached footer, not a full-manifest
+    // read: same schema a single-file spark.read would derive, without
+    // the listing + DataFrame analysis
     val key = envelope.headOption
-      .flatMap(f => org.apache.spark.sql.execution.datasources.parquet
-        .GraftParquetBridge.footerSchema(s, s"$dir/${f.path}")
-        .map(_.fields.head.name))
+      .flatMap(footerSchemaOf(s, dir, _).map(_.fields.head.name))
       .getOrElse(keyColOf(s, dir))
     val rangeLive = envelope.filter(f => probes.exists(k => k >= f.minKey && k <= f.maxKey))
     val live = rangeLive.filter { f =>
@@ -3560,19 +3506,21 @@ object Acid {
       }
     val (touched, untouched) = m.files.partition(f => touchedPaths.contains(f.path))
 
-    // Target schema = first file's, upgraded to any WIDER type the
-    // declared sidecar records (a previous widening merge): keeps every
-    // post-widening merge writing at the declared width even when the
-    // sampled file is a narrow carried one.
-    val fileSchema: StructType = {
-      val p = s"$dir/${m.files.head.path}"
-      // one raw footer read (round 20) — the schema a single-file
-      // spark.read derives, minus its listing + DataFrame analysis;
-      // asNullable to match what that spark.read would have returned
-      org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
-        .footerSchema(s, p).map(org.apache.spark.sql.GraftSqlBridge.forceNullable)
-        .getOrElse(s.read.parquet(p).schema)
-    }
+    // Target schema = the touched files' union (the rewrite carries every
+    // column they carry: a column only the batch names would otherwise
+    // count as evolved and lose its value on the untouched rows of a
+    // rewritten file), or the base version's union when nothing is
+    // touched — upgraded to any WIDER type the declared sidecar records
+    // (a previous widening merge): keeps every post-widening merge
+    // writing at the declared width even when the touched files are
+    // narrow carried ones.
+    val touchedRead =
+      if (touched.isEmpty) None
+      else Some(applyDv(s, dir, touched, readMergedSubset(s, dir, touched)))
+    val fileSchema: StructType = touchedRead.map(_.schema)
+      .orElse(mergedSchemaOf(s, dir, baseVersion))
+      .getOrElse(throw new IllegalStateException(
+        s"$dir: version $baseVersion has no readable files to merge into"))
     val targetSchema: StructType = declaredSchema(dir) match {
       case Some(ds) if colMapOf(dir).isEmpty =>
         StructType(fileSchema.fields.map(f =>
@@ -3586,10 +3534,8 @@ object Acid {
           }))
       case _ => fileSchema
     }
-    val touchedDf =
-      if (touched.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], targetSchema)
-      else applyDv(s, dir, touched, readMergedSubset(s, dir, touched))
+    val touchedDf = touchedRead.getOrElse(
+      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], targetSchema))
 
     // Union column set; batch wins where it carries the column (UPDATE SET),
     // target survives where it doesn't, batch-only columns evolve the schema.
@@ -4361,7 +4307,7 @@ object Acid {
     for (idv <- manifestIdOf(dir, latest + 1); idt <- manifestIdOf(dir, toVersion);
          (cid, sch) <- Option(mergedSchemaCache.get((dir, toVersion)))
          if cid == idt)
-      mergedSchemaCache.put((dir, latest + 1), (idv, sch))
+      cacheUnion(dir, latest + 1, idv, sch)
     latest + 1
   }
 

@@ -1320,10 +1320,7 @@ class AcidReplaceGroupsWrite(dir: String, writeSchema: StructType,
     // library merge runs) or partition pruning decays with every rewrite
     val entries = Acid.restampPartStats(SparkSession.active, dir,
       AcidWriteMessages.entriesOf(messages))
-    val v = Acid.replaceCommit(dir, op.scannedFiles, entries, op = "REWRITE")
-    // a full-row rewrite writes the table's own shape: when it matches
-    // the parent union, the child inherits the cached schemas (r19)
-    Acid.seedSchemaCaches(dir, v, Acid.toPhysical(dir, writeSchema))
+    Acid.replaceCommit(dir, op.scannedFiles, entries, op = "REWRITE"): Unit
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -1486,14 +1483,7 @@ class AcidSqlStreamingWrite(dir: String, writeSchema: StructType,
     // partitioned table keeps its pruning (cost ∝ epoch, not stage dir)
     val entries = Acid.restampPartStats(SparkSession.active, dir,
       AcidWriteMessages.entriesOf(messages))
-    val (v, appended) =
-      Acid.appendCommitExactlyOnceTagged(dir, entries, writerTag, epochId)
-    // same-shape micro-batch appends inherit the parent's cached
-    // schemas (r19). Seed ONLY when this call actually committed: a
-    // replayed epoch returns the CURRENT latest version — possibly a
-    // concurrent writer's schema-evolved commit — and seeding would
-    // stamp this writer's narrower union onto it (r19 ADVICE medium #1).
-    if (appended) Acid.seedSchemaCaches(dir, v, Acid.toPhysical(dir, writeSchema))
+    Acid.appendCommitExactlyOnceTagged(dir, entries, writerTag, epochId): Unit
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -1579,9 +1569,7 @@ class AcidSqlBatchWrite(dir: String, writeSchema: StructType, truncate: Boolean)
       Acid.enforceConstraint(SparkSession.active, dir, stageDir, c)
     }
     // metadata-only atomic commit; put-if-absent rebase on conflict
-    val v = Acid.appendCommit(dir, entries, truncate)
-    // same-shape appends inherit the parent's cached schemas (round 19)
-    if (!truncate) Acid.seedSchemaCaches(dir, v, Acid.toPhysical(dir, writeSchema))
+    Acid.appendCommit(dir, entries, truncate): Unit
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

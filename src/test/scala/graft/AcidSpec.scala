@@ -655,6 +655,32 @@ class AcidSpec extends AnyFunSuite {
     assert(nulls > 0 && r.filesRewritten < r.filesTotal)
   }
 
+  test("a merge after an ADD COLUMN keeps the column on rows it does not touch") {
+    val dir = s"${Scratch.fresh("acid_spec_addcol_merge", sf)}/t"
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def frame(keys: Seq[Long], note: Boolean) = spark.createDataFrame(
+      spark.sparkContext.parallelize(keys.map(k =>
+        if (note) Row(k, k * 10, s"n$k") else Row(k, k)), 1),
+      StructType(Seq(StructField("k", LongType), StructField("v", LongType)) ++
+        (if (note) Seq(StructField("note", StringType)) else Nil)))
+    // two files, keys 1..50 and 51..100; the first never carries `note`
+    Acid.create(spark, dir, frame(1L to 100L, note = false), "k", 2)
+    Acid.addColumn(spark, dir, Seq("note"), StringType)
+    Acid.merge(spark, dir, frame(51L to 60L, note = true), "spec")
+    // rewrites the 51..100 file again: its nine other notes must survive,
+    // though the first manifest file has no `note` column
+    Acid.merge(spark, dir, frame(Seq(55L), note = true), "spec")
+    val notes = Acid.snapshot(spark, dir).where(col("note").isNotNull)
+      .select(col("k"), col("note")).collect()
+      .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    assert(notes == (51L to 60L).map(k => (k, s"n$k")))
+    // a merge that touches no file inserts under the version's union
+    Acid.merge(spark, dir, frame(Seq(500L), note = false), "spec")
+    assert(Acid.snapshot(spark, dir).where(col("note").isNotNull).count() == 10L)
+    assert(Acid.snapshot(spark, dir).count() == 101L)
+  }
+
   test("batch-id dedup is scoped per writer: two queries never dedup each other") {
     val dir = freshTable("acid_spec_perwriter")
     val batch = lowQuarterUpdates(sf)

@@ -56,6 +56,31 @@ class Round19Spec extends AnyFunSuite {
     spark.sql(s"DROP TABLE IF EXISTS $cat.t")
   }
 
+  test("schema cache never serves stale: a recreated table's first merge " +
+      "does not inherit the dropped table's columns") {
+    val root = Scratch.fresh("r19_recreate", sf)
+    val cat = "r19dr"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    import spark.implicits._
+    val dir = s"$root/t"
+    Acid.create(spark, dir, Seq((1L, 10L, 100L), (2L, 20L, 200L))
+      .toDF("k", "v", "x"), "k", 2)
+    // prime version 0's composed table schema with the (k, v, x) shape
+    assert(spark.table(s"$cat.t").columns.toSeq == Seq("k", "v", "x"))
+    spark.sql(s"DROP TABLE $cat.t")
+    // same path, same version number, a narrower shape
+    Acid.create(spark, dir, Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), "k", 2)
+    // same-shape merge rewriting one of the two files: version 1
+    // inherits version 0's cached schemas
+    Acid.merge(spark, dir, Seq((2L, 25L)).toDF("k", "v"), "m")
+    assert(Acid.readManifest(dir, 1).files.size == 2)
+    assert(spark.table(s"$cat.t").columns.toSeq == Seq("k", "v"))
+    assert(spark.table(s"$cat.t").orderBy("k").as[(Long, Long)].collect()
+      .toSeq == Seq((1L, 10L), (2L, 25L)))
+    spark.sql(s"DROP TABLE IF EXISTS $cat.t")
+  }
+
   test("commit-time schema seeding: same-shape appends hit, evolving " +
       "appends re-infer correctly") {
     val root = Scratch.fresh("r19_seed", sf)

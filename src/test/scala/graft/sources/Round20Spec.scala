@@ -175,7 +175,8 @@ class Round20Spec extends AnyFunSuite {
     * listing, no mergeSchema footer-merge (1.3 s at 600 files before the
     * change). The pins: (a) the seeded union is byte-identical to what
     * mergeSchema inference derives; (b) frame construction after
-    * create / append / positional-delete commits launches no job;
+    * create / append / positional-delete commits, SQL INSERT INTO /
+    * UPDATE / INSERT OVERWRITE and a streaming epoch launches no job;
     * (c) a schema-EVOLVING commit does not inherit the parent's
     * narrower union.
     */
@@ -242,6 +243,44 @@ class Round20Spec extends AnyFunSuite {
     val (_, jPdv) = jobsDuring(Acid.snapshot(spark, dir))
     assert(jPdv.isEmpty,
       s"snapshot construction after positional delete fired jobs: $jPdv")
+  }
+
+  test("commit-time seeding: the first read after SQL INSERT INTO, UPDATE, " +
+      "INSERT OVERWRITE and a streaming epoch plans with zero jobs") {
+    val root = Scratch.fresh("r20_seed_sql", sf)
+    val cat = "r20sq"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.AcidCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    import spark.implicits._
+    val dir = s"$root/t"
+    spark.sql(s"DROP TABLE IF EXISTS $cat.t")
+    spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v BIGINT)")
+    spark.sql(s"INSERT INTO $cat.t VALUES (1, 10), (2, 20), (3, 30)")
+    spark.table(s"$cat.t").collect(): Unit // prime
+    def firstRead(after: String): Unit = {
+      val (_, jobs) = jobsDuring {
+        (spark.table(s"$cat.t").schema, Acid.snapshot(spark, dir).schema)
+      }
+      assert(jobs.isEmpty, s"the first read after $after fired jobs: $jobs")
+    }
+    spark.sql(s"INSERT INTO $cat.t VALUES (4, 40)")
+    firstRead("INSERT INTO")
+    spark.sql(s"UPDATE $cat.t SET v = v + 1 WHERE k = 2")
+    firstRead("UPDATE")
+    spark.sql(s"INSERT OVERWRITE $cat.t VALUES (5, 50), (6, 60)")
+    firstRead("INSERT OVERWRITE")
+    // one streaming epoch through the SQL streaming sink's commit
+    val epoch = Seq((7L, 70L)).toDF("k", "v")
+    epoch.coalesce(1).write.mode("overwrite").parquet(s"$dir/s_e0")
+    val f = Files.list(Paths.get(dir, "s_e0")).iterator().asScala
+      .map(_.getFileName.toString).find(_.endsWith(".parquet")).get
+    new AcidSqlStreamingWrite(dir, epoch.schema, "q-r20-seed").commit(0L,
+      Array(AcidWriteMessage(s"s_e0/$f", 1L, 7L, 7L,
+        bytes = Files.size(Paths.get(dir, "s_e0", f)))))
+    firstRead("a streaming epoch")
+    assert(spark.table(s"$cat.t").orderBy("k").as[(Long, Long)].collect()
+      .toSeq == Seq((5L, 50L), (6L, 60L), (7L, 70L)))
+    spark.sql(s"DROP TABLE IF EXISTS $cat.t")
   }
 
   test("commit-time seeding: a schema-EVOLVING merge does not inherit the " +
