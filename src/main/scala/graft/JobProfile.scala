@@ -31,40 +31,9 @@ object JobProfile {
     final case class J(id: Int, desc: String, t0: Long, var t1: Long = -1L)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]
     val order = new java.util.concurrent.CopyOnWriteArrayList[J]
-    // AQE thread-pool submission masks both the stage names and the
-    // captured call site, but every stage-job still carries the SQL
-    // execution id of its root query — the SQLExecutionStart event's
-    // description IS the action's call site.
-    val execDesc = new java.util.concurrent.ConcurrentHashMap[Long, String]
-    val listener = new SparkListener {
-      override def onOtherEvent(
-          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          execDesc.put(s.executionId, s.description): Unit
-        case _ =>
-      }
+    val listener = new Attribution {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        // The result stage's name carries the action's call site
-        // ("collect at Acid.scala:1132") — the attribution that matters;
-        // an explicit job description (file-listing jobs set one) wins.
-        // stageInfos is not guaranteed sorted by stage id — sort like
-        // Spark's AppStatusListener before taking the result stage
-        val names = e.stageInfos.sortBy(_.stageId).map(_.name)
-        val site = names.reverse.find(n => !n.contains("CompletableFuture"))
-          .orElse(names.lastOption)
-        // AQE submits stage-jobs from a thread pool, so the stage names
-        // all read "withThreadLocalCaptured at CompletableFuture"; the
-        // job PROPERTIES still carry the action's call site.
-        val viaExec = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .flatMap(id => Option(execDesc.get(id.toLong)))
-        val d = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .filter(s => !s.contains("CompletableFuture"))
-          .orElse(viaExec)
-          .orElse(site)
-          .getOrElse("?")
-        val j = J(e.jobId, d, System.nanoTime())
+        val j = J(e.jobId, siteOf(e), System.nanoTime())
         jobs.put(e.jobId, j); order.add(j): Unit
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
@@ -104,3 +73,84 @@ object JobProfile {
     spark.stop()
   }
 }
+
+/** Attributes each Spark job to the call site of the action that ran it.
+  *
+  * The job's SQL execution id is looked up first: the execution-start
+  * event carries the action's call site even when AQE submits the job
+  * from a thread pool (whose stage names read "withThreadLocalCaptured
+  * at CompletableFuture"). An explicit job description (file-listing
+  * jobs set one) comes next, then the result stage's name. A streaming
+  * micro-batch sets the job description to the query's id/runId/batch
+  * text and every execution inside it inherits that text as its own
+  * description; that text names no call site, so it is skipped in favour
+  * of the execution's recorded call site. */
+class Attribution extends SparkListener {
+  private val execSite = new java.util.concurrent.ConcurrentHashMap[Long, String]
+
+  override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+    case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+      Attribution.siteOf(s.description, s.details)
+        .foreach(execSite.put(s.executionId, _)): Unit
+    case _ =>
+  }
+
+  def siteOf(e: SparkListenerJobStart): String = {
+    val props = Option(e.properties)
+    def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+    val viaExec = prop("spark.sql.execution.id").flatMap(id => Option(execSite.get(id.toLong)))
+    // stageInfos is not guaranteed sorted by stage id — sort like
+    // Spark's AppStatusListener before taking the result stage
+    val names = e.stageInfos.sortBy(_.stageId).map(_.name)
+    val stage = names.reverse.find(n => !n.contains("CompletableFuture"))
+      .orElse(names.lastOption)
+    viaExec
+      .orElse(prop("spark.job.description").filter(d =>
+        !d.contains("CompletableFuture") && prop(Attribution.StreamQueryId).isEmpty))
+      .orElse(stage)
+      .getOrElse("?")
+  }
+}
+
+object Attribution {
+  /** The local property every job of a streaming query carries. */
+  val StreamQueryId = "sql.streaming.queryId"
+
+  /** An execution's call site: its description, unless that is a
+    * streaming query's multi-line id text, in which case the first user
+    * frame of the call-site long form (`details`), rendered like Spark's
+    * short form ("method at File.scala:line"). */
+  private[graft] def siteOf(description: String, details: String): Option[String] =
+    if (description != null && description.nonEmpty && !description.contains('\n'))
+      Some(description)
+    else {
+      val frames = Option(details).toSeq.flatMap(_.split('\n')).map(_.trim)
+      val Frame = """(?:at )?(?:\S*/)?([\w$.]+)\.([\w$]+)\(([^:()]+):(\d+)\)""".r
+      frames.sliding(2).collectFirst {
+        case Seq(Frame(cls, m, _, _), Frame(ucls, _, file, line))
+            if cls.startsWith("org.apache.spark") && !ucls.startsWith("org.apache.spark") &&
+              !ucls.startsWith("scala.") && !ucls.startsWith("java.") =>
+          s"$m at $file:$line"
+      }
+    }
+
+  /** Run `body` with Spark computing each job's call site from the
+    * caller's own stack. A streaming query's thread pins every job's call
+    * site to the query's `start()` (Spark bridges it into the stream
+    * thread), so without this every job a micro-batch sink runs reads as
+    * that one line. Outside a streaming query this is `body`. */
+  def ownCallSites[T](sc: org.apache.spark.SparkContext)(body: => T): T = {
+    val short = sc.getLocalProperty("callSite.short")
+    if (short == null || sc.getLocalProperty(StreamQueryId) == null) body
+    else {
+      val long = sc.getLocalProperty("callSite.long")
+      sc.clearCallSite()
+      try body
+      finally {
+        sc.setLocalProperty("callSite.short", short)
+        sc.setLocalProperty("callSite.long", long)
+      }
+    }
+  }
+}
+

@@ -304,7 +304,7 @@ object AcidSql {
   /** Lexicographic bounds per referenced column from pushed filters whose
     * literal is a STRING or DATE — the cstats pruning coordinates (dates
     * render ISO `yyyy-MM-dd`, where string order IS date order, matching
-    * statsOf's stamp). `(None, None)` never appears: a column only enters
+    * statsSpec's stamp). `(None, None)` never appears: a column only enters
     * the map when some shape narrows it. Conservative by construction —
     * unrecognized shapes bound nothing, prefix filters bound only the low
     * side, and strict comparisons use their inclusive envelope (pruning
@@ -1633,7 +1633,7 @@ class AcidSqlDataWriter(tableDir: String, relPath: String, schema: StructType,
 
   // cstats: lexicographic min/max of the first CStatsBudget string/date
   // columns, tracked inline per segment (same selection rule as
-  // Acid.statsOf, whose distributed pass stamps library writes) — so
+  // Acid.statsSpec, whose write-task tracker stamps library writes) — so
   // SQL-INSERTed files prune on string/date predicates too. Dates render
   // ISO `yyyy-MM-dd`; a column with no non-null value gets no stats.
   private val cstatCols: Seq[(String, Int, Boolean)] =
@@ -1778,7 +1778,7 @@ class AcidSqlDataWriter(tableDir: String, relPath: String, schema: StructType,
       val pst = stamped.drop(1).flatten
       val cs = cstatCols.zipWithIndex.flatMap { case ((n, _, _), j) =>
         // bounds truncate Iceberg-style (Acid.CStatsBoundLen), same rule
-        // as the library path's statsOf: wide text values must not embed
+        // as the library path's statsSpec: wide text values must not embed
         // whole documents in the manifest entry
         if (sg.cMin(j) == null) None
         else Some((n, Acid.truncBoundMin(sg.cMin(j).toString),

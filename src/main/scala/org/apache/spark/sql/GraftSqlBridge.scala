@@ -104,6 +104,81 @@ object GraftSqlBridge {
     classic.Dataset.ofRows(cs, LogicalRelation(rel))
   }
 
+  /** Write `df` as parquet into `absDir` (replacing the directory if it
+    * exists) and return per-file aggregates computed inside the write
+    * tasks: one `(absolute file path, row)` per written file that
+    * received rows, or per (file, value of `groupCol`) when a group
+    * column is set. Each row carries the group column's value first (when
+    * set), then `aggs` by alias.
+    *
+    * This is what `df.write.options(options).mode("overwrite")
+    * .parquet(absDir)` runs — Spark's `FileFormatWriter.write` with the
+    * session's commit protocol, `ParquetFileFormat`, the options folded
+    * into the Hadoop conf and the optimized plan's output as the written
+    * columns — so the data files are the same bytes. The aggregates run
+    * in a `WriteJobStatsTracker` beside the basic one, as Delta's
+    * `DeltaJobStatisticsTracker` does, instead of a second job that
+    * reads the files back. `aggs` must be plain (no DISTINCT or FILTER)
+    * aggregates over `df`'s columns. */
+  def writeParquetWithStats(df: DataFrame, absDir: String, options: Map[String, String],
+      aggs: Seq[Column], groupCol: Option[String]): Seq[(String, Row)] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.internal.io.FileCommitProtocol
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val cs = ds.sparkSession
+    val qe = ds.queryExecution
+    // the written columns are the optimized plan's output, as in
+    // InsertIntoHadoopFsRelationCommand (its query is optimized with it)
+    val dataCols = qe.optimizedPlan.output
+    require(dataCols.map(_.name).distinct.size == dataCols.size,
+      s"duplicate column names in ${dataCols.map(_.name).mkString(",")}")
+    // resolve the aggregates over a leaf with exactly the written
+    // attributes (analysing them over df's whole plan costs more), then
+    // replace runtime-replaceable expressions, which only the optimizer
+    // turns evaluable
+    val bound = ReplaceExpressions(classic.Dataset.ofRows(cs, LocalRelation(dataCols))
+      .agg(aggs.head, aggs.tail: _*).queryExecution.analyzed)
+      .asInstanceOf[Aggregate].aggregateExpressions
+    val groupOrdinal = groupCol.map(c => dataCols.indexWhere(_.name == c))
+    require(!groupOrdinal.contains(-1), s"group column ${groupCol.get} is not written")
+
+    val hadoopConf = cs.sessionState.newHadoopConfWithOptions(options)
+    val path = new Path(absDir)
+    val fs = path.getFileSystem(hadoopConf)
+    val qualified = path.makeQualified(fs.getUri, fs.getWorkingDirectory)
+    if (fs.exists(qualified)) fs.delete(qualified, true)
+    val committer = FileCommitProtocol.instantiate(
+      cs.sessionState.conf.fileCommitProtocolClass,
+      jobId = java.util.UUID.randomUUID().toString,
+      outputPath = absDir)
+    val tracker = new GraftStatsJobTracker(dataCols, bound, groupOrdinal)
+    SQLExecution.withNewExecutionId(qe) {
+      FileFormatWriter.write(cs, qe.executedPlan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(qualified.toString, Map.empty, dataCols), hadoopConf,
+        Nil, None,
+        Seq(new BasicWriteJobStatsTracker(
+          new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+          BasicWriteJobStatsTracker.metrics), tracker),
+        options)
+    }
+    val groupField = groupOrdinal.map(i => types.StructField(dataCols(i).name, dataCols(i).dataType))
+    val aggSchema = types.StructType(bound.map(n => types.StructField(n.name, n.dataType)))
+    val schema = types.StructType(groupField.toSeq ++ aggSchema.fields)
+    val toRow = CatalystTypeConverters.createToScalaConverter(aggSchema)
+    tracker.results.map { case (name, g, r) =>
+      val aggRow = toRow(r).asInstanceOf[Row].toSeq
+      val values = groupField.fold(aggRow)(f =>
+        CatalystTypeConverters.convertToScala(g, f.dataType) +: aggRow)
+      (s"$absDir/$name", new catalyst.expressions.GenericRowWithSchema(values.toArray, schema): Row)
+    }
+  }
+
   /** Wrap an InternalRow RDD as a STREAMING DataFrame — what a V1
     * streaming `Source.getBatch` must return (MicroBatchExecution asserts
     * `isStreaming`). This is the same `internalCreateDataFrame(...,

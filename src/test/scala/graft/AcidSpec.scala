@@ -681,6 +681,26 @@ class AcidSpec extends AnyFunSuite {
     assert(Acid.snapshot(spark, dir).count() == 101L)
   }
 
+  test("a widening merge keeps a declared-only ADD COLUMN") {
+    val dir = s"${Scratch.fresh("acid_spec_widen_addcol", sf)}/t"
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val narrow = spark.createDataFrame(spark.sparkContext.parallelize(
+      (1L to 100L).map(k => Row(k, k.toInt)), 1),
+      StructType(Seq(StructField("k", LongType), StructField("v", IntegerType))))
+    Acid.create(spark, dir, narrow, "k", 2)
+    Acid.addColumn(spark, dir, Seq("note"), StringType)
+    val wide = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row(5L, 1L << 40)), 1),
+      StructType(Seq(StructField("k", LongType), StructField("v", LongType))))
+    Acid.merge(spark, dir, wide, "spec")
+    val declared = Acid.declaredSchemaAt(dir, -1).get
+    assert(declared.fieldNames.toSeq == Seq("k", "v", "note"))
+    assert(declared("v").dataType == LongType)
+    assert(Acid.snapshot(spark, dir).where(col("k") === 5L)
+      .select("v").head.getLong(0) == (1L << 40))
+  }
+
   test("batch-id dedup is scoped per writer: two queries never dedup each other") {
     val dir = freshTable("acid_spec_perwriter")
     val batch = lowQuarterUpdates(sf)

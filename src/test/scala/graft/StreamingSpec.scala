@@ -118,4 +118,29 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(ids == Seq(1L, 2L, 3L, 4L))
   }
+
+  test("every job in a streaming sink query carries a call site") {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new Attribution {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(Attribution.StreamQueryId) != null))
+          sites.add(siteOf(e)): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      SparkEntry.queries("tbl_stream_sink")(spark, sf).collect()
+      Thread.sleep(500) // drain the listener bus
+    } finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    val all = sites.asScala.toSeq
+    assert(all.nonEmpty)
+    // "method at File.scala:line" naming the engine call that ran the
+    // job, never the query's id text or the one start() line every
+    // micro-batch job inherits
+    val CallSite = """[\w$]+ at [\w$]+\.scala:\d+""".r
+    assert(all.forall(CallSite.matches), all.distinct)
+    assert(!all.exists(_.startsWith("start at ")), all.distinct)
+    assert(all.exists(_.startsWith("writeParquetWithStats at Acid.scala:")), all.distinct)
+  }
 }
