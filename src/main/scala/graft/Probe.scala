@@ -346,67 +346,3 @@ object AcidProbe {
     spark.stop()
   }
 }
-
-/** Scale probe for the round-7 parallel XML split PLANNER (SURVEY §7.8
-  * round-8 item: "the scale claim deserves a measured constant"): builds
-  * ONE ~sizeMB single XML file shaped like the predicate fixture
-  * (fiction/tech shelves, comments + CDATA hazards), then times phase-1
-  * planning sequential (`planSplits`, one thread) vs parallel
-  * (`planSplitsParallel`, chunked speculative scan at local[32]).
-  *
-  *   sbt "runMain graft.XmlPlanProbe [sizeMB] [targetMB]"
-  */
-object XmlPlanProbe {
-  def main(args: Array[String]): Unit = {
-    val sizeMB = if (args.length > 0) args(0).toInt else 1024
-    val targetMB = if (args.length > 1) args(1).toInt else 64
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val dir = java.nio.file.Files.createTempDirectory("graft_xmlprobe")
-    val file = dir.resolve("big.xml")
-    val out = new java.io.BufferedOutputStream(
-      java.nio.file.Files.newOutputStream(file), 1 << 20)
-    val targetBytes = sizeMB.toLong << 20
-    var written = 0L
-    def w(s: String): Unit = { val b = s.getBytes("UTF-8"); out.write(b); written += b.length }
-    w("<catalog>\n")
-    var key = 0L
-    val filler = "lorem ipsum dolor sit amet ".repeat(8)
-    while (written < targetBytes - 64) {
-      w("<shelf genre='fiction'>\n")
-      var i = 0
-      while (i < 40 && written < targetBytes - 64) {
-        w(s"""<book key="$key" lang="en"><title>t$key</title>""")
-        if (key % 17 == 0) w(s"<!-- decoy <book key='x'> in comment $filler -->")
-        if (key % 23 == 0) w(s"<blob><![CDATA[raw > ]] $filler]]></blob>")
-        w(s"<body>$filler</body></book>\n")
-        key += 1; i += 1
-      }
-      w("</shelf>\n<shelf genre='tech'><book key='9999999' lang='en'><t>decoy</t></book></shelf>\n")
-    }
-    w("</catalog>\n")
-    out.close()
-    val mb = java.nio.file.Files.size(file) / 1e6
-    println(f"[xml-probe] wrote ${mb}%.0f MB, ${key} records")
-    val path = "/catalog/shelf[@genre='fiction']/book"
-    // warm the page cache so both planners read from memory (fair compare)
-    val warm = graft.sources.Xml.probePlanners(spark, file.toString, path, targetMB.toLong << 20)
-    val (seqMs, parMs, nSeq, nPar) =
-      graft.sources.Xml.probePlanners(spark, file.toString, path, targetMB.toLong << 20)
-    println(f"[xml-probe] warm: seq=${warm._1}ms par=${warm._2}ms")
-    println(f"[xml-probe] target=${targetMB}MB seq=${seqMs}ms (${mb * 1000 / seqMs}%.0f MB/s, 1 thread) " +
-      f"par=${parMs}ms (${mb * 1000 / parMs}%.0f MB/s) speedup=${seqMs.toDouble / parMs}%.1fx " +
-      f"ranges seq=$nSeq par=$nPar")
-    val n = graft.sources.Xml.readXmlNodePath(
-      spark, dir.toString, path, targetSplitBytes = targetMB.toLong << 20).count()
-    println(s"[xml-probe] full split read records=$n (expect $key)")
-    val s2 = java.nio.file.Files.walk(dir)
-    try s2.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    finally s2.close()
-    spark.stop()
-  }
-}

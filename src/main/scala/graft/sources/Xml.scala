@@ -1,14 +1,20 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import scala.util.Try
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.{Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.xml.XSDToSchema
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
 
@@ -176,7 +182,8 @@ object Xml {
   // splitter), no DOCTYPE internal subsets, and end-tag NAMES are not
   // checked — only the balance is (end of input inside an open element,
   // or an end tag with none open, fails the read; a mismatched end tag
-  // inside a record reaches `from_xml`, whose parse mode decides).
+  // inside a record reaches `from_xml`, whose parse mode decides: the
+  // typed decoder refuses such a record).
   // ========================================================================
 
   private val EntityRe = """&(?:(lt|gt|quot|apos|amp)|#([0-9]+)|#x([0-9a-fA-F]+));""".r
@@ -306,9 +313,10 @@ object Xml {
     * scan at that offset once outside a record; `onRecordStart` fires at
     * every capture trigger with the record's ancestor scopes, outermost
     * first (a live view, valid only during the call); with
-    * `captureBytes`, each record's bytes are passed to `onRecord`, the
-    * start tag rewritten to re-declare any ancestor binding the record
-    * doesn't carry itself.
+    * `captureBytes`, each record's source bytes are passed to `onRecord`
+    * (a buffer valid only during the call) with the length of its start
+    * tag and the ancestor bindings the record doesn't declare itself,
+    * which `snippet` re-declares on the start tag.
     *
     * Reaching end of input inside an open element, or an end tag with no
     * element open, fails the scan with an IOException naming the file and
@@ -329,7 +337,7 @@ object Xml {
   private def scanPath(file: String, start: Long, path: Seq[PathStep],
       seedOk: Seq[Boolean], seedNs: Seq[Map[String, String]], captureBytes: Boolean,
       stopAt: Long, onRecordStart: (Long, collection.Seq[Map[String, String]]) => Unit,
-      onRecord: String => Unit): Unit = {
+      onRecord: (ByteBuf, Int, Map[String, String]) => Unit): Unit = {
     val ch = java.nio.channels.FileChannel.open(Paths.get(file))
     ch.position(start)
     val in = java.nio.channels.Channels.newInputStream(ch)
@@ -360,6 +368,8 @@ object Xml {
     val tag = new ByteBuf
     var capturing = false
     var captureDepth = -1
+    var recTagLen = 0
+    var recMissing = Map.empty[String, String]
 
     // consume the rest of a start tag ("<" and its first byte already
     // taken), quote-aware: a '>' inside a quoted value does not end it.
@@ -422,7 +432,7 @@ object Xml {
               if (to != null) { to.add('<'); to.add('/') }
               readUntil(TagEnd, to)
               if (capturing && okStack.size == captureDepth) {
-                onRecord(cap.utf8); cap.reset()
+                onRecord(cap, recTagLen, recMissing); cap.reset()
                 capturing = false; captureDepth = -1
               }
               okStack.remove(okStack.size - 1)
@@ -450,17 +460,15 @@ object Xml {
               if (startsRecord) {
                 if (captureBytes) {
                   capturing = true; cap.reset()
-                  val missing = parentNs.filterNot { case (p, _) => declared.contains(p) }
-                  if (missing.nonEmpty) {
-                    val b = injectNs(tagStr, missing).getBytes("UTF-8")
-                    cap.add(b, 0, b.length)
-                  } else cap.add(tag.arr, 0, tag.len)
+                  recMissing = parentNs.filterNot { case (p, _) => declared.contains(p) }
+                  recTagLen = tag.len
+                  cap.add(tag.arr, 0, tag.len)
                 }
                 captureDepth = depth // suppresses nested same-path re-trigger
               } else if (capturing) cap.add(tag.arr, 0, tag.len)
               if (selfClosing) {
                 if (capturing && okStack.size == captureDepth) {
-                  onRecord(cap.utf8); cap.reset()
+                  onRecord(cap, recTagLen, recMissing); cap.reset()
                   capturing = false; captureDepth = -1
                 }
                 if (!captureBytes && okStack.size == captureDepth) captureDepth = -1
@@ -497,7 +505,7 @@ object Xml {
     * starts (with each start's ancestor scopes, which a range cannot see
     * past its seek point) greedily every ≥ `targetSplitBytes`, so each range
     * begins at a record start. The chunked planner's fallback for a tag
-    * longer than `MaxSpecTag`, and `probePlanners`' baseline. */
+    * longer than `MaxSpecTag`. */
   private def planSplits(file: String, path: Seq[PathStep],
       targetSplitBytes: Long): Seq[XmlSplitRange] = {
     val starts = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Map[String, String]])]
@@ -505,7 +513,7 @@ object Xml {
       onRecordStart = (off, ns) =>
         if (starts.isEmpty || off - starts.last._1 >= targetSplitBytes)
           starts += ((off, ns.toVector)),
-      onRecord = _ => ())
+      onRecord = (_, _, _) => ())
     rangesOf(file, starts.toSeq)
   }
 
@@ -542,8 +550,7 @@ object Xml {
   //
   // A file at or below the split target is never planned: it is one
   // whole-file range. `planSplits` remains only as this planner's
-  // fallback for a tag longer than `MaxSpecTag` and `probePlanners`'
-  // baseline.
+  // fallback for a tag longer than `MaxSpecTag`.
   // ========================================================================
 
   /** Lexical exit of a chunk scan. `kind`: "content", a pending token
@@ -867,7 +874,7 @@ object Xml {
       scanPath(file, p.resume, path, p.seedOk, p.seedNs, captureBytes = false,
         stopAt = p.stopAt,
         onRecordStart = (off, ns) => throw new Found(off, ns.toVector),
-        onRecord = _ => ())
+        onRecord = (_, _, _) => ())
       None
     } catch { case f: Found => Some((f.off, f.ns)) }
   }
@@ -901,23 +908,6 @@ object Xml {
     }
   }
 
-  /** Probe hook (XmlPlanProbe): plan ONE file both ways, returning
-    * (seqMs, parMs, seqRanges, parRanges). The two planners cut at
-    * different-but-equally-valid boundaries (sequential: every ≥target
-    * bytes; parallel: each chunk's first record start), so range COUNTS
-    * are comparable but offsets differ; record-level equality is the
-    * Round7Spec pin. */
-  private[graft] def probePlanners(s: SparkSession, file: String,
-      nodePath: String, targetSplitBytes: Long): (Long, Long, Int, Int) = {
-    val path = parseNodePath(nodePath)
-    val t0 = System.nanoTime()
-    val seq = planSplits(file, path, targetSplitBytes)
-    val t1 = System.nanoTime()
-    val par = planSplitsParallel(s, file, path, targetSplitBytes)
-    val t2 = System.nanoTime()
-    ((t1 - t0) / 1000000, (t2 - t1) / 1000000, seq.size, par.size)
-  }
-
   /** Split target for a listing of files of `sizes` bytes: Spark's own
     * `FilePartition.maxSplitBytes` rule, so the node-path reader follows the
     * sizing confs of every other file source and has no knob of its own.
@@ -943,10 +933,14 @@ object Xml {
     * Spark's `rowTag` option matches the tag anywhere, so this reader keeps
     * an ancestor stack in one byte-level scan (`scanPath`) and captures
     * exactly the subtrees whose full path equals the node path, each as a
-    * byte slice of the source; the snippets then flow through the
-    * codegen'd `from_xml` for typed extraction. Nested same-name tags
-    * inside a captured record stay part of that record and never
-    * re-trigger capture.
+    * byte slice of the source. The frame has one string column, `xml`,
+    * holding each record's snippet. A `from_xml` directly over it whose
+    * schema and options `XmlDecode` covers is swapped by `XmlDecodeRule`
+    * (registered here in the session's extra optimizations) for a decode
+    * of each record's bytes straight into that schema's rows; a record the
+    * decoder refuses, and any other plan, goes through `from_xml` itself.
+    * Nested same-name tags inside a captured record stay part of that
+    * record and never re-trigger capture.
     *
     * Path steps match element LOCAL names — optionally qualified by a
     * namespace URI via a prefix resolved from the caller's bindings `ns`
@@ -976,7 +970,6 @@ object Xml {
     */
   def readXmlNodePath(s: SparkSession, dir: String, nodePath: String,
       ns: Map[String, String] = Map.empty, targetSplitBytes: Long = 0L): DataFrame = {
-    import s.implicits._
     val path = parseNodePath(nodePath, ns)
     val files = listXml(dir)
     val conf = s.sessionState.conf
@@ -989,15 +982,68 @@ object Xml {
     }
     val sizes = files.toMap
     val bins = packBins(ranges, conf, target)(r => math.min(r.end, sizes(r.file)) - r.start)
-    s.sparkContext.parallelize(bins, math.max(bins.size, 1))
-      .flatMap(_.flatMap { r =>
-        val out = scala.collection.mutable.ListBuffer.empty[String]
+    val exp = s.experimental
+    if (!exp.extraOptimizations.contains(XmlDecodeRule))
+      exp.extraOptimizations = exp.extraOptimizations :+ XmlDecodeRule
+    GraftSqlBridge.rowFrame(s, new NodePathRDD(s.sparkContext, bins, path, decode = None),
+      NodePathSchema, isStreaming = false)
+  }
+
+  private val NodePathSchema = StructType(Seq(StructField("xml", StringType)))
+
+  /** A record's snippet as `from_xml` and the `xml` column see it: its
+    * UTF-8 (invalid bytes read as U+FFFD), the start tag re-declaring the
+    * ancestor bindings `missing` the record doesn't carry itself. */
+  private def snippet(rec: ByteBuf, tagLen: Int, missing: Map[String, String]): UTF8String =
+    if (missing.nonEmpty)
+      UTF8String.fromString(injectNs(new String(rec.arr, 0, tagLen, UTF_8), missing) +
+        new String(rec.arr, tagLen, rec.len - tagLen, UTF_8))
+    else if (XmlDecode.validUtf8(rec.arr, 0, rec.len))
+      UTF8String.fromBytes(java.util.Arrays.copyOf(rec.arr, rec.len))
+    else UTF8String.fromString(rec.utf8)
+
+  private final class NodePathPartition(val index: Int, val ranges: Seq[XmlSplitRange])
+    extends Partition
+
+  /** The node-path reader's rows: one partition per packed bin of ranges,
+    * records in file order, then document order. Without `decode` a row
+    * holds the record's `snippet`; with it (the twin `XmlDecodeRule` swaps
+    * in under a covered `from_xml`) the record decoded into a row of the
+    * spec's schema, a refused record through the matched `from_xml`. An
+    * injected binding holding `&` or `<` could change what `from_xml`
+    * reads, so such a record is never decoded. */
+  private[graft] final class NodePathRDD(sc: SparkContext,
+      @transient private val bins: Seq[Seq[XmlSplitRange]], path: Seq[PathStep],
+      val decode: Option[XmlDecode.Spec]) extends RDD[InternalRow](sc, Nil) {
+    override protected def getPartitions: Array[Partition] =
+      bins.indices.map(i => new NodePathPartition(i, bins(i)): Partition).toArray
+
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
+      val value: (ByteBuf, Int, Map[String, String]) => Any = decode match {
+        case None => snippet
+        case Some(spec) =>
+          val d = spec.decoder()
+          (rec, tagLen, missing) => {
+            val row =
+              if (missing.valuesIterator.exists(v => v.indexOf('&') >= 0 || v.indexOf('<') >= 0))
+                null
+              else d.decode(rec.arr, rec.len)
+            if (row != null) row else spec.fallbackRow(snippet(rec, tagLen, missing))
+          }
+      }
+      split.asInstanceOf[NodePathPartition].ranges.iterator.flatMap { r =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
         scanPath(r.file, r.start, path, seedOk = r.ns.map(_ => true), seedNs = r.ns,
           captureBytes = true, stopAt = r.end, onRecordStart = (_, _) => (),
-          onRecord = out += _)
-        out.toList
-      })
-      .toDF("xml")
+          onRecord = (rec, tagLen, missing) =>
+            out += new GenericInternalRow(Array[Any](value(rec, tagLen, missing))))
+        out.iterator
+      }
+    }
+
+    /** This reader's twin that decodes each record with `spec`. */
+    def decoding(spec: XmlDecode.Spec): NodePathRDD =
+      new NodePathRDD(sparkContext, bins, path, Some(spec))
   }
 
   /** Node-path splitting under test: catalog files holding `<book>` at two

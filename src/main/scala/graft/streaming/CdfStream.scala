@@ -137,8 +137,8 @@ class CdfStreamSource(ctx: SQLContext, dir: String, startVersion: Int,
       else increments.reduce(_ unionByName _)
     // A V1 source must return a STREAMING DataFrame; wrap the (lazy)
     // distributed plan — nothing is computed or collected here.
-    GraftSqlBridge.streamingDataFrame(spark,
-      batch.queryExecution.toRdd, batch.schema)
+    GraftSqlBridge.rowFrame(spark,
+      batch.queryExecution.toRdd, batch.schema, isStreaming = true)
   }
 
   /** Align an increment to the declared stream schema: a column evolved

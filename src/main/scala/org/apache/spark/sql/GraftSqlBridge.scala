@@ -179,16 +179,25 @@ object GraftSqlBridge {
     }
   }
 
-  /** Wrap an InternalRow RDD as a STREAMING DataFrame — what a V1
-    * streaming `Source.getBatch` must return (MicroBatchExecution asserts
-    * `isStreaming`). This is the same `internalCreateDataFrame(...,
-    * isStreaming = true)` call the built-in file/rate sources make; it is
-    * `private[sql]`-adjacent (public on classic.SparkSession but not on
-    * the api surface), hence routed through this one sanctioned bridge.
+  /** `lr` over another RDD with another output. `LogicalRDD`'s session is
+    * a second-list constructor argument without an accessor; `makeCopy`
+    * carries it (and the origin stats and constraints) over. */
+  def withRdd(lr: execution.LogicalRDD,
+      output: Seq[catalyst.expressions.Attribute],
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow])
+      : execution.LogicalRDD =
+    lr.makeCopy(Array[AnyRef](output, rdd, lr.outputPartitioning, lr.outputOrdering,
+      java.lang.Boolean.valueOf(lr.isStreaming), lr.stream)).asInstanceOf[execution.LogicalRDD]
+
+  /** Wrap an InternalRow RDD as a DataFrame: a `LogicalRDD`, which
+    * Spark's own `RDDScanExec` plans, with no encoder in between. A V1
+    * streaming `Source.getBatch` must return one with `isStreaming`
+    * (MicroBatchExecution asserts it), the same call the built-in
+    * file/rate sources make. `internalCreateDataFrame` is public on
+    * `classic.SparkSession` but not on the api surface, hence this bridge.
     */
-  def streamingDataFrame(s: SparkSession,
+  def rowFrame(s: SparkSession,
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    s.asInstanceOf[classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema, isStreaming = true)
+      schema: org.apache.spark.sql.types.StructType, isStreaming: Boolean): DataFrame =
+    s.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema, isStreaming)
 }

@@ -16,6 +16,7 @@ import graft.sources.{Acid, AcidSql}
   * horizon.
   */
 class Round7Spec extends AnyFunSuite {
+  import Round7Spec._
   import TestSpark._
 
   private def kv(sfDir: String) =
@@ -86,45 +87,6 @@ class Round7Spec extends AnyFunSuite {
     assert(spark.read.format("graft-acid-sql").load(dir).count() == 160000L - n)
   }
 
-  /** Hazard-dense catalog for the XML split planners: a giant comment and
-    * a giant CDATA spanning chunks, both full of fake structure; quoted
-    * `>` and `/>` in attributes; `]]]>`; decoy paths; nested records; and
-    * one record far bigger than a planning chunk. About 3.7 KB a shelf. */
-  private def hazardCatalog(shelves: Int): String = {
-    val sb = new StringBuilder
-    sb ++= "<catalog>\n"
-    // giant comment spanning multiple chunks, stuffed with fake tags
-    sb ++= "<!-- " + ("<book key=\"fake\"> </catalog> <shelf genre=\"fiction\"> " * 2000) + " -->\n"
-    var k = 0
-    for (shelf <- 0 until shelves) {
-      val genre = if (shelf % 2 == 0) "fiction" else "tech"
-      sb ++= s"""<shelf genre="$genre" note="a>b" alt='x/>y'>\n"""
-      for (_ <- 0 until 25) {
-        k += 1
-        if (k % 7 == 0)
-          sb ++= s"""  <book key="$k" q='he said "hi>"'/>\n"""
-        else
-          sb ++= s"""  <book key="$k"><name>n$k &amp; sons</name><![CDATA[raw <book> ]] bytes]]]><related><book key="${k + 100000}"><name>NEST</name></book></related></book>\n"""
-        if (k % 11 == 0)
-          sb ++= s"""  <review stars="5"><book key="${k + 200000}"><name>DECOY</name></book></review>\n"""
-        if (k % 13 == 0)
-          sb ++= "  <!-- short <book key=\"c\"> comment -->\n"
-      }
-      sb ++= "</shelf>\n"
-      if (shelf == 20) {
-        // giant CDATA between shelves, spanning chunks, full of fake structure
-        sb ++= "<![CDATA[" + ("</shelf><shelf genre=\"fiction\"><book key=\"cd\"> " * 2000) + "]]]>\n"
-        // one record far bigger than a planning chunk
-        k += 1
-        sb ++= s"""<shelf genre="fiction"><book key="$k"><name>big</name><blob>""" +
-          ("y" * 90000) + "</blob></book></shelf>\n"
-      }
-    }
-    sb ++= "</catalog>\n"
-    sb.toString
-  }
-
-  private val hazardPath = "/catalog/shelf[@genre='fiction']/book"
 
   test("parallel XML split planning: chunked plan == sequential scan, >1 task") {
     val dir = Scratch.fresh("r7_xml_parplan", sf)
@@ -171,41 +133,6 @@ class Round7Spec extends AnyFunSuite {
       "the default target should send the file through the chunked planner")
     assert(default.rdd.getNumPartitions > 1)
     assert(snippets(default) == seq)
-  }
-
-  /** Namespace and lexical hazards for the byte scanner: xmlns declarations
-    * below record depth (inside records and on a decoy outside them), a
-    * record start that redeclares an ancestor prefix, a single-quoted xmlns
-    * value holding `"`, CDATA/comment/PI inside records, and `>` inside
-    * attribute values. About 1.8 KB a shelf. */
-  private def nsHazardCatalog(shelves: Int): String = {
-    val sb = new StringBuilder
-    sb ++= "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n"
-    sb ++= """<catalog xmlns="urn:cat" xmlns:a="urn:a" xmlns:q='urn:"q"'>""" + "\n"
-    var k = 0
-    for (shelf <- 0 until shelves) {
-      sb ++= s"""<shelf xmlns:s="urn:shelf$shelf" label="x>y">\n"""
-      for (i <- 0 until 12) {
-        k += 1
-        sb ++= ((i % 4) match {
-          case 0 =>
-            s"""  <book key="$k" xmlns:a="urn:a2" note='1 > 0'><a:t>x</a:t></book>"""
-          case 1 =>
-            s"""  <book key="$k"><part xmlns:d="urn:deep" xmlns="urn:deep0">""" +
-              s"""<d:x y="a>b"><leaf xmlns:e='e"e'/></d:x></part></book>"""
-          case 2 =>
-            s"""  <book key="$k"><![CDATA[<book key="cd"> ]]]]><!-- <book/> -->""" +
-              s"""<?pi <book> ?><s:n>$k</s:n></book>"""
-          case _ =>
-            s"""  <book key="$k" a:flag="a/>b" q:v='>'/>"""
-        }) + "\n"
-        if (k % 5 == 0)
-          sb ++= s"""  <aside xmlns:z="urn:z"><z:book key="decoy$k"><in xmlns:w="urn:w"/></z:book></aside>""" + "\n"
-      }
-      sb ++= "</shelf>\n"
-    }
-    sb ++= "</catalog>\n"
-    sb.toString
   }
 
   test("split reader bytes are pinned: ordered snippets hash to fixed values at three targets") {
@@ -649,5 +576,83 @@ class Round7Spec extends AnyFunSuite {
       Acid.versionAtTimestamp(dir, micros0)
     }
     assert(ex.getMessage.contains("vacuumed"))
+  }
+}
+
+/** The XML hazard catalogs, shared with XmlDecodeSpec. */
+object Round7Spec {
+  /** Hazard-dense catalog for the XML split planners: a giant comment and
+    * a giant CDATA spanning chunks, both full of fake structure; quoted
+    * `>` and `/>` in attributes; `]]]>`; decoy paths; nested records; and
+    * one record far bigger than a planning chunk. About 3.7 KB a shelf. */
+  def hazardCatalog(shelves: Int): String = {
+    val sb = new StringBuilder
+    sb ++= "<catalog>\n"
+    // giant comment spanning multiple chunks, stuffed with fake tags
+    sb ++= "<!-- " + ("<book key=\"fake\"> </catalog> <shelf genre=\"fiction\"> " * 2000) + " -->\n"
+    var k = 0
+    for (shelf <- 0 until shelves) {
+      val genre = if (shelf % 2 == 0) "fiction" else "tech"
+      sb ++= s"""<shelf genre="$genre" note="a>b" alt='x/>y'>\n"""
+      for (_ <- 0 until 25) {
+        k += 1
+        if (k % 7 == 0)
+          sb ++= s"""  <book key="$k" q='he said "hi>"'/>\n"""
+        else
+          sb ++= s"""  <book key="$k"><name>n$k &amp; sons</name><![CDATA[raw <book> ]] bytes]]]><related><book key="${k + 100000}"><name>NEST</name></book></related></book>\n"""
+        if (k % 11 == 0)
+          sb ++= s"""  <review stars="5"><book key="${k + 200000}"><name>DECOY</name></book></review>\n"""
+        if (k % 13 == 0)
+          sb ++= "  <!-- short <book key=\"c\"> comment -->\n"
+      }
+      sb ++= "</shelf>\n"
+      if (shelf == 20) {
+        // giant CDATA between shelves, spanning chunks, full of fake structure
+        sb ++= "<![CDATA[" + ("</shelf><shelf genre=\"fiction\"><book key=\"cd\"> " * 2000) + "]]]>\n"
+        // one record far bigger than a planning chunk
+        k += 1
+        sb ++= s"""<shelf genre="fiction"><book key="$k"><name>big</name><blob>""" +
+          ("y" * 90000) + "</blob></book></shelf>\n"
+      }
+    }
+    sb ++= "</catalog>\n"
+    sb.toString
+  }
+
+  val hazardPath = "/catalog/shelf[@genre='fiction']/book"
+
+  /** Namespace and lexical hazards for the byte scanner: xmlns declarations
+    * below record depth (inside records and on a decoy outside them), a
+    * record start that redeclares an ancestor prefix, a single-quoted xmlns
+    * value holding `"`, CDATA/comment/PI inside records, and `>` inside
+    * attribute values. About 1.8 KB a shelf. */
+  def nsHazardCatalog(shelves: Int): String = {
+    val sb = new StringBuilder
+    sb ++= "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n"
+    sb ++= """<catalog xmlns="urn:cat" xmlns:a="urn:a" xmlns:q='urn:"q"'>""" + "\n"
+    var k = 0
+    for (shelf <- 0 until shelves) {
+      sb ++= s"""<shelf xmlns:s="urn:shelf$shelf" label="x>y">\n"""
+      for (i <- 0 until 12) {
+        k += 1
+        sb ++= ((i % 4) match {
+          case 0 =>
+            s"""  <book key="$k" xmlns:a="urn:a2" note='1 > 0'><a:t>x</a:t></book>"""
+          case 1 =>
+            s"""  <book key="$k"><part xmlns:d="urn:deep" xmlns="urn:deep0">""" +
+              s"""<d:x y="a>b"><leaf xmlns:e='e"e'/></d:x></part></book>"""
+          case 2 =>
+            s"""  <book key="$k"><![CDATA[<book key="cd"> ]]]]><!-- <book/> -->""" +
+              s"""<?pi <book> ?><s:n>$k</s:n></book>"""
+          case _ =>
+            s"""  <book key="$k" a:flag="a/>b" q:v='>'/>"""
+        }) + "\n"
+        if (k % 5 == 0)
+          sb ++= s"""  <aside xmlns:z="urn:z"><z:book key="decoy$k"><in xmlns:w="urn:w"/></z:book></aside>""" + "\n"
+      }
+      sb ++= "</shelf>\n"
+    }
+    sb ++= "</catalog>\n"
+    sb.toString
   }
 }
