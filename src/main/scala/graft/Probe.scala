@@ -187,9 +187,10 @@ object Probe {
   *
   *   sbt "runMain graft.AcidProbe /root/testdata/sf0.1"
   */
-/** Measures the V2 Group-API row reader (graft-acid-sql) against the V1
-  * vectorized relation (graft-acid) on the same snapshot — the numbers
-  * behind AcidSql.scala's "bulk analytics should read through V1" note.
+/** Measures the V2 scan (graft-acid-sql, AcidSqlColumnarReader) against
+  * the V1 vectorized relation (graft-acid) and `Acid.snapshot` on the
+  * same table, narrow and wide — the numbers behind AcidSql.scala's
+  * read-side note.
   *
   *   sbt "runMain graft.AcidSqlProbe /root/testdata/sf0.1"
   */

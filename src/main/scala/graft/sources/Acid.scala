@@ -8,9 +8,10 @@ import scala.util.Try
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType,
-  DateType, DoubleType, FloatType, IntegerType, LongType, MapType, ShortType,
-  StringType, StructField, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, ByteType,
+  DataType, DateType, Decimal, DecimalType, DoubleType, FloatType, IntegerType,
+  LongType, MapType, ShortType, StringType, StructField, StructType,
+  TimestampNTZType, TimestampType}
 
 import graft.Tables
 
@@ -2062,6 +2063,9 @@ object Acid {
             DoubleType | FloatType | BooleanType |
             DateType | TimestampType | TimestampNTZType, x) => Some(x.toString)
       case (StringType, x) => Some(x.toString) // UTF8String round-trips
+      case (_: DecimalType, x: Decimal) => Some(x.toJavaBigDecimal.toPlainString)
+      case (BinaryType, x: Array[Byte]) =>
+        Some(java.util.HexFormat.of().formatHex(x))
       case _ => None
     }
   private[graft] def decodeDefault(dt: DataType, repr: String): Any = dt match {
@@ -2073,6 +2077,8 @@ object Acid {
     case FloatType   => repr.toFloat
     case BooleanType => repr.toBoolean
     case StringType  => org.apache.spark.unsafe.types.UTF8String.fromString(repr)
+    case t: DecimalType => Decimal(BigDecimal(repr), t.precision, t.scale)
+    case BinaryType  => java.util.HexFormat.of().parseHex(repr)
     case other => throw new IllegalStateException(
       s"defaults.txt: unsupported default type $other")
   }
@@ -5474,8 +5480,8 @@ object Acid {
     * SQL surface (round-11: XML-derived schemas are nested, so the
     * catalog tables must hold them, not just the library path): CREATE
     * TABLE with a STRUCT column, INSERT through the V2 writer (nested
-    * parquet groups), SELECT through the V2 row reader (nested
-    * projection intersect + Group conversion), then
+    * parquet groups), SELECT through the V2 columnar reader (nested
+    * projection intersect + Spark's nested vectorized decode), then
     * `ALTER TABLE ... ADD COLUMNS (meta.score BIGINT)` — metadata-only,
     * pinned by the every-row-NULL read — and a second INSERT at the
     * wide shape; narrow files keep NULL-filling the new leaf. The
@@ -5518,7 +5524,7 @@ object Acid {
     * citizens of the V2 SQL surface (round-11; the training-pipeline
     * shape): CREATE TABLE with an embedding column, INSERT through the
     * V2 writer (standard parquet 3-level LIST groups), and read back
-    * through the V2 row reader's positional list conversion. The check
+    * through the V2 columnar reader's nested LIST decode. The check
     * aggregate quantizes elements via an EXPLICIT double cast + floor —
     * float→double is exact and floor is engine-independent, so the
     * per-label sums hash-match DuckDB's `list_transform`/`list_sum`
@@ -5546,8 +5552,8 @@ object Acid {
     * tbl_sql_nested and tbl_sql_embed): CREATE TABLE with a
     * MAP<STRING, BIGINT>, INSERT through the V2 writer (standard parquet
     * MAP key_value groups; NULL values are entries without the optional
-    * value field), read back through the row reader's positional
-    * key_value conversion. The aggregate extracts by key Spark-side so
+    * value field), read back through the columnar reader's nested MAP
+    * decode. The aggregate extracts by key Spark-side so
     * the oracle recomputes from plain orders scalars — no DuckDB map
     * functions in the comparison path.
     */
@@ -6013,9 +6019,8 @@ object Acid {
   /** tbl_dv_columnar — merge-on-read debt scans VECTORIZED (round-12
     * verdict #1): with LIVE deletion vectors (no OPTIMIZE) the V2 scan
     * keeps Spark's vectorized parquet reader and masks each batch with a
-    * zero-copy selection vector, instead of dropping to the per-cell
-    * Group row reader. At 100 TB, DV debt between maintenance passes is
-    * the steady state — this row pins that the debt window keeps
+    * zero-copy selection vector. At 100 TB, DV debt between maintenance
+    * passes is the steady state — this row pins that the debt window keeps
     * per-column decode. `columnar_with_dv` pins the plan (ColumnarToRow
     * over the scan) while a DV is provably live in the manifest; the
     * aggregate travels through the oracle, so the masked batches must
@@ -6041,9 +6046,9 @@ object Acid {
     * previously passed CREATE but wrote nothing and read back NULL):
     * CREATE TABLE holding both shapes, INSERT through the V2 writer's
     * recursive Group fill, read back and extract scalars Spark-side so
-    * the oracle recomputes from plain orders arithmetic. Forces the
-    * GROUP row reader's recursive conversion too via the struct
-    * element's nested access.
+    * the oracle recomputes from plain orders arithmetic. The struct
+    * element's nested access exercises the columnar reader's nested
+    * decode.
     */
   val tblSqlComposite: Q = (s, d) => {
     val root = fresh("tbl_sql_composite_cat", d)
@@ -7107,8 +7112,7 @@ object Acid {
     * sidecar records the wide type, no data file moves — and reads
     * upcast everywhere: loadTable serves BIGINT immediately (before any
     * wide file lands), the V2 columnar reader wraps narrow files'
-    * vectors in a per-access widening view, the V2 row reader decodes
-    * at the file's width and widens in the row, and the library/V1
+    * vectors in a per-access widening view, and the library/V1
     * paths cast up to the declared width in readMerged. A post-ALTER
     * INSERT carries a value ABOVE int range (the reason users widen);
     * narrowing and cross-family changes refuse, as does widening a

@@ -80,8 +80,8 @@ class AcidCatalog extends StagingTableCatalog with FunctionCatalog {
       case None if lit.value() == null => () // DEFAULT NULL
       case None => throw new UnsupportedOperationException(
         s"$catName: unsupported DEFAULT type ${dt.sql} — integral, " +
-          "float/double, string, boolean, date and timestamp defaults " +
-          "are supported")
+          "float/double, decimal, string, binary, boolean, date and " +
+          "timestamp defaults are supported")
     }
   }
 
@@ -446,7 +446,7 @@ class AcidCatalog extends StagingTableCatalog with FunctionCatalog {
           // ADD COLUMN INTO A STRUCT (round-11 verdict #6): splice the
           // new field into the declared schema — metadata-only; readers
           // NULL-fill the leaf on files that predate it (the nested
-          // projection intersect in the V2 row reader / the library's
+          // projection intersect in the V2 columnar reader / the library's
           // widenToDeclared splice). Shares Acid.addColumnInto so SQL
           // ALTER and Acid.addColumn stay one implementation.
           if (add.defaultValue() != null)

@@ -5,20 +5,12 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset => StreamOffset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -244,85 +236,84 @@ class AcidCdfReaderFactory(required: StructType, keyCol: String)
   * row (`insert` → post-image, `delete` → pre-image) or two (`update` →
   * `update_preimage` + `update_postimage`), in that order. Append-mode
   * (`cdc = false`) reads the data file's own columns as `insert` rows.
-  * Projection follows the file's own field definitions (the Group-API
-  * repetition trap, AcidSql.scala) intersected with what the query needs:
-  * a data column the file predates reads as NULL, matching the
-  * mergeSchema snapshot.
+  * The file is decoded by the scan's columnar reader over exactly the
+  * physical columns the query needs, at their declared types
+  * (`change_type`, the key, `old_*`/`new_*`): a column the file predates
+  * reads as NULL, matching the mergeSchema snapshot, and each emitted
+  * value is one type-generic `InternalRow.getAccessor` read off the
+  * batch row. Spark
+  * projects every emitted row to an UnsafeRow before the next `next()`,
+  * so values may point into the current batch.
   */
 class AcidCdfPartitionReader(absPath: String, required: StructType,
     keyCol: String, version: Long, cdc: Boolean)
     extends PartitionReader[InternalRow] {
   import AcidCdf.{ChangeTypeCol, CommitVersionCol}
 
-  private val conf = new Configuration()
-  private val fileSchema: MessageType = {
-    val in = HadoopInputFile.fromPath(new Path(absPath), conf)
-    val fr = ParquetFileReader.open(in)
-    try fr.getFooter.getFileMetaData.getSchema
-    finally fr.close()
+  // the physical read: (name, type) once each, in first-use order
+  private val physical: StructType = {
+    val data = required.fields.toSeq
+      .filter(f => f.name != ChangeTypeCol && f.name != CommitVersionCol)
+    val cols =
+      if (!cdc) data
+      else StructField("change_type", StringType) +: data.flatMap { f =>
+        if (f.name == keyCol) Seq(f)
+        else Seq(f.copy(name = s"old_${f.name}"), f.copy(name = s"new_${f.name}"))
+      }
+    StructType(cols.map(_.copy(nullable = true)).distinctBy(_.name))
   }
-  private val fileFields: Set[String] =
-    fileSchema.getFields.asScala.map(_.getName).toSet
-
-  // required data columns (the CDF extras are synthesized, never read)
-  private val dataCols: Array[StructField] =
-    required.fields.filter(f => f.name != ChangeTypeCol && f.name != CommitVersionCol)
-
-  private val reader: ParquetReader[Group] = {
-    val wanted: Seq[String] =
-      if (!cdc) dataCols.map(_.name).toSeq
-      else ("change_type" +: dataCols.toSeq.flatMap { f =>
-        if (f.name == keyCol) Seq(keyCol)
-        else Seq(s"old_${f.name}", s"new_${f.name}")
-      }).distinct
-    val projected = wanted.filter(fileFields)
-      .map(n => fileSchema.getType(fileSchema.getFieldIndex(n)))
-    if (projected.nonEmpty)
-      conf.set(ReadSupport.PARQUET_READ_SCHEMA,
-        new MessageType("graft_acid_cdf", projected: _*).toString)
-    ParquetReader.builder(new GroupReadSupport(), new Path(absPath))
-      .withConf(conf).build()
+  // per required column, its physical ordinal on each side (-1 =
+  // synthesized: the change type or the commit version)
+  private def ordinals(side: String): Array[Int] = required.fields.map { f =>
+    f.name match {
+      case ChangeTypeCol | CommitVersionCol => -1
+      case n if !cdc || n == keyCol => physical.fieldIndex(n)
+      case n => physical.fieldIndex(s"${side}_$n")
+    }
   }
+  private val oldOrd = ordinals("old")
+  private val newOrd = ordinals("new")
+  // one type-generic, NULL-aware getter per physical column
+  private val access = physical.fields.map(f =>
+    InternalRow.getAccessor(f.dataType, nullable = true))
+
+  private val reader = new AcidSqlColumnarReader(absPath, physical)
+  private var batch: org.apache.spark.sql.vectorized.ColumnarBatch = _
+  private var rowIdx = 0
 
   // up to two emissions per source row, kept in arrival order
   private val pending = new java.util.ArrayDeque[InternalRow](2)
 
-  private def groupValue(g: Group, field: String, f: StructField): Any =
-    if (!fileFields(field) || g.getFieldRepetitionCount(field) == 0) null
-    else f.dataType match {
-      case LongType    => g.getLong(field, 0)
-      case IntegerType => g.getInteger(field, 0)
-      case DoubleType  => g.getDouble(field, 0)
-      case BooleanType => g.getBoolean(field, 0)
-      case StringType  => UTF8String.fromBytes(g.getBinary(field, 0).getBytes)
-      case _           => null
-    }
-
-  private def emit(g: Group, side: String, changeType: String): InternalRow = {
+  private def emit(row: InternalRow, ord: Array[Int], changeType: String)
+      : InternalRow = {
     val vals = new Array[Any](required.length)
-    required.fields.zipWithIndex.foreach { case (f, i) =>
-      vals(i) = f.name match {
-        case ChangeTypeCol   => UTF8String.fromString(changeType)
+    var i = 0
+    while (i < vals.length) {
+      vals(i) = required.fields(i).name match {
+        case ChangeTypeCol    => UTF8String.fromString(changeType)
         case CommitVersionCol => version
-        case n if !cdc       => groupValue(g, n, f)
-        case n if n == keyCol => groupValue(g, keyCol, f)
-        case n               => groupValue(g, s"${side}_$n", f)
+        case _                => access(ord(i))(row, ord(i))
       }
+      i += 1
     }
     new GenericInternalRow(vals)
   }
 
   override def next(): Boolean = {
     if (!pending.isEmpty) return true
-    val g = reader.read()
-    if (g == null) return false
-    if (!cdc) pending.add(emit(g, "new", "insert"))
-    else g.getString("change_type", 0) match {
-      case "insert" => pending.add(emit(g, "new", "insert"))
-      case "delete" => pending.add(emit(g, "old", "delete"))
+    while (batch == null || rowIdx >= batch.numRows()) {
+      if (!reader.next()) return false
+      batch = reader.get(); rowIdx = 0
+    }
+    val row = batch.getRow(rowIdx)
+    rowIdx += 1
+    if (!cdc) pending.add(emit(row, newOrd, "insert"))
+    else row.getUTF8String(0).toString match {
+      case "insert" => pending.add(emit(row, newOrd, "insert"))
+      case "delete" => pending.add(emit(row, oldOrd, "delete"))
       case "update" =>
-        pending.add(emit(g, "old", "update_preimage"))
-        pending.add(emit(g, "new", "update_postimage"))
+        pending.add(emit(row, oldOrd, "update_preimage"))
+        pending.add(emit(row, newOrd, "update_postimage"))
       case other => throw new IllegalStateException(
         s"graft-acid changes: unknown change_type '$other' in $absPath")
     }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.nio.file.{Files, Paths}
 import scala.util.Try
 
@@ -354,16 +354,32 @@ object Xml {
       bufI += n; pos += n
     }
     val recordDepth = path.size
-    val okStack = scala.collection.mutable.ArrayBuffer.from(seedOk)
-    // in-scope bindings per open depth, aligned with okStack
-    val nsStack = scala.collection.mutable.ArrayBuffer.from(seedNs)
-    def parentScope = if (nsStack.isEmpty) Map.empty[String, String] else nsStack.last
+    // per open element, outermost first: whether the path matches down to
+    // it, and its in-scope bindings; `open` elements are live, a pop only
+    // moves the index
+    var okStack = new Array[Boolean](math.max(16, 2 * seedOk.size))
+    var nsStack = new Array[Map[String, String]](okStack.length)
+    seedOk.copyToArray(okStack); seedNs.copyToArray(nsStack)
+    var open = seedOk.size
+    def push(ok: Boolean, ns: Map[String, String]): Unit = {
+      if (open == okStack.length) {
+        okStack = java.util.Arrays.copyOf(okStack, 2 * open)
+        nsStack = java.util.Arrays.copyOf(nsStack, 2 * open)
+      }
+      okStack(open) = ok; nsStack(open) = ns; open += 1
+    }
+    def parentScope = if (open == 0) Map.empty[String, String] else nsStack(open - 1)
+    // the open elements' scopes, outermost first, for `onRecordStart`
+    val openScopes = new collection.IndexedSeq[Map[String, String]] {
+      def length: Int = open
+      def apply(i: Int): Map[String, String] = nsStack(i)
+    }
     def malformed(off: Long, what: String): Nothing =
       throw new java.io.IOException(s"malformed XML in $file at byte $off: $what")
     // end of input: every element opened or seeded must have closed
     def atEnd(): Unit =
-      if (okStack.nonEmpty)
-        malformed(pos, s"end of input inside ${okStack.size} open element(s)")
+      if (open > 0)
+        malformed(pos, s"end of input inside $open open element(s)")
     val cap = new ByteBuf
     val tag = new ByteBuf
     var capturing = false
@@ -428,58 +444,54 @@ object Xml {
               if (to != null) { to.add('<'); to.add('?') }
               readUntil(PiEnd, to)
             case '/' =>
-              if (okStack.isEmpty) malformed(ltOff, "end tag with no open element")
+              if (open == 0) malformed(ltOff, "end tag with no open element")
               if (to != null) { to.add('<'); to.add('/') }
               readUntil(TagEnd, to)
-              if (capturing && okStack.size == captureDepth) {
+              if (capturing && open == captureDepth) {
                 onRecord(cap, recTagLen, recMissing); cap.reset()
                 capturing = false; captureDepth = -1
               }
-              okStack.remove(okStack.size - 1)
-              nsStack.remove(nsStack.size - 1)
-            case _ if okStack.size >= recordDepth =>
+              open -= 1
+            case _ if open >= recordDepth =>
               // deeper than a record start: no name, predicate or xmlns work
               if (to != null) { to.add('<'); to.add(b1) }
-              if (!readStartRest(to)) {
-                okStack += false
-                nsStack += parentScope
-              }
+              if (!readStartRest(to)) push(false, parentScope)
             case _ =>
               tag.reset(); tag.add('<'); tag.add(b1)
               val selfClosing = readStartRest(tag)
               val tagStr = tag.utf8
-              val depth = okStack.size + 1
+              val depth = open + 1
               val parentNs = parentScope
               val declared = nsDeclsOf(tagStr)
               val scope = if (declared.isEmpty) parentNs else parentNs ++ declared
               val ok = startTagOk(path, depth == 1 || okStack(depth - 2), depth, tagStr, scope)
               val startsRecord = captureDepth < 0 && depth == recordDepth && ok
-              if (startsRecord) onRecordStart(ltOff, nsStack)
-              okStack += ok
-              nsStack += scope
+              if (startsRecord) onRecordStart(ltOff, openScopes)
+              push(ok, scope)
               if (startsRecord) {
                 if (captureBytes) {
                   capturing = true; cap.reset()
-                  recMissing = parentNs.filterNot { case (p, _) => declared.contains(p) }
+                  recMissing =
+                    if (declared.isEmpty) parentNs
+                    else parentNs.filterNot { case (p, _) => declared.contains(p) }
                   recTagLen = tag.len
                   cap.add(tag.arr, 0, tag.len)
                 }
                 captureDepth = depth // suppresses nested same-path re-trigger
               } else if (capturing) cap.add(tag.arr, 0, tag.len)
               if (selfClosing) {
-                if (capturing && okStack.size == captureDepth) {
+                if (capturing && open == captureDepth) {
                   onRecord(cap, recTagLen, recMissing); cap.reset()
                   capturing = false; captureDepth = -1
                 }
-                if (!captureBytes && okStack.size == captureDepth) captureDepth = -1
-                okStack.remove(okStack.size - 1)
-                nsStack.remove(nsStack.size - 1)
+                if (!captureBytes && open == captureDepth) captureDepth = -1
+                open -= 1
               }
           }
           // planning scans' capture-end bookkeeping for non-self-closing
           // records is on the end-tag branch; mirror it when not
           // materializing bytes
-          if (!captureBytes && captureDepth > 0 && okStack.size < captureDepth)
+          if (!captureBytes && captureDepth > 0 && open < captureDepth)
             captureDepth = -1
         }
       }
@@ -577,6 +589,9 @@ object Xml {
 
   private val Terms =
     Map("comment" -> "->", "cdata" -> "]]>", "pi" -> "?>", "bang" -> ">")
+  // each terminator's bytes, encoded once (pass A matches them per byte)
+  private val TermBytes: Map[String, Array[Byte]] =
+    Terms.values.map(t => t -> t.getBytes(ISO_8859_1)).toMap
 
   /** Bound on a single start/end tag (incl. attributes) the CHUNKED
     * planner will reconstruct across a boundary. Without it, a WRONG
@@ -612,7 +627,7 @@ object Xml {
     val m0 = margin
 
     def findTermEnd(t: String, from: Int): Int = { // idx AFTER terminator, -1 if none
-      val tb = t.getBytes
+      val tb = TermBytes(t)
       var i = math.max(from, 0)
       while (i + tb.length <= n) {
         var j = 0
@@ -636,7 +651,7 @@ object Xml {
       }
       Left(if (q == '\'') "tag_sq" else if (q == '"') "tag_dq" else "tag")
     }
-    def raw(i0: Int, i1: Int) = new String(arr, i0, i1 - i0, "ISO-8859-1")
+    def raw(i0: Int, i1: Int) = new String(arr, i0, i1 - i0, ISO_8859_1)
 
     /** One sweep serving resume `i0` AND every `wanted` resume the sweep
       * reaches in plain-content state, via checkpoint deltas: at a wanted
@@ -654,7 +669,9 @@ object Xml {
       val opens = scala.collection.mutable.ArrayBuffer.empty[String]
       // fired checkpoints: (resume, popsAt, opensAt, minOpensSince)
       val cps = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, Int)]
-      var queue = wanted.sorted
+      // the wanted resumes ascending; `qi` indexes the next one not yet passed
+      val queue = wanted.sorted.toArray
+      var qi = 0
       val leftover = scala.collection.mutable.ListBuffer.empty[Int]
       var exit: LexExit = null
       def closeOne(): Unit = {
@@ -667,11 +684,11 @@ object Xml {
         }
       }
       while (exit == null) {
-        while (queue.nonEmpty && queue.head < i) {
-          leftover += queue.head; queue = queue.tail
+        while (qi < queue.length && queue(qi) < i) {
+          leftover += queue(qi); qi += 1
         }
-        while (queue.nonEmpty && queue.head == i) {
-          cps += ((i, pops, opens.size, opens.size)); queue = queue.tail
+        while (qi < queue.length && queue(qi) == i) {
+          cps += ((i, pops, opens.size, opens.size)); qi += 1
         }
         if (i >= endIdx) exit = LexExit("content", "", 0)
         else if ((arr(i) & 0xFF) != '<') i += 1
@@ -713,7 +730,7 @@ object Xml {
           }
         }
       }
-      leftover ++= queue
+      leftover ++= queue.iterator.drop(qi)
       val oE = opens.toList
       val fired = cps.map { case (r, p, o, m) =>
         r -> ((pops - p) + (o - m), oE.drop(m), exit)
@@ -808,7 +825,7 @@ object Xml {
     var kind = "content"; var pend = ""; var bodySeen = 0
     val stack = scala.collection.mutable.ListBuffer.empty[String]
     val out = scala.collection.mutable.ListBuffer.empty[PassB]
-    def utf8(iso: String) = new String(iso.getBytes("ISO-8859-1"), "UTF-8")
+    def utf8(iso: String) = new String(iso.getBytes(ISO_8859_1), UTF_8)
     def pop(): Unit = if (stack.nonEmpty) stack.remove(stack.size - 1): Unit
     def finishTag(sc: ChunkScan, k: String): Long = {
       val ts = sc.tagSkips(k)
@@ -838,7 +855,7 @@ object Xml {
           // classify `pend` ("<" or "<!") + a few peeked file bytes; the
           // pending search starts after the classification prefix, whose
           // length inside THIS chunk is prefixLen - pend.length
-          val bytes = pend.getBytes("ISO-8859-1") ++ peekBytes(file, cs, 4)
+          val bytes = pend.getBytes(ISO_8859_1) ++ peekBytes(file, cs, 4)
           val b1 = if (bytes.length > 1) bytes(1) & 0xFF else -1
           b1 match {
             case -1  => -1L // file ends mid-'<' — nothing left to scan

@@ -3,6 +3,8 @@ package org.apache.spark.sql.execution.datasources.parquet
 import org.apache.parquet.column.page.PageReadStore
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.schema.MessageType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Row-group- AND page-pruned initialization for Spark's vectorized
   * parquet reader (graft round-11 item #1; page tier round-14).
@@ -45,12 +47,39 @@ object GraftParquetBridge {
   }
 
   /** Initialize `r` over `fr`; after this, `initBatch` +
-    * `enableReturningBatches` proceed as with any other init path. */
+    * `enableReturningBatches` proceed as with any other init path.
+    *
+    * The field assignments are the 4-arg `initialize` overload's, with one
+    * difference: the Parquet → Spark conversion reads INT96 as TIMESTAMP,
+    * as Spark's own scan does by default (`int96AsTimestamp`). The
+    * overload hard-codes `false`, which refuses every INT96 column, and
+    * Spark's writer stores TIMESTAMP as INT96 unless told otherwise. The
+    * closing `initializeInternal` (the overload's second step, private)
+    * checks the requested columns against the file. */
   def initVectorized(r: VectorizedParquetRecordReader, fr: ParquetFileReader,
       fileSchema: MessageType, requested: MessageType): Unit = {
     fr.setRequestedSchema(requested)
-    r.initialize(fileSchema, requested, new RowGroups(fr),
-      Math.toIntExact(fr.getFilteredRecordCount()))
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.CASE_SENSITIVE,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG).foreach(e => conf.setBoolean(e.key, false))
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, true)
+    r.reader = new RowGroups(fr)
+    r.fileSchema = fileSchema
+    r.requestedSchema = requested
+    r.configuration = conf
+    r.parquetColumn = new ParquetToSparkSchemaConverter(conf)
+      .convertParquetColumn(requested, None)
+    r.sparkSchema = r.parquetColumn.sparkType.asInstanceOf[StructType]
+    r.sparkRequestedSchema = r.sparkSchema
+    r.totalRowCount = fr.getFilteredRecordCount()
+    initializeInternal.invoke(r): Unit
+  }
+
+  private lazy val initializeInternal = {
+    val m = classOf[VectorizedParquetRecordReader].getDeclaredMethod("initializeInternal")
+    m.setAccessible(true)
+    m
   }
 
   /** One committed file's Spark schema exactly as Spark's own mergeSchema

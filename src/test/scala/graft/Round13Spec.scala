@@ -503,29 +503,23 @@ class Round13Spec extends AnyFunSuite {
     assert(pages >= 8, s"want page granularity, got $pages pages")
     assert(filteredRows >= hi - lo + 1 && filteredRows * 2 < groupRows,
       s"page filter must keep a strict subset: $filteredRows of $groupRows")
-    // the production ROW reader (forced) returns exact results through
-    // the same filtered path
-    AcidSql.forceRowReads = true
-    try {
-      val got = spark.read.format("graft-acid-sql").load(dir)
-        .filter(col("k") >= lo && col("k") <= hi)
-        .agg(count(lit(1)), sum(col("v")), min(col("k")), max(col("k"))).head
-      assert(got.getLong(0) === hi - lo + 1)
-      assert(got.getLong(1) === (lo to hi).sum)
-      assert(got.getLong(2) === lo && got.getLong(3) === hi)
-    } finally AcidSql.forceRowReads = false
+    // the production V2 scan (columnar, page-filtered open) returns
+    // exact results through the same filtered path
+    val got = spark.read.format("graft-acid-sql").load(dir)
+      .filter(col("k") >= lo && col("k") <= hi)
+      .agg(count(lit(1)), sum(col("v")), min(col("k")), max(col("k"))).head
+    assert(got.getLong(0) === hi - lo + 1)
+    assert(got.getLong(1) === (lo to hi).sum)
+    assert(got.getLong(2) === lo && got.getLong(3) === hi)
     // DV bypass unchanged: positional deletes disable the record filter
     // (any page/group skipping would shift absolute ordinals) — results
-    // stay exact through the same forced row reader
+    // stay exact through the same scan
     Acid.deleteWherePositional(spark, dir, col("k") % 1000 === 7, None, "w"): Unit
-    AcidSql.forceRowReads = true
-    try {
-      val got = spark.read.format("graft-acid-sql").load(dir)
-        .filter(col("k") >= lo && col("k") <= hi)
-        .agg(count(lit(1)), sum(col("v"))).head
-      val dels = (lo to hi).count(_ % 1000 == 7)
-      assert(got.getLong(0) === hi - lo + 1 - dels)
-      assert(got.getLong(1) === (lo to hi).filter(_ % 1000 != 7).sum)
-    } finally AcidSql.forceRowReads = false
+    val gotDv = spark.read.format("graft-acid-sql").load(dir)
+      .filter(col("k") >= lo && col("k") <= hi)
+      .agg(count(lit(1)), sum(col("v"))).head
+    val dels = (lo to hi).count(_ % 1000 == 7)
+    assert(gotDv.getLong(0) === hi - lo + 1 - dels)
+    assert(gotDv.getLong(1) === (lo to hi).filter(_ % 1000 != 7).sum)
   }
 }

@@ -590,14 +590,12 @@ class Round17Spec extends AnyFunSuite {
     // cannot fabricate values into old snapshots
     assert(spark.sql(s"SELECT * FROM $cat.t VERSION AS OF $vPre")
       .columns.toSeq === Seq("k", "v"))
-    // row-reader parity: force row reads and re-check the fill
-    AcidSql.forceRowReads = true
-    try {
-      assert(spark.sql(s"SELECT count(*) FROM $cat.t " +
-        "WHERE tier = 'basic' AND score = 7").head.getLong(0) === 100L + 2L)
-      val rr = spark.sql(s"SELECT tier FROM $cat.t WHERE k = 2000").head
-      assert(rr.isNullAt(0))
-    } finally AcidSql.forceRowReads = false
+    // the fill against explicit values: 100 pre-ALTER rows plus the two
+    // defaulted inserts, and the explicit NULL row stays NULL
+    assert(spark.sql(s"SELECT count(*) FROM $cat.t " +
+      "WHERE tier = 'basic' AND score = 7").head.getLong(0) === 100L + 2L)
+    val rr = spark.sql(s"SELECT tier FROM $cat.t WHERE k = 2000").head
+    assert(rr.isNullAt(0))
     // DROP kills the default; a re-ADD without one serves NULL again
     spark.sql(s"ALTER TABLE $cat.t DROP COLUMN score")
     spark.sql(s"ALTER TABLE $cat.t ADD COLUMN score BIGINT")
